@@ -17,8 +17,10 @@ object Bench {
     val only = args.lift(0).map(_.split(',').toSeq)
     val names = SparkEntry.benchNames.filter(n => only.forall(_.exists(n.startsWith)))
     // warm every query's code path once at the smallest SF so the timed
-    // runs measure the operators, not JIT/codegen/classloading (same plan
-    // shapes → whole-stage-codegen cache hits at the target SF)
+    // runs measure the operators, not JIT/codegen/classloading. Same plan
+    // shapes give generated-code cache hits at the target SF only while
+    // the suite's classes fit the cache (Engine.CodegenCacheEntries); a
+    // class evicted since its warm-up is compiled again in the timed run
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, warmDir).count() catch { case _: Throwable => () }

@@ -22,8 +22,23 @@ import org.apache.spark.sql.SparkSession
   *    executor memory.
   *  - UTC session timezone: timestamp arithmetic must not depend on
   *    the cluster's locale.
+  *  - generated-code cache sized to the engine's working set
+  *    ([[CodegenCacheEntries]]): Spark's default keeps 100 classes, but
+  *    one maintained-store admission alone needs ~150, so an LRU that
+  *    small evicts every class before its next use and each admit
+  *    recompiles (Janino) and re-JITs its whole plan.
   */
 object Engine {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every engine session. The
+    * cache is JVM-global and sized once, when the first session
+    * compiles generated code, so test sessions use the same value.
+    * Measured distinct generated classes per op (local[4], 50-doc
+    * batches, 1800-doc stores): store init 34, `admitBatch` 153-168,
+    * band-index probe 16-19, takedown compaction 16-17. 1000 holds the
+    * whole store lifecycle several times over; each entry is one small
+    * compiled class. */
+  val CodegenCacheEntries = 1000
 
   /** Install engine extensions on an existing session (idempotent):
     * SQL-callable custom expressions and the top-k rewrite. */
@@ -55,6 +70,7 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       // checkpointed RDD files are deleted when their RDD is GC'd instead
       // of accumulating for the app lifetime (pairs with the reliable

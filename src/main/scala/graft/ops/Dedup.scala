@@ -536,6 +536,26 @@ object Dedup {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Top-level column names of the parquet store at `dir`, from ONE part
+    * file's footer read by the Spark driver — the same single-file layout
+    * `spark.read.parquet(dir).schema` infers, without its
+    * schema-inference job. Even an empty write leaves a footer. */
+  private[graft] def footerFieldNames(s: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val hconf = s.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val part = root.getFileSystem(hconf).listStatus(root).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalArgumentException(s"no parquet part file under $dir"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, hconf))
+    try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    finally reader.close()
+  }
+
   /** Exact overlap statistics for LSH candidate pairs — the shared
     * verification engine behind every exact similarity gate: computes
     * each candidate pair's true shingle-set intersection and sizes
@@ -1657,7 +1677,8 @@ object Dedup {
     * job's tasks back-fill the others' tails — at toy scale it
     * collapses the per-job floors, at 100 TB it fills the write tails.
     * Failures propagate: the first throwable is rethrown after all
-    * actions settle (no write is silently abandoned mid-flight). */
+    * actions settle (no write is silently abandoned mid-flight), with
+    * every later one attached as suppressed so no leg's error is lost. */
   private[graft] def inParallel(actions: (() => Unit)*): Unit = {
     if (actions.size <= 1) { actions.foreach(_()); return }
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -1666,7 +1687,11 @@ object Dedup {
       t.setDaemon(true); t.start(); t
     }
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** Writes a band-bucket DataFrame as the stored index table, bucketed

@@ -200,9 +200,9 @@ object Incremental {
     // reverse) must fail loudly HERE. A forced mismatched schema would
     // instead read NULL doc_id rows, turn the tombstone anti-joins into
     // no-ops, and then append mixed-layout rows — silent store
-    // corruption. The parquet footer is the source of truth (read
-    // without a forced schema; footers survive even an empty write).
-    val storeHasOwner = s.read.parquet(exDir).schema.fieldNames.contains("doc_id")
+    // corruption. The parquet footer is the source of truth (read by
+    // the Spark driver, no job; footers survive even an empty write).
+    val storeHasOwner = Dedup.footerFieldNames(s, exDir).contains("doc_id")
     require(storeHasOwner == owned,
       s"admitBatch(owned=$owned) against an exact store at $exDir with " +
         s"${if (storeHasOwner) "(doc_id, h)" else "(h)"} layout — " +

@@ -132,14 +132,25 @@ object ExternalPipeline {
         case e: Throwable => pipelineFailed = true; throw e
       }
 
-      // (3) yield every line of every *.txt output, Spark commits the write
+      // (3) yield every line of every *.txt output, Spark commits the write.
+      // Each file's reader closes when its lines run out; one abandoned
+      // mid-file (limit, task failure) closes at task completion.
       val txt = Option(outDir.toFile.listFiles())
         .getOrElse(Array.empty[File])
         .filter(f => f.isFile && f.getName.endsWith(".txt"))
         .sortBy(_.getName)
+      val readers = mutable.ArrayBuffer.empty[scala.io.BufferedSource]
+      if (tc != null) tc.addTaskCompletionListener[Unit] { _ => readers.foreach(_.close()) }
       txt.iterator.flatMap { f =>
         val name = f.getName
-        scala.io.Source.fromFile(f, "UTF-8").getLines().map(l => (name, l))
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        readers += src
+        val lines = src.getLines()
+        var open = true
+        new Iterator[(String, String)] {
+          def hasNext: Boolean = open && (lines.hasNext || { src.close(); open = false; false })
+          def next(): (String, String) = (name, lines.next())
+        }
       }
     }.toDF("file", "line")
   }
@@ -226,7 +237,15 @@ object ExternalPipeline {
       if (timeoutSec > 0) p.waitFor(timeoutSec, TimeUnit.SECONDS)
       else { p.waitFor(); true }
     if (!finished) {
+      // kill the whole tree: wrappers like the MCR run_*.sh scripts fork
+      // grandchildren that outlive their parent and keep the drained
+      // pipe, and so the log writer, open
+      p.descendants().forEach(d => d.destroyForcibly(): Unit)
       p.destroyForcibly()
+      // with every writer gone the drainer sees EOF and closes the log;
+      // the explicit close (a no-op then) frees it if a writer escaped
+      drainer.join(10000)
+      lw.close()
       throw new RuntimeException(s"Command '$cmd' timed out after ${timeoutSec}s")
     }
     drainer.join(10000)

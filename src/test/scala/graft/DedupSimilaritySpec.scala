@@ -179,4 +179,18 @@ class DedupSimilaritySpec extends SparkTestBase {
       .as[(Long, String)].collect().toMap
     assert(b == b2) // run-to-run determinism
   }
+
+  test("inParallel reports every failed leg: the first error is rethrown " +
+    "with the others attached as suppressed, after all legs settle") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[RuntimeException] {
+      Dedup.inParallel(
+        () => throw new RuntimeException("leg A failed"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalStateException("leg C failed"))
+    }
+    val msgs = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(msgs == Set("leg A failed", "leg C failed"))
+    assert(ran.get == 1, "the healthy leg did not run to completion")
+  }
 }

@@ -541,4 +541,29 @@ class IncrementalSpec extends SparkTestBase {
     assert(runs(0).size == 3, "three delta census rows expected")
     spark.catalog.clearCache()
   }
+
+  test("a steady-state admitBatch hits the generated-code cache: the " +
+    "second same-shape owned admit compiles a handful of classes instead " +
+    "of recompiling its ~150-class working set (a cache smaller than " +
+    "that thrashes on every batch)") {
+    import ops.Incremental
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val docs = smallUniverse()
+    val (idx, ex, sh) = Incremental.initOwnedStores(spark,
+      docs.filter(col("doc_id") % 11 =!= 5), "p02spec_codegen")
+    def compilesOfAdmit(k: Long): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (row, _) = Incremental.admitBatch(spark,
+        docs.filter(col("doc_id") % 11 === 5 && col("doc_id") % 3 === lit(k)),
+        "delta", k, idx, ex, sh, owned = true)
+      assert(row.collect()(0).getAs[Long]("n_arrived") > 0)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compilesOfAdmit(0)
+    val second = compilesOfAdmit(1)
+    assert(second <= 10,
+      s"second admit compiled $second classes (first: $first): the " +
+        "generated-code cache is smaller than one admit's working set")
+    spark.catalog.clearCache()
+  }
 }

@@ -249,4 +249,58 @@ class PipeSpec extends SparkTestBase {
     assert(out.length == 25)
     assert(out.count(_._2 == "h") == 5)
   }
+
+  test("the pipe closes every output reader: no file descriptor into the " +
+    "job's staging dir is still open after a multi-file job") {
+    // each partition's pipeline writes 20 *.txt files
+    writeScript(binDir, "run_many.sh",
+      """for i in $(seq 1 20); do cp "$2" "out_$i.txt"; done""")
+    val cfg = PipeConfig.parse(configJson(
+      """{"command" : "run_many.sh %MCR_ROOT% %INPUT_FILE%"}"""))
+    val ds = spark.createDataset((1 to 40).map(i => s"row$i")).repartition(4)
+    // the /proc/self/fd entries pointing into this job's staging dir; an
+    // unclosed reader keeps its (deleted) output file listed here until a
+    // GC happens to finalize it, so the count is taken right after the job
+    def openIntoStage(): Seq[String] =
+      new java.io.File("/proc/self/fd").listFiles().toSeq.flatMap { f =>
+        try Some(Files.readSymbolicLink(f.toPath).toString)
+        catch { case _: java.io.IOException => None }
+      }.filter(_.startsWith(cfg.globals.stageDir))
+    assert(openIntoStage().isEmpty)
+    val n = ExternalPipeline.run(ds, None, cfg.algorithm("CRANKER"), cfg.globals)
+      .collect().length
+    val leaked = openIntoStage()
+    assert(n == 20 * 40)
+    // 80 output files were read
+    assert(leaked.isEmpty, s"${leaked.size} pipe output files still open: ${leaked.take(3)}")
+  }
+
+  test("timeout kills the command's whole process tree, not just the " +
+    "direct child") {
+    val pidFile = Files.createTempDirectory("pipe-tree").resolve("grandchild.pid")
+    // the shape of the MCR run_*.sh wrappers: the command forks a
+    // long-running grandchild and waits on it
+    writeScript(binDir, "run_forks.sh",
+      s"""sleep 60 &
+         |echo $$! > "$pidFile"
+         |wait""".stripMargin)
+    val cfg = PipeConfig.parse(configJson(
+      """{"command" : "run_forks.sh %MCR_ROOT% %INPUT_FILE%"}"""))
+    val t0 = System.nanoTime()
+    val e = intercept[SparkException] {
+      ExternalPipeline.run(spark.createDataset(Seq("x")).repartition(1), None,
+        cfg.algorithm("CRANKER"), cfg.globals, timeoutSec = 1).collect()
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the timed-out task did not end promptly")
+    assert(e.getMessage.contains("timed out") ||
+      Option(e.getCause).exists(_.getMessage.contains("timed out")))
+    val pid = Files.readString(pidFile).trim.toLong
+    // alive = neither gone nor a killed zombie awaiting its reaper
+    def alive: Boolean =
+      try !Files.readString(Paths.get(s"/proc/$pid/stat")).split("\\) ")(1).startsWith("Z")
+      catch { case _: java.io.IOException => false }
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (alive && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!alive, s"grandchild $pid survived the timeout kill")
+  }
 }

@@ -14,6 +14,9 @@ trait SparkTestBase extends AnyFunSuite {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // same JVM-global codegen cache size as the engine, whichever
+      // session initializes it first
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
