@@ -55,7 +55,7 @@ object StoreMaintainMain {
       // re-APPLY discipline: each attempt re-reads the current
       // generation (possibly the rival's fresh layout), registers it
       // in THIS metastore, and re-runs the compaction against it at
-      // the RESOLVED bucket spec
+      // its stored bucket spec
       attempt += 1
       val h = Incremental.PortableHandle.decode(cur.head)
       val cells = cur(1).toInt
@@ -64,8 +64,8 @@ object StoreMaintainMain {
         .filter(col("cid") % 7 === 3 && col("cid") >= 16)
         .select(col("cid").as("vec_id"))
       val name = s"graft_xmaint_c${attempt}_" + Scratch.nameTag().take(16)
-      val newTable = Similarity.compactIvfIndexAt(spark, h.name, tomb,
-        s"$workDir/child_gen$attempt", name, nBuckets = math.max(cells, 8))
+      val newTable = Similarity.compactIvfIndex(spark, h.name, tomb, "xmaint",
+        at = Some((name, s"$workDir/child_gen$attempt")))
       Seq(Incremental.exportHandle(spark, newTable).encoded, cells.toString)
     }
     println(s"STOREMAINT_OK v$v attempts=$attempt")

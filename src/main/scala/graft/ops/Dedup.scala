@@ -1607,66 +1607,6 @@ object Dedup {
     * concat is collision-free). */
   private def bandKey: Column = concat_ws(":", col("band"), col("band_key"))
 
-  /** Cluster a store write by its bucket key before the bucketed write.
-    * Spark's bucketed writer opens one file per (task, bucket-present-
-    * in-task): an N-task input fans out up to N × nBuckets files —
-    * measured 1026 files for a ~1 MB posting store at sf0.1, and at
-    * 100 TB the same shape is (10k tasks × buckets) of tiny files that
-    * every probe must list and open (guide §6: compact on write). A
-    * repartition on the bucket key is the writer-side exchange that
-    * makes each task hold exactly one bucket → exactly nBuckets files
-    * per write. Parallelism is not lost at scale: the bucket count IS
-    * the corpus-sized scale lever here (d64/d73 migrations grow it with
-    * the data, [[scaleBuckets]] sizes first writes from the input), so
-    * write parallelism grows with the layout. */
-  private[graft] def clusterForBuckets(df: DataFrame, nBuckets: Int,
-      key: String): DataFrame =
-    df.repartition(nBuckets, col(key))
-
-  /** Bucket count of an existing bucketed table, resolved from its
-    * catalog metadata — zero jobs, zero scans. Maintenance writers
-    * (append/compact) must match the STORED generation's spec exactly
-    * (Spark fails a mismatched bucketBy loudly), so they resolve it
-    * here instead of assuming the seed count: after a d64/d73-style
-    * migration grew the layout, appends and compactions ride the grown
-    * count automatically (r14 verdict: the fixed-8 maintenance sites
-    * capped write parallelism at 8 tasks forever). */
-  private[graft] def bucketCountOf(s: org.apache.spark.sql.SparkSession,
-      table: String): Int =
-    s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table is not a bucketed store — no bucket spec to resolve"))
-
-  /** Scale-adaptive bucket count for a store's FIRST write: the d73
-    * 8·2^k ladder over the writer input's SOURCE row count, read from
-    * the parquet footers on the driver ([[footerRowCount]] — pure
-    * metadata, zero Spark jobs). Under `clusterForBuckets` each write
-    * task materializes and sorts one whole bucket, so a fixed seed
-    * count caps write parallelism AND per-task memory at corpus scale
-    * (guide §2.5/§5: the 100 TB posting store would be 8 spill-heavy
-    * sort tasks); the ladder keeps per-bucket source volume bounded by
-    * `graft.store.rowsPerBucket` (default 16384 — sized so every
-    * fixture SF keeps the seed-8 layout, bench-comparable, while the
-    * 100× scale probes derive a grown count; a deployment sets the
-    * conf to its executor scan budget in rows). Bounded at 1024 like
-    * the d73 ladder; a non-parquet input (in-memory fixture frames)
-    * falls back to the seed count. Bucket count is PHYSICAL layout
-    * only — probe results are invariant (hash-partitioned join/probe
-    * plans adapt), which is what makes this a safe derivation. */
-  private[graft] def scaleBuckets(df: DataFrame, seed: Int = 8): Int = {
-    val budget = df.sparkSession.conf
-      .getOption("graft.store.rowsPerBucket").map(_.toLong).getOrElse(16384L)
-    footerRowCount(df) match {
-      case Some(rows) =>
-        var b = seed
-        while (b < 1024 && rows > budget * b) b *= 2
-        b
-      case None => seed
-    }
-  }
-
   /** Run independent store-write actions CONCURRENTLY on the session's
     * FIFO scheduler (guide §2.6: overlap independent jobs). The
     * lifecycle operators issue several writes that share no data
@@ -1694,115 +1634,65 @@ object Dedup {
     }
   }
 
-  /** Writes a band-bucket DataFrame as the stored index table, bucketed
-    * on the probe key. Paid once per corpus build; maintained at ingest
-    * in production (d17 sketch merge). Bucket count is scale-derived
-    * from the source ([[scaleBuckets]]); every fixture SF lands the
-    * seed-8 layout. */
+  /** Writes a band-bucket DataFrame as the stored index table `table`,
+    * bucketed on the probe key (layout: [[BucketedStore]]). Paid once
+    * per corpus build; maintained at ingest by [[appendBandIndex]].
+    * The bucket count is scale-derived from the source unless given
+    * (d64/d65/s42 pin their generation-1 count at 8). */
   def writeBandIndex(s: org.apache.spark.sql.SparkSession,
-      corpusBuckets: DataFrame, table: String): Unit =
-    writeBandIndexN(s, corpusBuckets, table, scaleBuckets(corpusBuckets))
-
-  /** Band-index write at an EXPLICIT bucket count. The count is
-    * GENERATION STATE (d64 publishes it in the catalog next to the
-    * table handle): a maintenance append must match the stored table's
-    * spec exactly — Spark refuses a mismatched bucketBy, the loud guard
-    * RoundTwelveSpec drills — so writers resolve the spec, never assume
-    * it. 8 suits the fixture; a corpus that grew 100× migrates to a
-    * larger count with [[migrateBandIndex]] instead of living with
-    * oversized buckets. */
-  def writeBandIndexN(s: org.apache.spark.sql.SparkSession,
-      corpusBuckets: DataFrame, table: String, nBuckets: Int): Unit = {
-    val dir = graft.Scratch.dir(s"graft_$table")
-    clusterForBuckets(corpusBuckets.select(bandKey.as("bk"), col("id")),
-        nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(table)
-  }
+      corpusBuckets: DataFrame, table: String,
+      nBuckets: Option[Int] = None): Unit =
+    BucketedStore.write(bandRows(corpusBuckets), "bk",
+      nBuckets.getOrElse(BucketedStore.scaleBuckets(corpusBuckets)),
+      table, bandPath(table)): Unit
 
   /** Appends an ingested batch's band keys to an EXISTING stored index
-    * table — the maintenance write production runs at ingest instead of
-    * rebuilding the corpus index. Spark's bucketed append writes the new
-    * rows as additional files of the SAME bucket spec (hash(bk) % 8), so
-    * the layout invariant the exchange-free probe relies on survives the
-    * update; d54's spec proves probe-after-append byte-identical to
-    * probe-after-rebuild. */
+    * — the maintenance write production runs at ingest instead of
+    * rebuilding the corpus index. d54's spec proves probe-after-append
+    * byte-identical to probe-after-rebuild. */
   def appendBandIndex(s: org.apache.spark.sql.SparkSession,
       batchBuckets: DataFrame, table: String): Unit =
-    appendBandIndexN(s, batchBuckets, table, bucketCountOf(s, table))
-
-  /** Bucketed append at an EXPLICIT (catalog-resolved) bucket count —
-    * the maintenance write after a [[migrateBandIndex]] generation
-    * swap. A count that disagrees with the stored table's spec fails
-    * loudly in Spark's bucket validation (drilled), which is exactly
-    * why d64 carries the spec in the catalog. */
-  def appendBandIndexN(s: org.apache.spark.sql.SparkSession,
-      batchBuckets: DataFrame, table: String, nBuckets: Int): Unit = {
-    clusterForBuckets(batchBuckets.select(bandKey.as("bk"), col("id")),
-        nBuckets, "bk")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .saveAsTable(table)
-    // Inside foreachBatch the write commits through the cloned micro-
-    // batch session; refresh through the CALLER's session as well so its
-    // readers list the appended files (see appendIvfIndex — the staleness
-    // was measured on the vector twin of this helper).
-    s.catalog.refreshTable(table)
-  }
+    BucketedStore.append(s, bandRows(batchBuckets), table)
 
   /** d64 — RE-BUCKET MIGRATION: rewrite the stored band index into a
     * new generation at a DIFFERENT bucket count. Bucket counts are
     * sized to the corpus (per-bucket data must fit an executor's scan
     * budget); a corpus that grew 100× since the index was laid out
     * needs more buckets, and at 100 TB that migration must be an online
-    * generation swap, not downtime. Content-preserving by contract
-    * (crash-retry residue collapsed by the distinct — a migration
-    * doubles as a compaction); the caller publishes (newTable,
-    * newCount) atomically so probes and maintenance writers resolve the
-    * NEW spec together. */
+    * generation swap, not downtime. Content-preserving, and a
+    * compaction too (the rewrite's distinct); the caller publishes
+    * (newTable, newCount) atomically so probes and maintenance writers
+    * resolve the NEW spec together. */
   def migrateBandIndex(s: org.apache.spark.sql.SparkSession,
-      table: String, nBuckets: Int, tag: String): String = {
-    val newTable = s"graft_band_index_${tag}_" +
-      graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    clusterForBuckets(s.table(table)
-        .select(col("bk"), col("id")).distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
-  }
+      table: String, nBuckets: Int, tag: String): String =
+    BucketedStore.rewrite(s, table, bandLocation(tag), Some(nBuckets))(
+      _.select(col("bk"), col("id")))
 
   /** Rewrite a stored band index minus tombstoned ids into a NEW
     * generation table — the d57 reclamation pass as a standalone helper
     * (shared by the document-store trio compaction and the media
-    * fingerprint store m11). Same bucketBy(8, bk) spec, so the
-    * exchange-free probe layout survives the generation swap; new-table
-    * discipline, so a crash mid-compaction leaves the old index
-    * untouched. The tombstone frame (column `id`) broadcasts; duplicate
-    * crash-residue rows collapse under the distinct. Returns the new
-    * table name for a catalog publish. */
+    * fingerprint store m11). The tombstone frame (column `id`)
+    * broadcasts. Returns the new table name for a catalog publish. */
   def compactBandIndex(s: org.apache.spark.sql.SparkSession,
       table: String, tomb: DataFrame, tag: String): String =
-    compactBandIndexN(s, table, tomb, tag, nBuckets = bucketCountOf(s, table))
+    BucketedStore.rewrite(s, table, bandLocation(tag))(
+      _.join(broadcast(tomb.select(col("id"))), Seq("id"), "left_anti")
+        .select(col("bk"), col("id")))
 
-  /** Compaction at an EXPLICIT (catalog-resolved) bucket count — a
-    * compaction publisher racing a d64 migration (s42) must rewrite at
-    * the CURRENT generation's spec, not assume 8. */
-  def compactBandIndexN(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String, nBuckets: Int): String = {
-    val newTable = s"graft_band_index_${tag}_" +
-      graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("bk"), col("id")).distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
+  /** A band generation's files live in a scratch dir named after its
+    * table (`graft_<table>…/band_index`), where outside readers such as
+    * the store benchmark's file census find them. */
+  private def bandPath(table: String): String =
+    s"${graft.Scratch.dir(s"graft_$table")}/band_index"
+
+  private def bandLocation(tag: String): (String, String) = {
+    val table = s"graft_band_index_${tag}_" + graft.Scratch.nameTag()
+    (table, bandPath(table))
   }
+
+  /** Stored band-index rows of an LSH bucket frame: (bk, id). */
+  private def bandRows(buckets: DataFrame): DataFrame =
+    buckets.select(bandKey.as("bk"), col("id"))
 
   /** Probes a stored band index with (small) new-batch buckets: the index
     * side reads its bucketed layout with no exchange. Returns candidate
@@ -3808,7 +3698,7 @@ object Dedup {
     val isWave2 = col("id") % 7 === 5
     val t1 = "graft_band_mig_" +
       graft.Scratch.nameTag()
-    writeBandIndexN(s, buckets.filter(!isWave1 && !isWave2), t1, 8)
+    writeBandIndex(s, buckets.filter(!isWave1 && !isWave2), t1, Some(8))
     val cat = graft.Scratch.dir("graft_d64_cat") + "/store.catalog"
     graft.ops.Incremental.publishCatalog(cat, Seq(t1, "8"))
 
@@ -3838,13 +3728,13 @@ object Dedup {
     // the pre-phase pipeline as its own checkpoint job (guide §2.6).
     val pre = probePhase("pre")
     // the online migration: resolve → rewrite at 32 buckets → ONE atomic
-    // publish of (handle, spec); maintenance then appends at the
-    // RESOLVED spec — the catalog, not convention, keeps writers correct
+    // publish of (handle, spec); maintenance then appends to the
+    // resolved handle at its stored 32-bucket spec
     val cur = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
     val t2 = migrateBandIndex(s, cur(0), nBuckets = 32, "d64")
     graft.ops.Incremental.publishCatalog(cat, Seq(t2, "32"))
     val post = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
-    appendBandIndexN(s, buckets.filter(isWave1), post(0), post(1).toInt)
+    appendBandIndex(s, buckets.filter(isWave1), post(0))
     pre.unionByName(probePhase("post_migrate"))
       .orderBy("phase", "new_doc_id")
   }
@@ -3917,7 +3807,7 @@ object Dedup {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val t1 = "graft_band_grw_" +
       graft.Scratch.nameTag()
-    writeBandIndexN(s, buckets, t1, 8)
+    writeBandIndex(s, buckets, t1, Some(8))
     val cat = graft.Scratch.dir("graft_d65_cat") + "/store.catalog"
     graft.ops.Incremental.publishCatalog(cat, Seq(t1, "8"))
     d65Catalog = cat
@@ -4223,22 +4113,11 @@ object Dedup {
     * ingested batch's band keys — the ingest update under Iceberg-style
     * immutable-generation discipline (d69's publisher A): the current
     * generation's files are never touched, so a lost CAS race abandons a
-    * table, never corrupts one. Same bucket spec as the SOURCE
-    * generation (catalog-resolved, not assumed 8) → the exchange-free
-    * probe layout survives the swap at any migrated count. */
+    * table, never corrupts one. */
   def cloneBandIndexWithBatch(s: org.apache.spark.sql.SparkSession,
-      table: String, batchBuckets: DataFrame, tag: String): String = {
-    val newTable = s"graft_band_index_${tag}_" + graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    val nBuckets = bucketCountOf(s, table)
-    clusterForBuckets(s.table(table)
-        .unionByName(batchBuckets.select(bandKey.as("bk"), col("id")))
-        .distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
-  }
+      table: String, batchBuckets: DataFrame, tag: String): String =
+    BucketedStore.rewrite(s, table, bandLocation(tag))(
+      _.unionByName(bandRows(batchBuckets)))
 
   /** d69 — OPTIMISTIC-CONCURRENCY CATALOG COMMIT: the multi-writer story
     * for every maintained store. A real deployment has ingest,

@@ -737,13 +737,13 @@ object Incremental {
     * not exist for parquet, and a new generation means a crash mid-
     * compaction leaves the old stores untouched (re-run, don't repair).
     *
-    * Scale shape: the band index rewrite reuses the SAME bucketBy(8, bk)
-    * spec, so the exchange-free probe layout survives the generation
-    * swap (spec re-asserts it on the compacted table). The tombstone set
-    * broadcasts (removals are rare vs the corpus); each store rewrite is
-    * one scan → anti-join → write, embarrassingly parallel — the
-    * cheapest shape a full rewrite can have, and it runs rarely and
-    * offline, never on the ingest path. */
+    * Scale shape: the band index rewrite keeps the stored bucket spec
+    * ([[BucketedStore.rewrite]]), so the exchange-free probe layout
+    * survives the generation swap (spec re-asserts it on the compacted
+    * table). The tombstone set broadcasts (removals are rare vs the
+    * corpus); each store rewrite is one scan → anti-join → write,
+    * embarrassingly parallel — the cheapest shape a full rewrite can
+    * have, and it runs rarely and offline, never on the ingest path. */
   def compactStores(s: SparkSession, idxTable: String,
       exDir: String, shDir: String, tomb: DataFrame,
       tag: String): (String, String, String) = {

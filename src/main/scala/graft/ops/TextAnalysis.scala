@@ -2410,56 +2410,29 @@ object TextAnalysis {
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
       .select("term", "doc_id", "tf", "dl")
 
-  /** First write of a posting-store generation. Bucket count is scale-
-    * derived from the SOURCE corpus ([[Dedup.scaleBuckets]] — the r14
-    * verdict's fix for the fixed-8 cap: under clusterForBuckets a write
-    * is nBuckets sort tasks each holding a whole bucket, so the count
-    * must ride the corpus); every fixture SF keeps the seed-8 layout,
-    * the 100× probes derive a grown count. */
+  /** First write of a posting-store generation, bucketed on `term`
+    * (layout: [[BucketedStore]]). The bucket count is scale-derived from
+    * the postings' SOURCE corpus ([[BucketedStore.scaleBuckets]]): every
+    * fixture SF keeps the seed-8 layout, the 100× probes derive a grown
+    * count. */
   private[graft] def writePostingStore(s: org.apache.spark.sql.SparkSession,
       postings: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val table = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    val nBuckets = Dedup.scaleBuckets(postings)
-    Dedup.clusterForBuckets(postings, nBuckets, "term")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term")
-      .option("path", s"$dir/postings").saveAsTable(table)
-    table
+    val (table, path) = BucketedStore.location(tag, "postings")
+    BucketedStore.write(postings, "term", BucketedStore.scaleBuckets(postings),
+      table, path)
   }
 
-  /** Maintenance append at the STORED generation's bucket spec
-    * (catalog-resolved — a mismatched bucketBy fails loudly in Spark's
-    * validation, and assuming 8 would wedge appends after any bucket-
-    * count migration). */
   private[graft] def appendPostingStore(s: org.apache.spark.sql.SparkSession,
-      postings: DataFrame, table: String): Unit = {
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(postings, nBuckets, "term")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term").saveAsTable(table)
-    s.catalog.refreshTable(table) // the s34 staleness fix
-  }
+      postings: DataFrame, table: String): Unit =
+    BucketedStore.append(s, postings, table)
 
-  /** New-generation rewrite minus tombstoned docs, retry residue
-    * collapsed (the d57 contract on postings). Rewrites at the CURRENT
-    * generation's bucket spec (resolved, not assumed 8 — the s42
-    * discipline: a compaction racing a migration must honor the
-    * winner's layout). */
+  /** New-generation rewrite minus tombstoned docs (the d57 contract on
+    * postings). */
   private[graft] def compactPostingStore(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val newTable = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .distinct(), nBuckets, "term")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term")
-      .option("path", s"$dir/postings").saveAsTable(newTable)
-    newTable
-  }
+      table: String, tomb: DataFrame, tag: String): String =
+    BucketedStore.rewrite(s, table, BucketedStore.location(tag, "postings"))(
+      _.join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+        .select(col("term"), col("doc_id"), col("tf"), col("dl")))
 
   /** Append one batch's df/stats deltas under a batch-keyed path
     * (overwrite → a retried batch replaces its own deltas, never

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Q, Tables}
+import graft.ops.BucketedStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -130,16 +131,12 @@ object SourceQueries {
     // ONE scale-derived count shared by both sides (the co-located join
     // requires matching bucket specs), sized from the LARGER side's
     // footers — the r14 verdict's fixed-8 write-parallelism fix
-    val n = graft.ops.Dedup.scaleBuckets(Tables.lineitem(s, d))
-    graft.ops.Dedup.clusterForBuckets(Tables.orders(s, d), n, "o_orderkey")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(n, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$dir/orders_b").saveAsTable("graft_orders_bucketed")
-    graft.ops.Dedup.clusterForBuckets(
-        Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"), n, "l_orderkey")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(n, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$dir/lineitem_b").saveAsTable("graft_lineitem_bucketed")
+    val n = BucketedStore.scaleBuckets(Tables.lineitem(s, d))
+    BucketedStore.write(Tables.orders(s, d), "o_orderkey", n,
+      "graft_orders_bucketed", s"$dir/orders_b")
+    BucketedStore.write(
+      Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"), "l_orderkey", n,
+      "graft_lineitem_bucketed", s"$dir/lineitem_b")
     s.table("graft_orders_bucketed")
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("date"))
       .join(s.table("graft_lineitem_bucketed"), col("l_orderkey") === col("o_orderkey"))

@@ -3492,8 +3492,8 @@ object StreamingQueries {
     * re-reads and RE-APPLIES against the winner's generation, and
     * commits v3. The operations commute on content (compact∘migrate ≡
     * migrate∘compact), and the compaction publisher rewrites at the
-    * RESOLVED bucket spec rather than assuming 8
-    * ([[graft.ops.Dedup.compactBandIndexN]]), so the final state —
+    * resolved generation's STORED bucket spec
+    * ([[graft.ops.Dedup.compactBandIndex]]), so the final state —
     * (base ∪ wave-0 appends) − tombstones at 32 buckets, version 3 —
     * is deterministic REGARDLESS of race order, which is what makes a
     * genuinely nondeterministic thread race oracle-checkable: wave 1
@@ -3599,7 +3599,7 @@ object StreamingQueries {
     val (buckets, shingles) = Dedup.lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val t1 = "graft_band_s42_" + graft.Scratch.nameTag()
-    Dedup.writeBandIndexN(s, buckets.filter(col("id") % 7 =!= 5), t1, 8)
+    Dedup.writeBandIndex(s, buckets.filter(col("id") % 7 =!= 5), t1, Some(8))
     val cat = graft.Scratch.dir("graft_s42_cat") + "/index.catalog"
     Incremental.publishCatalogVersioned(cat, Seq(t1, "8"))
     s42Catalog = cat
@@ -3630,7 +3630,7 @@ object StreamingQueries {
               s"s42 wave $b saw a second non-empty micro-batch ($batchId): " +
                 "one-file-one-batch broken")
             // resolve (handle, bucket spec) atomically; probe-then-append
-            // at the RESOLVED spec — the d64 writer discipline
+            // to the resolved handle at its stored spec
             val lines = Incremental.resolveCatalog(cat, expect = 2)
             val gen = Incremental.currentCatalogVersion(cat)
             val (bBuckets, _) = Dedup.lshBucketsAndShingles(
@@ -3654,7 +3654,7 @@ object StreamingQueries {
                   .otherwise("unique").as("verdict"),
                 col("best_match"))
               .write.mode("append").parquet(outDir)
-            Dedup.appendBandIndexN(s, bB, lines.head, lines(1).toInt)
+            Dedup.appendBandIndex(s, bB, lines.head)
           }
         }
         .trigger(Trigger.AvailableNow())
@@ -3677,7 +3677,7 @@ object StreamingQueries {
           Seq(Dedup.migrateBandIndex(s, cur.head, 32, "s42m"), "32")
         }
         val compact = publisher { (_, cur) =>
-          Seq(Dedup.compactBandIndexN(s, cur.head, tomb, "s42c", cur(1).toInt),
+          Seq(Dedup.compactBandIndex(s, cur.head, tomb, "s42c"),
             cur(1))
         }
         migrate.start(); compact.start(); start.countDown()
@@ -3885,10 +3885,9 @@ object StreamingQueries {
               .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
                 col("cid"), col("rank"), col("cosine"))
               .write.mode("append").parquet(outDir)
-            // append at the RESOLVED bucket count: a post-migration
+            // append to the resolved generation: a post-migration
             // append follows the migrated physical layout
-            Similarity.appendIvfIndex(s, bAssign, h.head,
-              nBuckets = math.max(cells, 8))
+            Similarity.appendIvfIndex(s, bAssign, h.head)
           }
         }
         .trigger(Trigger.AvailableNow())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** 100×-decade datapoint for the POSTING-STORE lifecycle (r14 verdict
   * tasks 1/8): with bucket counts scale-derived at first write
-  * (`Dedup.scaleBuckets`) instead of fixed 8, the store write must no
+  * (`BucketedStore.scaleBuckets`) instead of fixed 8, the store write must no
   * longer be 8-task-bound at the 100× decade. Prices:
   *
   *   - the writePostingStore leg alone (derived bucket count, wall,
@@ -52,7 +52,7 @@ object PostingScaleProbe {
         Tables.documents(spark, sf).select("doc_id", "text"))
       var table: String = null
       val w = time { table = TextAnalysis.writePostingStore(spark, postings, tag) }
-      val n = Dedup.bucketCountOf(spark, table)
+      val n = ops.BucketedStore.bucketCountOf(spark, table)
       val files = dataFiles(tableDir(table))
       f""""write_sec":$w%.2f,"buckets":$n,"data_files":$files"""
     }

@@ -160,9 +160,9 @@ class RoundFifteenSpec extends SparkTestBase {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
     val work = Scratch.dir("graft_xmaint")
-    val gen1 = Similarity.writeIvfIndexAt(spark,
-      Dedup.reuse(Similarity.ivfAssign(e)), s"$work/gen1",
-      "graft_xmaint_gen1_" + Scratch.nameTag().take(16), nBuckets = 8)
+    val gen1 = Similarity.writeIvfIndex(spark,
+      Dedup.reuse(Similarity.ivfAssign(e)), "xmaint_gen1", nBuckets = 8,
+      at = Some(("graft_xmaint_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
     Incremental.publishCatalogVersioned(cat,
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))
@@ -188,8 +188,8 @@ class RoundFifteenSpec extends SparkTestBase {
       val h = Incremental.PortableHandle.decode(cur.head)
       Incremental.registerHandle(spark, h): Unit
       val name = s"graft_xmaint_p${attempt}_" + Scratch.nameTag().take(16)
-      val t = Similarity.migrateIvfIndexCellsAt(spark, h.name, 16,
-        s"$work/parent_gen$attempt", name)
+      val t = Similarity.migrateIvfIndexCells(spark, h.name, 16, "xmaint",
+        at = Some((name, s"$work/parent_gen$attempt")))
       Seq(Incremental.exportHandle(spark, t).encoded, "16")
     }: Unit
     val out = new String(child.getInputStream.readAllBytes())
@@ -231,9 +231,9 @@ class RoundFifteenSpec extends SparkTestBase {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
     val work = Scratch.dir("graft_orphdir")
-    val gen1 = Similarity.writeIvfIndexAt(spark,
-      Dedup.reuse(Similarity.ivfAssign(e)), s"$work/gen1",
-      "graft_orphdir_gen1_" + Scratch.nameTag().take(16), nBuckets = 8)
+    val gen1 = Similarity.writeIvfIndex(spark,
+      Dedup.reuse(Similarity.ivfAssign(e)), "orphdir_gen1", nBuckets = 8,
+      at = Some(("graft_orphdir_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
     Incremental.publishCatalogVersioned(cat,
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))
@@ -333,9 +333,9 @@ class RoundFifteenSpec extends SparkTestBase {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
     val work = Scratch.dir("graft_xstream")
-    val gen1 = Similarity.writeIvfIndexAt(spark,
-      Dedup.reuse(Similarity.ivfAssign(e)), s"$work/gen1",
-      "graft_xstream_gen1_" + Scratch.nameTag().take(16), nBuckets = 8)
+    val gen1 = Similarity.writeIvfIndex(spark,
+      Dedup.reuse(Similarity.ivfAssign(e)), "xstream_gen1", nBuckets = 8,
+      at = Some(("graft_xstream_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
     Incremental.publishCatalogVersioned(cat,
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))

@@ -288,7 +288,7 @@ class RoundTwelveSpec extends SparkTestBase {
     val base = buckets.filter(col("id") % 7 =!= 3 && col("id") % 7 =!= 5)
     val t1 = "graft_band_r12m_" +
       graft.Scratch.dir("graft_band_r12m").replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    Dedup.writeBandIndexN(spark, base, t1, 8)
+    Dedup.writeBandIndex(spark, base, t1, Some(8))
     val t2 = Dedup.migrateBandIndex(spark, t1, nBuckets = 32, "r12m")
 
     // content-preserving: the migrated generation holds exactly the
@@ -297,10 +297,15 @@ class RoundTwelveSpec extends SparkTestBase {
       "migration changed the index content")
 
     // the maintenance path works at the NEW spec and fails LOUDLY at
-    // the stale one — the reason d64 publishes the spec in the catalog
-    Dedup.appendBandIndexN(spark, buckets.filter(col("id") % 7 === 3), t2, 32)
+    // the stale one — the reason d64 publishes the spec in the catalog.
+    // No library writer takes a count for an existing store, so the
+    // stale bucketBy(8) append is issued with a raw writer.
+    Dedup.appendBandIndex(spark, buckets.filter(col("id") % 7 === 3), t2)
     val ex = intercept[Exception] {
-      Dedup.appendBandIndexN(spark, buckets.filter(col("id") % 7 === 5), t2, 8)
+      buckets.filter(col("id") % 7 === 5)
+        .select(concat_ws(":", col("band"), col("band_key")).as("bk"), col("id"))
+        .write.mode("append").format("parquet")
+        .bucketBy(8, "bk").sortBy("bk").saveAsTable(t2)
     }
     assert(ex.getMessage.toLowerCase.contains("bucket"),
       s"stale-spec append failed for the wrong reason: ${ex.getMessage}")
