@@ -879,36 +879,18 @@ object Incremental {
   }
 
   // ============ d58: generation catalog + atomic swap ============
+  // The store CATALOG: a pointer file naming the current generation's
+  // handles, backed by an immutable version history; every publish goes
+  // through [[commitCatalogCas]].
 
-  /** The store CATALOG: one tiny file naming the current generation's
-    * three store handles (band-index table, exact dir, shingle dir).
-    * Probes RESOLVE handles through the catalog; maintenance (d57
-    * compaction) builds the next generation OFFLINE and publishes it
-    * with ONE atomic same-directory move — the ManifestSink tmp+move
-    * discipline applied to store management. Readers therefore see the
-    * old generation or the new one, NEVER a mix: the three handles
-    * travel in one file and ATOMIC_MOVE forbids partial content. A
-    * crash mid-publish leaves the old pointer intact, with only a
-    * stale tmp file as residue (ignored by readers, overwritten by the
-    * next publish). Single publisher by contract — the same serial
-    * maintenance queue p02's ordered deltas already require.
-    *
-    * This is what makes d57 DEPLOYABLE: swapping three stores one by
-    * one would expose a concurrent probe to a MIXED generation (e.g.
-    * the compacted exact store beside the uncompacted band index),
-    * whose admissions match neither generation. */
-  def publishStoreCatalog(path: String, idxTable: String,
-      exDir: String, shDir: String): Unit =
-    publishCatalog(path, Seq(idxTable, exDir, shDir))
-
-  /** Generic atomic catalog publish: any line list, tmp + same-dir
-    * ATOMIC_MOVE. The tmp name is unique PER PUBLISH (UUID suffix) so a
-    * contract-violating concurrent publisher degrades to last-writer-wins
-    * — one whole triple or the other — instead of one publisher's move
-    * shipping the other's half-written bytes (or throwing
-    * NoSuchFileException when the rival's move already consumed the
-    * shared tmp). */
-  def publishCatalog(path: String, lines: Seq[String]): Unit = {
+  /** The pointer write: tmp + same-dir ATOMIC_MOVE, so a reader sees one
+    * whole line list or the other. The tmp name is unique PER WRITE
+    * (UUID suffix) so two racing pointer syncs degrade to
+    * last-writer-wins instead of one move shipping the other's
+    * half-written bytes (or throwing NoSuchFileException when the
+    * rival's move already consumed a shared tmp). Only
+    * [[syncCatalogPointer]] writes the pointer. */
+  private def publishCatalog(path: String, lines: Seq[String]): Unit = {
     val target = java.nio.file.Paths.get(path)
     val tmp = target.resolveSibling(
       target.getFileName.toString + ".tmp." + java.util.UUID.randomUUID())
@@ -1001,8 +983,9 @@ object Incremental {
       catch { case scala.util.control.NonFatal(_) => l }
     }
 
-  /** Generic catalog resolve (see [[publishCatalog]]); `expect` guards
-    * the line count so a wrong-surface catalog fails loudly. */
+  /** Resolve the current generation through the pointer (see
+    * [[commitCatalogCas]]); `expect` guards the line count so a
+    * wrong-surface catalog fails loudly. */
   def resolveCatalog(path: String, expect: Int): Seq[String] = {
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
     require(lines.size == expect,
@@ -1010,26 +993,30 @@ object Incremental {
     scala.jdk.CollectionConverters.ListHasAsScala(lines).asScala.toSeq
   }
 
-  /** Resolve the current generation's handles. A read concurrent with a
-    * publish returns the old or the new triple — never a blend (spec-
-    * drilled with racing reader threads against rapid swaps). */
-  def resolveStoreCatalog(path: String): (String, String, String) = {
-    val lines = resolveCatalog(path, expect = 3)
-    (lines(0), lines(1), lines(2))
-  }
-
   // -------------------------------------------------- versioned catalog
-  // d66: the d58 pointer plus an immutable HISTORY — each publish also
+  // d66: the d58 pointer plus an immutable HISTORY — each commit
   // writes v%05d under `$path.history/`, so a reader can PIN a
   // generation (time travel / session consistency across swaps) and a
   // retention GC can physically reclaim generations nobody may pin any
   // more. The pointer update stays the single ATOMIC_MOVE; the history
-  // file is written (tmp+move) BEFORE the pointer, so a crash between
+  // file is claimed atomically BEFORE the pointer, so a crash between
   // the two leaves an orphan history version but never a current
   // pointer without history.
 
   private def historyDir(path: String): java.nio.file.Path =
     java.nio.file.Paths.get(path + ".history")
+
+  private def versionFile(path: String, version: Int): java.nio.file.Path =
+    historyDir(path).resolve(f"v$version%05d")
+
+  /** Entries of `dir`, or none when it does not exist. */
+  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = java.nio.file.Files.list(dir)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala.toSeq
+      finally s.close()
+    }
 
   // ----------------------------------------- version-file integrity
   // r13: `resolveCatalogVersion` used to validate line COUNT only — a
@@ -1075,44 +1062,29 @@ object Incremental {
     content
   }
 
-  /** Publish a new generation: record it as the next immutable history
-    * version, then swap the current pointer. Returns the version
-    * number. Single publisher by contract (the d58 premise). */
-  def publishCatalogVersioned(path: String, lines: Seq[String]): Int = {
-    val hd = historyDir(path)
-    java.nio.file.Files.createDirectories(hd)
-    val v = catalogVersions(path).lastOption.getOrElse(0) + 1
-    val hist = hd.resolve(f"v$v%05d")
-    val tmp = hd.resolve(f"v$v%05d.tmp." + java.util.UUID.randomUUID())
-    java.nio.file.Files.write(tmp, versionFileBytes(lines))
-    java.nio.file.Files.move(tmp, hist,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    publishCatalog(path, lines)
-    v
-  }
-
   // ------------------------------------- optimistic-concurrency commit
-  // d69: publishCatalogVersioned is single-publisher by contract — two
-  // racing publishers degrade to last-writer-wins and one UPDATE IS
-  // LOST (ingest's append vanishes under compaction's publish, or vice
-  // versa). A 100 TB deployment has ingest, compaction, and re-train
-  // jobs publishing concurrently, so the commit must be a COMPARE-AND-
-  // SWAP: the publisher carries the version it based its update on, and
-  // the commit fails loudly when the catalog moved — the caller
-  // re-reads the new current generation, re-applies its change ON TOP,
-  // and retries (the Iceberg optimistic-commit protocol). The atomic
-  // claim primitive is a [[SlotCommitter]] — no lock file, no
-  // coordinator, works across JVMs sharing the catalog (drilled with
-  // real child JVMs racing the suite JVM in CasCrossJvmSpec).
+  // d69: a publish that just writes the next version is single-
+  // publisher by contract — two racing publishers degrade to
+  // last-writer-wins and one UPDATE IS LOST (ingest's append vanishes
+  // under compaction's publish, or vice versa). A 100 TB deployment
+  // has ingest, compaction, and re-train jobs publishing concurrently,
+  // so the commit must be a COMPARE-AND-SWAP: the publisher carries the
+  // version it based its update on, and the commit fails loudly when the
+  // catalog moved — the caller re-reads the new current generation,
+  // re-applies its change ON TOP, and retries (the Iceberg
+  // optimistic-commit protocol). The atomic claim primitive is a
+  // [[SlotCommitter]] — no lock file, no coordinator, works across JVMs
+  // sharing the catalog (drilled with real child JVMs racing the suite
+  // JVM in CasCrossJvmSpec).
 
   /** The atomic version-slot claim, extracted behind a seam so the
     * commit protocol is PORTABLE beyond a POSIX shared filesystem: of N
     * concurrent claimants of one slot, exactly one returns true; the
-    * losers return false having left the slot untouched. Two shipped
-    * shapes, selectable per call or globally via
-    * `-Dgraft.catalog.committer=hardlink|createnew`; both run the full
-    * RoundThirteenSpec race drills (same-slot races, publisher storm,
-    * real-store race) and the cross-JVM drill. */
+    * losers return false having left the slot untouched. The shipped
+    * shapes are selected per call ([[HardLinkCommitter]] by default);
+    * the POSIX two run the full RoundThirteenSpec race drills
+    * (same-slot races, publisher storm, real-store race) and the
+    * cross-JVM drill. */
   sealed trait SlotCommitter {
     def name: String
     def claim(slot: java.nio.file.Path, bytes: Array[Byte]): Boolean
@@ -1160,29 +1132,19 @@ object Incremental {
 
   /** The DEPLOYABLE Hadoop-filesystem port of the conditional-put
     * shape: the slot claim is `FileSystem.create(path, overwrite =
-    * false)` — on HDFS a single atomic namenode operation (the
-    * `create(overwrite=false)` contract [[CreateNewCommitter]]'s doc
-    * names), so of N racing claimants exactly one wins. This is the
-    * committer a cluster deployment selects for an `hdfs://` catalog;
-    * it goes through `org.apache.hadoop.fs.FileSystem`, so the same
-    * code serves any Hadoop-API store whose exclusive-create is atomic.
+    * false)` — on HDFS a single atomic namenode operation, so of N
+    * racing claimants exactly one wins; the same code serves any
+    * Hadoop-API store whose exclusive-create is atomic.
     *
-    * Honest scope of what is DRILLED here vs claimed: this container
-    * ships only the hadoop-CLIENT jars (no NameNode/DataNode/
-    * MiniDFSCluster classes exist on the classpath, and the build has
-    * zero egress to fetch them), so a real-HDFS drill is not runnable —
-    * the drills run this committer against the LOCAL Hadoop filesystem
-    * (`file://`, raw, no .crc sidecars), which exercises the full API
-    * path (create-exclusive exception taxonomy, stream write/close
-    * ordering, byte-compatibility of version files written through the
-    * Hadoop stack with the java.nio readers and checksum trailers) but
-    * NOT namenode atomicity: `RawLocalFileSystem.create(overwrite =
-    * false)` is an exists-check-then-create with a TOCTOU window, so on
-    * `file://` two racing claimants can BOTH win (RoundSixteenSpec
-    * measures exactly that divergence). Select this committer for
-    * Hadoop filesystems whose exclusive-create is atomic (HDFS); on a
-    * shared POSIX filesystem use [[HardLinkCommitter]] /
-    * [[CreateNewCommitter]], which are race-proven locally. */
+    * Drilled scope: only the hadoop-CLIENT jars are on the classpath
+    * (no NameNode/MiniDFSCluster), so the drills run against the LOCAL
+    * Hadoop filesystem (`file://`, raw, no .crc sidecars). That covers
+    * the full API path — exception taxonomy, write/close ordering,
+    * version files the java.nio readers checksum-verify — but NOT
+    * namenode atomicity: `RawLocalFileSystem.create(overwrite = false)`
+    * is exists-then-create, so two local claimants can BOTH win
+    * (RoundSixteenSpec measures that divergence). On a shared POSIX
+    * filesystem use [[HardLinkCommitter]] / [[CreateNewCommitter]]. */
   case object HadoopFsCommitter extends SlotCommitter {
     val name = "hadoopfs"
     def claim(slot: java.nio.file.Path, bytes: Array[Byte]): Boolean = {
@@ -1211,14 +1173,6 @@ object Incremental {
     }
   }
 
-  /** Session-wide committer choice (hardlink unless overridden). */
-  def defaultCommitter: SlotCommitter =
-    sys.props.get("graft.catalog.committer") match {
-      case Some(CreateNewCommitter.name) => CreateNewCommitter
-      case Some(HadoopFsCommitter.name) => HadoopFsCommitter
-      case _ => HardLinkCommitter
-    }
-
   /** A CAS publish lost its race: the catalog moved past the version the
     * publisher based its update on. Re-read, re-apply, retry. */
   final class CatalogCasConflict(val path: String, val expected: Int, val found: Int)
@@ -1234,9 +1188,10 @@ object Incremental {
     * callers re-apply structural updates and validate themselves).
     * Checksum-verified: a torn file fails loudly, never wrong lines. */
   def readCatalogVersion(path: String, version: Int): Seq[String] = {
-    val hist = historyDir(path).resolve(f"v$version%05d")
+    val hist = versionFile(path, version)
     require(java.nio.file.Files.exists(hist),
-      s"catalog generation v$version at $path is gone")
+      s"catalog generation v$version at $path is gone (never published, " +
+        "or reclaimed by retention GC)")
     parseVersionFile(hist)
   }
 
@@ -1245,18 +1200,19 @@ object Incremental {
     * `expectedVersion`; throws [[CatalogCasConflict]] otherwise. The
     * slot claim is the committer's atomic primitive, so of N racing
     * publishers exactly one wins each version — a lost update is
-    * impossible, only a retried one. Returns the committed version. */
-  def publishCatalogCas(path: String, expectedVersion: Int, lines: Seq[String],
-      committer: SlotCommitter = defaultCommitter): Int = {
-    val hd = historyDir(path)
-    java.nio.file.Files.createDirectories(hd)
+    * impossible, only a retried one. Returns the committed version.
+    * The single-shot step [[commitCatalogCas]] loops over; visible in
+    * the package only for drills that stage a stale basis on purpose. */
+  private[graft] def publishCatalogCas(path: String, expectedVersion: Int,
+      lines: Seq[String], committer: SlotCommitter = HardLinkCommitter): Int = {
+    java.nio.file.Files.createDirectories(historyDir(path))
     val current = currentCatalogVersion(path)
     if (current != expectedVersion)
       throw new CatalogCasConflict(path, expectedVersion, current)
     val v = expectedVersion + 1
     // a rival may claim v between our check and our claim — same
     // conflict, detected one step later
-    if (!committer.claim(hd.resolve(f"v$v%05d"), versionFileBytes(lines)))
+    if (!committer.claim(versionFile(path, v), versionFileBytes(lines)))
       throw new CatalogCasConflict(path, expectedVersion, v)
     syncCatalogPointer(path)
     v
@@ -1265,8 +1221,8 @@ object Incremental {
   /** Re-derives the pointer file from the LATEST history version, looping
     * until the write landed for the version that is still latest. The
     * pointer is a convergent cache: two CAS winners syncing out of order
-    * both re-check and the later content wins; legacy
-    * [[resolveCatalog]] readers stay at most one converging write behind,
+    * both re-check and the later content wins; pointer
+    * ([[resolveCatalog]]) readers stay at most one converging write behind,
     * while version-aware readers never see a torn state at all. */
   private def syncCatalogPointer(path: String): Unit = {
     var settled = false
@@ -1288,16 +1244,33 @@ object Incremental {
     }
   }
 
-  /** The full optimistic-commit loop: reads the current generation, asks
-    * `update(currentVersion, currentLines)` for the successor lines,
-    * CAS-publishes, and on conflict re-reads and RE-APPLIES — so the
-    * update composes with whatever the rival committed instead of
-    * clobbering it. Returns (committedVersion, attempts). `update` must
-    * be safe to re-run (it may materialize a new store generation per
-    * attempt; an abandoned attempt's table is dead weight for the GC,
-    * never corruption — new-table discipline). */
+  /** THE catalog publish: every generation a store serves is committed
+    * here. Reads the current generation, asks `update(currentVersion,
+    * currentLines)` for the successor lines, claims them as the next
+    * history version, then syncs the pointer. Returns
+    * (committedVersion, attempts).
+    *
+    * Atomic swap (d58): a generation's handles travel in ONE version
+    * file claimed atomically and ONE pointer replaced by ATOMIC_MOVE,
+    * so readers see the old generation or the new one, NEVER a mix. A
+    * crash mid-publish leaves the old pointer intact. This is what
+    * makes d57 compaction DEPLOYABLE: swapping three stores one by one
+    * would expose a concurrent probe to a MIXED generation (the
+    * compacted exact store beside the uncompacted band index), whose
+    * admissions match neither generation.
+    *
+    * Concurrency: on a lost race the loop re-reads and RE-APPLIES
+    * `update` on the winner's generation. A BLIND update (`(_, _) =>
+    * lines`, ignoring its basis) is therefore last-writer-wins — right
+    * for a single maintainer replacing its own generation, but it drops
+    * a racing writer's update. An update that re-applies its change ON
+    * its basis (`(_, cur) => cur :+ x`) composes with whatever the
+    * rival committed. `update` must be safe to re-run (it may
+    * materialize a new store generation per attempt; an abandoned
+    * attempt's table is dead weight for the GC, never corruption —
+    * new-table discipline). */
   def commitCatalogCas(path: String, maxAttempts: Int = 10,
-      committer: SlotCommitter = defaultCommitter)(
+      committer: SlotCommitter = HardLinkCommitter)(
       update: (Int, Seq[String]) => Seq[String]): (Int, Int) = {
     var attempts = 0
     var lastRead: Throwable = null
@@ -1366,7 +1339,7 @@ object Incremental {
     * Returns the reclaimed slot's version, if any. */
   def repairTornCatalogSlot(path: String, graceMs: Long = 60000L): Option[Int] =
     catalogVersions(path).lastOption.flatMap { v =>
-      val slot = historyDir(path).resolve(f"v$v%05d")
+      val slot = versionFile(path, v)
       val torn =
         try { parseVersionFile(slot); false }
         catch {
@@ -1401,18 +1374,7 @@ object Incremental {
   def gcOrphanTables(s: org.apache.spark.sql.SparkSession,
       path: String, prefix: String,
       graceMs: Long = 10L * 60 * 1000): Seq[String] = {
-    val referenced = catalogVersions(path)
-      .flatMap { v =>
-        // absent = a rival sweep reclaimed it (its references are moot);
-        // a TORN file propagates parseVersionFile's loud failure instead
-        try parseVersionFile(historyDir(path).resolve(f"v$v%05d"))
-        catch { case _: java.nio.file.NoSuchFileException => Seq.empty[String] }
-      }
-      .toSet ++ (
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-          scala.jdk.CollectionConverters.ListHasAsScala(java.nio.file.Files
-            .readAllLines(java.nio.file.Paths.get(path))).asScala.toSeq
-        else Seq.empty[String])
+    val referenced = everyRecordedLine(path).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     val candidates = s.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith(prefix)).filterNot(referenced)
@@ -1460,18 +1422,7 @@ object Incremental {
         try Some(norm(PortableHandle.decode(l).path))
         catch { case scala.util.control.NonFatal(_) => None }
       }
-    val rawLines = catalogVersions(catalogPath)
-      .flatMap { v =>
-        // absent = a rival retention sweep reclaimed it; TORN propagates
-        // parseVersionFile's loud failure and aborts this sweep
-        try parseVersionFile(historyDir(catalogPath).resolve(f"v$v%05d"))
-        catch { case _: java.nio.file.NoSuchFileException => Seq.empty[String] }
-      } ++ (
-        if (Files.exists(Paths.get(catalogPath)))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            Files.readAllLines(Paths.get(catalogPath))).asScala.toSeq
-        else Seq.empty[String])
-    val referenced = handlePaths(rawLines).toSet
+    val referenced = handlePaths(everyRecordedLine(catalogPath)).toSet
     // Guard: a catalog whose recorded versions carry NO decodable
     // portable-handle line (the plain-table-name flow, e.g. d73/s43's
     // writeIvfIndex catalogs) yields an EMPTY referenced set — running
@@ -1482,51 +1433,52 @@ object Incremental {
     val hist = historyDir(catalogPath).toAbsolutePath.normalize.toString
     val cutoff = System.currentTimeMillis() - graceMs
     // a store whose generation area was never created has no debris
-    if (!Files.isDirectory(Paths.get(baseDir))) return Seq.empty
-    val listing = Files.list(Paths.get(baseDir))
-    val candidates =
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(listing.iterator())
-        .asScala.filter(Files.isDirectory(_)).map(_.toAbsolutePath.normalize)
-        .toSeq
-      finally listing.close()
-    candidates.filter { c =>
-      val cs = c.toString
-      cs != hist &&
-        !referenced.exists(r => r == cs || r.startsWith(cs + "/")) &&
-        Files.getLastModifiedTime(c).toMillis < cutoff
-    }.map { c =>
-      graft.Scratch.deleteRecursively(c.toFile)
-      c.toString
-    }
+    listDir(Paths.get(baseDir))
+      .filter(Files.isDirectory(_)).map(_.toAbsolutePath.normalize)
+      .filter { c =>
+        val cs = c.toString
+        cs != hist &&
+          !referenced.exists(r => r == cs || r.startsWith(cs + "/")) &&
+          Files.getLastModifiedTime(c).toMillis < cutoff
+      }.map { c =>
+        graft.Scratch.deleteRecursively(c.toFile)
+        c.toString
+      }
   }
 
-  /** All recorded history versions, ascending. */
-  def catalogVersions(path: String): Seq[Int] = {
-    val hd = historyDir(path)
-    if (!java.nio.file.Files.isDirectory(hd)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(hd)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .map(_.getFileName.toString)
-        // {5,}: %05d pads to AT LEAST five digits, so v100000 is six wide
-        // — an exactly-five filter would make every version ≥ 100000
-        // invisible (currentCatalogVersion stuck at 99999, every CAS a
-        // livelock); at the drilled 60-72 commits/s that is ~25 minutes
-        // of production commits (CatalogVolumeProbe drills the boundary)
-        .filter(_.matches("v\\d{5,}"))
-        .map(_.drop(1).toInt).toSeq.sorted
-      finally s.close()
-    }
+  /** The current pointer's lines; empty when nothing was published. */
+  private def pointerLines(path: String): Seq[String] = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) Seq.empty
+    else scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(p)).asScala.toSeq
   }
+
+  /** Every line any recorded version or the pointer names — the orphan
+    * sweeps' referenced set. An absent version was reclaimed by a rival
+    * retention sweep (its references are moot); a TORN one propagates
+    * parseVersionFile's loud failure and aborts the sweep. */
+  private def everyRecordedLine(path: String): Seq[String] =
+    catalogVersions(path).flatMap { v =>
+      try parseVersionFile(versionFile(path, v))
+      catch { case _: java.nio.file.NoSuchFileException => Seq.empty[String] }
+    } ++ pointerLines(path)
+
+  /** All recorded history versions, ascending. */
+  def catalogVersions(path: String): Seq[Int] =
+    listDir(historyDir(path)).map(_.getFileName.toString)
+      // {5,}: %05d pads to AT LEAST five digits, so v100000 is six wide
+      // — an exactly-five filter would make every version ≥ 100000
+      // invisible (currentCatalogVersion stuck at 99999, every CAS a
+      // livelock); at the drilled 60-72 commits/s that is ~25 minutes
+      // of production commits (CatalogVolumeProbe drills the boundary)
+      .filter(_.matches("v\\d{5,}"))
+      .map(_.drop(1).toInt).sorted
 
   /** Resolve a PINNED generation by version — fails loudly if the
     * version was never published or has been GC'd past retention. */
   def resolveCatalogVersion(path: String, version: Int, expect: Int): Seq[String] = {
-    val hist = historyDir(path).resolve(f"v$version%05d")
-    require(java.nio.file.Files.exists(hist),
-      s"catalog generation v$version at $path is gone (never published, " +
-        "or reclaimed by retention GC)")
-    val lines = parseVersionFile(hist) // checksum-verified: torn → loud
+    val lines = readCatalogVersion(path, version)
     require(lines.size == expect,
       s"corrupt catalog history v$version at $path (expected $expect lines): $lines")
     lines
@@ -1550,7 +1502,7 @@ object Incremental {
     * cannot be reclaimed while the lease is unexpired. */
   def acquireCatalogPin(path: String, version: Int, holder: String,
       leaseMs: Long): Unit = {
-    require(java.nio.file.Files.exists(historyDir(path).resolve(f"v$version%05d")),
+    require(java.nio.file.Files.exists(versionFile(path, version)),
       s"cannot pin unpublished generation v$version at $path")
     val pd = pinsDir(path)
     java.nio.file.Files.createDirectories(pd)
@@ -1573,38 +1525,31 @@ object Incremental {
     * generation) but their files are left for [[resolvePinnedCatalog]]
     * to fail loudly on. */
   def activeCatalogPins(path: String,
-      now: Long = System.currentTimeMillis()): Map[String, Int] = {
-    val pd = pinsDir(path)
-    if (!java.nio.file.Files.isDirectory(pd)) Map.empty
-    else {
-      val s = java.nio.file.Files.list(pd)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filterNot(_.getFileName.toString.contains(".tmp."))
-        .flatMap { p =>
-          // per-file guard: a holder releasing CONCURRENTLY makes the
-          // read throw NoSuchFile, and a torn/malformed lease parses
-          // wrong — both mean "this lease protects nothing", exactly
-          // what a released pin means. Guarding per file keeps one
-          // racing release from aborting a whole retention sweep. ONLY
-          // those two shapes are treated as released: an unexpected
-          // I/O error on a live lease propagates and aborts the caller
-          // (GC is best-effort by contract, so aborting is safe) —
-          // defaulting a transiently-unreadable pin to "unpinned"
-          // would let retention reclaim a generation a reader holds.
-          try {
-            val parts = new String(java.nio.file.Files.readAllBytes(p),
-              java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")
-            if (parts.length == 2 && parts(1).toLong > now)
-              Some(p.getFileName.toString -> parts(0).toInt)
-            else None
-          } catch {
-            case _: java.nio.file.NoSuchFileException => None // racing release
-            case _: NumberFormatException => None // torn/malformed lease shape
-          }
-        }.toMap
-      finally s.close()
-    }
-  }
+      now: Long = System.currentTimeMillis()): Map[String, Int] =
+    listDir(pinsDir(path))
+      .filterNot(_.getFileName.toString.contains(".tmp."))
+      .flatMap { p =>
+        // per-file guard: a holder releasing CONCURRENTLY makes the
+        // read throw NoSuchFile, and a torn/malformed lease parses
+        // wrong — both mean "this lease protects nothing", exactly
+        // what a released pin means. Guarding per file keeps one
+        // racing release from aborting a whole retention sweep. ONLY
+        // those two shapes are treated as released: an unexpected
+        // I/O error on a live lease propagates and aborts the caller
+        // (GC is best-effort by contract, so aborting is safe) —
+        // defaulting a transiently-unreadable pin to "unpinned"
+        // would let retention reclaim a generation a reader holds.
+        try {
+          val parts = new String(java.nio.file.Files.readAllBytes(p),
+            java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")
+          if (parts.length == 2 && parts(1).toLong > now)
+            Some(p.getFileName.toString -> parts(0).toInt)
+          else None
+        } catch {
+          case _: java.nio.file.NoSuchFileException => None // racing release
+          case _: NumberFormatException => None // torn/malformed lease shape
+        }
+      }.toMap
 
   /** Resolve the generation a holder's pin names — loudly failing when
     * the pin is absent or its lease EXPIRED (the consumer outlived its
@@ -1647,16 +1592,11 @@ object Incremental {
     // without this the pointed-at generation could fall out of the
     // retain window and be reclaimed under the only reader guaranteed
     // to exist (drilled in RoundTwelveSpec).
-    val pointer =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        scala.jdk.CollectionConverters.ListHasAsScala(java.nio.file.Files
-          .readAllLines(java.nio.file.Paths.get(path))).asScala.toSet
-      else Set.empty[String]
     val keep = live.flatMap { v =>
       // checksum-verified: a TORN live version aborts the sweep loudly —
       // what it references is unknowable, so reclaiming would gamble
-      parseVersionFile(historyDir(path).resolve(f"v$v%05d"))
-    }.toSet ++ pointer
+      parseVersionFile(versionFile(path, v))
+    }.toSet ++ pointerLines(path)
 
     // Reclamation is IDEMPOTENT under concurrent sweeps (overlapping GC
     // crons are normal ops): a version another sweep already reclaimed
@@ -1703,7 +1643,7 @@ object Incremental {
       }
     }
     dead.filter { v =>
-      val hist = historyDir(path).resolve(f"v$v%05d")
+      val hist = versionFile(path, v)
       val linesOpt =
         try Some(parseVersionFile(hist))
         catch {
@@ -1747,11 +1687,11 @@ object Incremental {
     val (idx1, ex1, sh1) = gen1
     val (aB, aS) = aBS
     val cat = graft.Scratch.dir("graft_d58_cat") + "/stores.catalog"
-    publishStoreCatalog(cat, idx1, ex1, sh1)
+    commitCatalogCas(cat)((_, _) => Seq(idx1, ex1, sh1))
     val removed = Dedup.reuse(corpus.filter(removedPred).select("doc_id"))
 
     def probePhase(phase: String, gen: Long, tomb: Option[DataFrame]): DataFrame = {
-      val (idx, ex, sh) = resolveStoreCatalog(cat)
+      val Seq(idx, ex, sh) = resolveCatalog(cat, expect = 3)
       val adm = admitArrivals(arrC, aS, Dedup.probeBandIndex(s, idx, aB),
         s.read.schema("doc_id LONG, h STRING").parquet(ex),
         s.read.schema("id LONG, h LONG").parquet(sh), tomb)
@@ -1775,7 +1715,7 @@ object Incremental {
       () => pre = probePhase("pre_swap", 1L, Some(removed)),
       () => gen2 = compactStores(s, idx1, ex1, sh1, removed, "d58c"))
     val (idx2, ex2, sh2) = gen2
-    publishStoreCatalog(cat, idx2, ex2, sh2)
+    commitCatalogCas(cat)((_, _) => Seq(idx2, ex2, sh2))
     // the same probe path re-resolves the catalog: new generation, no
     // tombstone filter — the dead rows are physically gone
     val post = probePhase("post_swap", 2L, None)

@@ -1110,7 +1110,7 @@ object Multimodal {
         .select(col("b").as("band"), col("bits").as("band_key"), col("id")), tMedia),
       () => cS.select(col("id"), col("si")).write.mode("overwrite").parquet(sigDir))
     val cat = graft.Scratch.dir("graft_d71_cat") + "/surfaces.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(tText, tPost, tMedia, sigDir))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(tText, tPost, tMedia, sigDir))
     d71Catalog = cat
 
     // every probe resolves the QUADRUPLE atomically through the catalog

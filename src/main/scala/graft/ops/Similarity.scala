@@ -2324,7 +2324,7 @@ object Similarity {
     // generation 1: the RAW tier
     val rawTable = writeIvfIndex(s, assign.filter(!isQuery), "ivf_d72")
     val cat = graft.Scratch.dir("graft_d72_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(rawTable, "raw"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(rawTable, "raw"))
     d72Catalog = cat
 
     val probesRaw = asProbes(assign.filter(isQuery))
@@ -2485,7 +2485,7 @@ object Similarity {
     // generation 1: the index at the 8-cell seed layout
     val t1 = writeIvfIndex(s, Dedup.reuse(ivfAssign(e)), "ivf_d73")
     val cat = graft.Scratch.dir("graft_d73_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "8"))
     d73Catalog = cat
     // the census: ONE agg over the stored bucketed scan (ids only)
     val cur = Incremental.resolveCatalog(cat, expect = 2)
@@ -2695,7 +2695,7 @@ object Similarity {
     }
     val pq1 = encodePq(raw1, "ivfpq_d74")
     val cat = graft.Scratch.dir("graft_d74_cat") + "/tiers.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(raw1, pq1, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(raw1, pq1, "8"))
     d74Catalog = cat
     // census over the SERVING tier (the pq index: ids only)
     val cur = Incremental.resolveCatalog(cat, expect = 3)
@@ -3040,7 +3040,7 @@ object Similarity {
       .withColumn("codes", pqCodesCol(cb)), "ivfpq_d76",
       nBuckets = BucketedStore.bucketCountOf(s, raw))
     val cat = graft.Scratch.dir("graft_d76_cat") + "/tiers.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(raw, pq, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(raw, pq, "8"))
     val cur = Incremental.resolveCatalog(cat, expect = 3)
     val cents = s.table(cur.head).filter(col("cid") < cur(2).toInt)
       .select(col("cid").as("cent_id"), col("cv2").as("cv"))
@@ -3266,7 +3266,7 @@ object Similarity {
       .withColumn("codes", pqCodesCol(cb)), "ivfpq_d77",
       nBuckets = BucketedStore.bucketCountOf(s, raw))
     val cat = graft.Scratch.dir("graft_d77_cat") + "/tiers.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(raw, pq, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(raw, pq, "8"))
     val cur = Incremental.resolveCatalog(cat, expect = 3)
     val cents = s.table(cur.head).filter(col("cid") < cur(2).toInt)
       .select(col("cid").as("cent_id"), col("cv2").as("cv"))

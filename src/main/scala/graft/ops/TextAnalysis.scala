@@ -2786,7 +2786,7 @@ object TextAnalysis {
     val t1 = writePostingStore(s, p0, "post_d70")
     logStatDeltas(p0, dfDir, statsDir, batch = 0, sign = 1)
     val cat = graft.Scratch.dir("graft_d70_cat") + "/postings.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1, "v1"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "v1"))
     def resolvedProbe(phase: String, lines: Seq[String]): DataFrame =
       // shared-column projection: a v1 reader's plan, valid on EITHER
       // schema generation — evolution adds columns, never moves them

@@ -1835,7 +1835,7 @@ object StreamingQueries {
     val corpus = docs.filter(col("doc_id") % 11 =!= 5)
     val (idx1, ex1, sh1) = Incremental.initOwnedStores(s, corpus, "s33")
     val cat = graft.Scratch.dir("graft_s33_cat") + "/stores.catalog"
-    Incremental.publishStoreCatalog(cat, idx1, ex1, sh1)
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(idx1, ex1, sh1))
     val arrivals = docs.filter(col("doc_id") % 11 === 5)
     val watched = graft.Scratch.dir("graft_s33_watched")
     val outDir = graft.Scratch.dir("graft_s33_out")
@@ -1869,7 +1869,7 @@ object StreamingQueries {
             // the CURRENT generation and the CURRENT tombstone set,
             // both re-read each batch — this is the contract under
             // test: maintenance between batches binds the next one
-            val (idx, ex, sh) = Incremental.resolveStoreCatalog(cat)
+            val Seq(idx, ex, sh) = Incremental.resolveCatalog(cat, expect = 3)
             val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
             val (row, _) = Incremental.admitBatch(s, batch.toDF(),
               "batch", b.toLong, idx, ex, sh,
@@ -1887,10 +1887,10 @@ object StreamingQueries {
         // swaps, and the consumed tombstones are cleared
         val removed = corpus.filter(Incremental.removedPred).select("doc_id")
         removed.write.mode("overwrite").parquet(tombDir)
-        val (i1, e1, h1) = Incremental.resolveStoreCatalog(cat)
+        val Seq(i1, e1, h1) = Incremental.resolveCatalog(cat, expect = 3)
         val (i2, e2, h2) = Incremental.compactStores(
           s, i1, e1, h1, s.read.schema("doc_id LONG").parquet(tombDir), "s33c")
-        Incremental.publishStoreCatalog(cat, i2, e2, h2)
+        Incremental.commitCatalogCas(cat)((_, _) => Seq(i2, e2, h2))
         corpus.select(col("doc_id")).limit(0)
           .write.mode("overwrite").parquet(tombDir)
       }
@@ -1986,7 +1986,7 @@ object StreamingQueries {
     val idxGen1 = Similarity.writeIvfIndex(
       s, assign.filter(col("vec_id") % 10 =!= 5), "ivf_s34")
     val cat = graft.Scratch.dir("graft_s34_cat") + "/index.catalog"
-    Incremental.publishCatalog(cat, Seq(idxGen1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen1))
     val tombDir = graft.Scratch.dir("graft_s34_tomb")
     e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
     val watched = graft.Scratch.dir("graft_s34_watched")
@@ -2052,7 +2052,7 @@ object StreamingQueries {
         val cur = Incremental.resolveCatalog(cat, expect = 1).head
         val idxGen2 = Similarity.compactIvfIndex(s, cur,
           s.read.schema("vec_id LONG").parquet(tombDir), "ivf_s34c")
-        Incremental.publishCatalog(cat, Seq(idxGen2))
+        Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2))
         e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
       }
     }
@@ -2333,7 +2333,7 @@ object StreamingQueries {
         .select(col("b").as("band"), col("bits").as("band_key"), col("id")), idx1),
       () => cS.select(col("id"), col("si")).write.mode("overwrite").parquet(sig1))
     val cat = graft.Scratch.dir("graft_s36_cat") + "/media.catalog"
-    Incremental.publishCatalog(cat, Seq(idx1, sig1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(idx1, sig1))
 
     val variants = Multimodal.mediaVariants(docs)
       .select((col("id") + 500000L).as("id"), col("payload"), (col("id") % 2).as("wave"))
@@ -2425,7 +2425,7 @@ object StreamingQueries {
           () => s.read.schema("id LONG, si ARRAY<BIGINT>").parquet(cur(1))
             .join(broadcast(tomb), Seq("id"), "left_anti")
             .distinct().write.mode("overwrite").parquet(sig2))
-        Incremental.publishCatalog(cat, Seq(idx2, sig2))
+        Incremental.commitCatalogCas(cat)((_, _) => Seq(idx2, sig2))
         corpus.select(col("id")).limit(0).write.mode("overwrite").parquet(tombDir)
       }
     }
@@ -2571,7 +2571,7 @@ object StreamingQueries {
     val centsDir1 = graft.Scratch.dir("graft_s37_cents1")
     cents0.write.mode("overwrite").parquet(centsDir1)
     val cat = graft.Scratch.dir("graft_s37_cat") + "/index.catalog"
-    Incremental.publishCatalog(cat, Seq(idxGen1, centsDir1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen1, centsDir1))
     s37Catalog = cat
     // the ingest log: which index entries arrived post-build — the seam
     // maintenance reads (NOT fixture knowledge)
@@ -2667,7 +2667,7 @@ object StreamingQueries {
             "ivf_s37g2")
           val centsDir2 = graft.Scratch.dir("graft_s37_cents2")
           cents1.write.mode("overwrite").parquet(centsDir2)
-          Incremental.publishCatalog(cat, Seq(idxGen2, centsDir2))
+          Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2, centsDir2))
         }
       }
     }
@@ -2795,7 +2795,7 @@ object StreamingQueries {
       () => table = TextAnalysis.writePostingStore(s, p0, "post_s38"),
       () => TextAnalysis.logStatDeltas(p0, dfDir, statsDir, batch = 0, sign = 1))
     val cat = graft.Scratch.dir("graft_s38_cat") + "/store.catalog"
-    Incremental.publishCatalog(cat, Seq(table, dfDir, statsDir))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(table, dfDir, statsDir))
     s38Catalog = cat
     val tombDir = graft.Scratch.dir("graft_s38_tomb")
     docs.select(col("doc_id")).limit(0).write.mode("overwrite").parquet(tombDir)
@@ -2873,7 +2873,7 @@ object StreamingQueries {
           () => s.read.parquet(h(2))
             .agg(sum(col("d_docs")).as("d_docs"), sum(col("d_tok")).as("d_tok"))
             .write.mode("overwrite").parquet(s"$statsDir2/batch=0"))
-        Incremental.publishCatalog(cat, Seq(table2, dfDir2, statsDir2))
+        Incremental.commitCatalogCas(cat)((_, _) => Seq(table2, dfDir2, statsDir2))
         docs.select(col("doc_id")).limit(0).write.mode("overwrite").parquet(tombDir)
       }
     }
@@ -2994,7 +2994,7 @@ object StreamingQueries {
     val idxGen1 = Similarity.writeIvfPqIndex(
       s, encAll.filter(col("vec_id") % 10 =!= 5), "ivfpq_s39")
     val cat = graft.Scratch.dir("graft_s39_cat") + "/index.catalog"
-    Incremental.publishCatalog(cat, Seq(idxGen1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen1))
     s39Catalog = cat
     val tombDir = graft.Scratch.dir("graft_s39_tomb")
     e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
@@ -3063,7 +3063,7 @@ object StreamingQueries {
         val cur = Incremental.resolveCatalog(cat, expect = 1).head
         val idxGen2 = Similarity.compactIvfPqIndex(s, cur,
           s.read.schema("vec_id LONG").parquet(tombDir), "ivfpq_s39c")
-        Incremental.publishCatalog(cat, Seq(idxGen2))
+        Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2))
         e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
       }
     }
@@ -3213,7 +3213,7 @@ object StreamingQueries {
     val t1 = "graft_band_s40_" + graft.Scratch.nameTag()
     Dedup.writeBandIndex(s, buckets.filter(!isProbe), t1)
     val cat = graft.Scratch.dir("graft_s40_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1))
     // the export stream's LEASE, taken at stream start; an hour dwarfs
     // the run (a production consumer renews per batch)
     Incremental.acquireCatalogPin(cat, version = 1, holder = "s40-export",
@@ -3359,7 +3359,7 @@ object StreamingQueries {
     m1.toDF("rank", "left", "right", "n_pairs")
       .write.mode("overwrite").parquet(mergesDir1)
     val cat = graft.Scratch.dir("graft_s41_cat") + "/tokenizer.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(mergesDir1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(mergesDir1))
     s41Catalog = cat
     val logDir = graft.Scratch.dir("graft_s41_log")
     baseCen.select(col("word"), col("freq").as("cnt")).limit(0)
@@ -3601,7 +3601,7 @@ object StreamingQueries {
     val t1 = "graft_band_s42_" + graft.Scratch.nameTag()
     Dedup.writeBandIndex(s, buckets.filter(col("id") % 7 =!= 5), t1, Some(8))
     val cat = graft.Scratch.dir("graft_s42_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "8"))
     s42Catalog = cat
     val allShingles = shingles
     val watched = graft.Scratch.dir("graft_s42_watched")
@@ -3839,7 +3839,7 @@ object StreamingQueries {
     val t1 = Similarity.writeIvfIndex(s,
       Dedup.reuse(Similarity.ivfAssign(base)), "ivf_s43")
     val cat = graft.Scratch.dir("graft_s43_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1, "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "8"))
     s43Catalog = cat
     val watched = graft.Scratch.dir("graft_s43_watched")
     val outDir = graft.Scratch.dir("graft_s43_out")

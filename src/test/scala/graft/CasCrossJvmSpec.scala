@@ -19,7 +19,7 @@ object CasCrossJvm {
   def run(committer: ops.Incremental.SlotCommitter,
       childJvms: Int, updates: Int): (Double, Int) = {
     val cat = Scratch.dir(s"graft_casjvm_${committer.name}") + "/store.catalog"
-    ops.Incremental.publishCatalogVersioned(cat, Seq("base"))
+    ops.Incremental.commitCatalogCas(cat)((_, _) => Seq("base"))
     val t0 = System.nanoTime()
     val procs = (1 to childJvms).map { w =>
       new ProcessBuilder(

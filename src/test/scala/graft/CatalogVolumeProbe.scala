@@ -27,36 +27,31 @@ object CatalogVolumeProbe {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
 
-    def synth(n: Int): String = {
-      val cat = Scratch.dir(s"graft_catvol_$n") + "/store.catalog"
+    // straddle the six-digit boundary at the largest size so the
+    // volume run exercises the v\d{5,} fix where it matters
+    def base(n: Int): Int = if (n >= 100000) 50000 else 0
+
+    // n versions ending at base + n: all but the last written directly,
+    // the last one a real commit (which also writes the pointer)
+    def synth(prefix: String, n: Int): String = {
+      val cat = Scratch.dir(prefix) + "/store.catalog"
       val hd = java.nio.file.Paths.get(cat + ".history")
       java.nio.file.Files.createDirectories(hd)
-      // straddle the six-digit boundary at the largest size so the
-      // volume run exercises the v\d{5,} fix where it matters
-      val base = if (n >= 100000) 50000 else 0
-      (1 to n).foreach { i =>
-        val v = base + i
+      (1 until n).foreach { i =>
+        val v = base(n) + i
         java.nio.file.Files.write(hd.resolve(f"v$v%05d"),
           Incremental.versionFileBytes(Seq(s"gen$v-meta", "8"))): Unit
       }
-      Incremental.publishCatalog(cat, Seq(s"gen${base + n}-meta", "8"))
+      Incremental.commitCatalogCas(cat)((_, _) =>
+        Seq(s"gen${base(n) + n}-meta", "8")): Unit
       cat
     }
 
     val entries = Seq(1000, 10000, 100000).map { n =>
-      val tSynth = time { synth(n) }
-      val cat = Scratch.dir(s"graft_catvol_m$n") + "/store.catalog"
+      val tSynth = time { synth(s"graft_catvol_$n", n): Unit }
       // re-synth into the measured dir (synth above warmed the code path)
-      val hd = java.nio.file.Paths.get(cat + ".history")
-      java.nio.file.Files.createDirectories(hd)
-      val base = if (n >= 100000) 50000 else 0
-      (1 to n).foreach { i =>
-        val v = base + i
-        java.nio.file.Files.write(hd.resolve(f"v$v%05d"),
-          Incremental.versionFileBytes(Seq(s"gen$v-meta", "8"))): Unit
-      }
-      Incremental.publishCatalog(cat, Seq(s"gen${base + n}-meta", "8"))
-      val top = base + n
+      val cat = synth(s"graft_catvol_m$n", n)
+      val top = base(n) + n
 
       // writer side: the version list every CAS basis read performs
       val tList = (1 to 5).map(_ =>
@@ -69,7 +64,7 @@ object CatalogVolumeProbe {
       val tResolve = (1 to 5).map(_ =>
         time { Incremental.resolveCatalog(cat, expect = 2): Unit }).min
       val tPoint = (1 to 5).map(_ =>
-        time { Incremental.resolveCatalogVersion(cat, base + n / 2,
+        time { Incremental.resolveCatalogVersion(cat, base(n) + n / 2,
           expect = 2): Unit }).min
       // the retention sweep reclaiming (n + 1 - 8) version files
       val tSweep = time {

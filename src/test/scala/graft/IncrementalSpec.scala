@@ -284,8 +284,13 @@ class IncrementalSpec extends SparkTestBase {
     val census = SparkEntry.queries("s33_stream_compacting_admission")(spark, sf0001)
       .collect()
     assert(census.length == 2, "one census row per micro-batch")
-    val (idxTable, _, shDir) = Incremental.resolveStoreCatalog(
-      streaming.StreamingQueries.s33Catalog)
+    val cat = streaming.StreamingQueries.s33Catalog
+    val Seq(idxTable, _, shDir) = Incremental.resolveCatalog(cat, expect = 3)
+    // every catalog a query publishes has a history: the initial
+    // generation and the compaction swap, and the pointer mirrors the last
+    assert(Incremental.catalogVersions(cat) == Seq(1, 2))
+    assert(Incremental.resolveCatalog(cat, expect = 3) ==
+      Incremental.readCatalogVersion(cat, Incremental.currentCatalogVersion(cat)))
 
     val docs = Incremental.plantedDocs(spark, sf0001)
     val corpus = docs.filter(col("doc_id") % 11 =!= 5)
@@ -486,15 +491,15 @@ class IncrementalSpec extends SparkTestBase {
     // generations; every resolved triple must be EXACTLY one of them
     val dir = Scratch.dir("graft_d58spec_cat")
     val cat = s"$dir/stores.catalog"
-    val genA = ("idxA", "exA", "shA")
-    val genB = ("idxB", "exB", "shB")
-    Incremental.publishStoreCatalog(cat, genA._1, genA._2, genA._3)
+    val genA = Seq("idxA", "exA", "shA")
+    val genB = Seq("idxB", "exB", "shB")
+    Incremental.commitCatalogCas(cat)((_, _) => genA)
     val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val readers = (1 to 4).map { _ =>
       val t = new Thread(() => {
         while (!stop.get()) {
-          val got = Incremental.resolveStoreCatalog(cat)
+          val got = Incremental.resolveCatalog(cat, expect = 3)
           if (got != genA && got != genB) bad.compareAndSet(null, got.toString): Unit
         }
       })
@@ -502,7 +507,7 @@ class IncrementalSpec extends SparkTestBase {
     }
     (1 to 200).foreach { i =>
       val g = if (i % 2 == 0) genA else genB
-      Incremental.publishStoreCatalog(cat, g._1, g._2, g._3)
+      Incremental.commitCatalogCas(cat)((_, _) => g)
     }
     stop.set(true); readers.foreach(_.join(2000))
     assert(bad.get() == null, s"torn catalog read under racing swaps: ${bad.get()}")
@@ -511,10 +516,10 @@ class IncrementalSpec extends SparkTestBase {
     // must not block the next publish
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$cat.tmp"),
       "garbage".getBytes)
-    assert(Incremental.resolveStoreCatalog(cat) == genA ||
-      Incremental.resolveStoreCatalog(cat) == genB)
-    Incremental.publishStoreCatalog(cat, genB._1, genB._2, genB._3)
-    assert(Incremental.resolveStoreCatalog(cat) == genB,
+    assert(Incremental.resolveCatalog(cat, expect = 3) == genA ||
+      Incremental.resolveCatalog(cat, expect = 3) == genB)
+    Incremental.commitCatalogCas(cat)((_, _) => genB)
+    assert(Incremental.resolveCatalog(cat, expect = 3) == genB,
       "publish after a crashed publish's residue failed")
     spark.catalog.clearCache()
   }

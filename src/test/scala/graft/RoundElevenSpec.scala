@@ -223,18 +223,19 @@ class RoundElevenSpec extends SparkTestBase {
     "NoSuchFileException; resolveCatalog guards the line count") {
     import ops.Incremental
     val cat = graft.Scratch.dir("graft_r11_cat") + "/stores.catalog"
-    Incremental.publishCatalog(cat, Seq("a0", "b0", "c0"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("a0", "b0", "c0"))
     val failures = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val writers = (1 to 2).map { w =>
       new Thread(() => {
         try (1 to 200).foreach { i =>
-          Incremental.publishCatalog(cat, Seq(s"a$w$i", s"b$w$i", s"c$w$i"))
+          Incremental.commitCatalogCas(cat, maxAttempts = 100)((_, _) =>
+            Seq(s"a$w$i", s"b$w$i", s"c$w$i"))
         } catch { case t: Throwable => failures.compareAndSet(null, t) }
       })
     }
     val reader = new Thread(() => {
       try (1 to 400).foreach { _ =>
-        val (a, b, c) = Incremental.resolveStoreCatalog(cat)
+        val Seq(a, b, c) = Incremental.resolveCatalog(cat, expect = 3)
         // a complete triple shares one (writer, i) suffix — never a blend
         assert(a.stripPrefix("a") == b.stripPrefix("b") &&
           b.stripPrefix("b") == c.stripPrefix("c"), s"torn read: $a/$b/$c")

@@ -164,7 +164,7 @@ class RoundFifteenSpec extends SparkTestBase {
       Dedup.reuse(Similarity.ivfAssign(e)), "xmaint_gen1", nBuckets = 8,
       at = Some(("graft_xmaint_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
-    Incremental.publishCatalogVersioned(cat,
+    Incremental.commitCatalogCas(cat)((_, _) =>
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))
 
     val ready = s"$work/child.ready"
@@ -235,7 +235,7 @@ class RoundFifteenSpec extends SparkTestBase {
       Dedup.reuse(Similarity.ivfAssign(e)), "orphdir_gen1", nBuckets = 8,
       at = Some(("graft_orphdir_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
-    Incremental.publishCatalogVersioned(cat,
+    Incremental.commitCatalogCas(cat)((_, _) =>
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))
 
     // debris: a dead maintainer's lost-race landing zone (old), and an
@@ -337,7 +337,7 @@ class RoundFifteenSpec extends SparkTestBase {
       Dedup.reuse(Similarity.ivfAssign(e)), "xstream_gen1", nBuckets = 8,
       at = Some(("graft_xstream_gen1_" + Scratch.nameTag().take(16), s"$work/gen1")))
     val cat = s"$work/store.catalog"
-    Incremental.publishCatalogVersioned(cat,
+    Incremental.commitCatalogCas(cat)((_, _) =>
       Seq(Incremental.exportHandle(spark, gen1).encoded, "8"))
 
     // the foreign maintainer: takedown compaction in its own JVM,

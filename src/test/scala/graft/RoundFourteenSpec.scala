@@ -27,7 +27,7 @@ class RoundFourteenSpec extends SparkTestBase {
     "a flipped byte with the RIGHT line count, and a missing trailer " +
     "all refuse to resolve") {
     val cat = newCat("r14_torn")
-    Incremental.publishCatalogVersioned(cat, Seq("table_a", "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("table_a", "8"))
     // sanity: intact file resolves
     assert(Incremental.resolveCatalogVersion(cat, 1, expect = 2)
       === Seq("table_a", "8"))
@@ -68,7 +68,7 @@ class RoundFourteenSpec extends SparkTestBase {
     "loudly (its references are unknowable); a torn DEAD version is kept " +
     "as the investigation record while the rest of the window reclaims") {
     val cat = newCat("r14_gctorn")
-    (1 to 4).foreach(i => Incremental.publishCatalogVersioned(cat, Seq(s"g$i-meta")))
+    (1 to 4).foreach(i => Incremental.commitCatalogCas(cat)((_, _) => Seq(s"g$i-meta")))
     // torn LIVE version (v4 in the retain=2 window): sweep must abort
     val f4 = histFile(cat, 4)
     val intact4 = java.nio.file.Files.readAllBytes(f4)
@@ -97,7 +97,7 @@ class RoundFourteenSpec extends SparkTestBase {
     "absorbed; a PERSISTENTLY torn latest surfaces as livelock with the " +
     "read failure as cause") {
     val cat = newCat("r14_retry")
-    Incremental.publishCatalogVersioned(cat, Seq("base"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("base"))
     // simulate a rival's CREATE_NEW claim caught mid-write: the v2 slot
     // exists but its bytes are partial (no checksum trailer yet)
     val v2 = histFile(cat, 2)
@@ -138,8 +138,8 @@ class RoundFourteenSpec extends SparkTestBase {
     spark.range(3).createOrReplaceTempView(viewName)
     val dir = Scratch.dir("graft_r14_leakable")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "blob"), "x".getBytes)
-    Incremental.publishCatalogVersioned(cat, Seq(viewName, dir))
-    Incremental.publishCatalogVersioned(cat, Seq("g2-meta"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(viewName, dir))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("g2-meta"))
 
     assert(Incremental.gcCatalogHistory(spark, cat, retain = 1) === Seq.empty,
       "a version with a failed handle must NOT report reclaimed")
@@ -159,7 +159,7 @@ class RoundFourteenSpec extends SparkTestBase {
     "racing release are both 'released' — the sweep proceeds instead of " +
     "aborting, and intact leases still protect") {
     val cat = newCat("r14_pins")
-    (1 to 3).foreach(i => Incremental.publishCatalogVersioned(cat, Seq(s"g$i-meta")))
+    (1 to 3).foreach(i => Incremental.commitCatalogCas(cat)((_, _) => Seq(s"g$i-meta")))
     Incremental.acquireCatalogPin(cat, 1, "good-reader", leaseMs = 600000)
     // a malformed lease file (a crashed writer's garbage)
     val pd = java.nio.file.Paths.get(cat + ".pins")
@@ -238,7 +238,7 @@ class RoundFourteenSpec extends SparkTestBase {
     "generation") {
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
     val cat = newCat("r14_slowbatch")
-    Incremental.publishCatalogVersioned(cat, Seq("gen1-handle"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("gen1-handle"))
     val chk = Scratch.dir("graft_r14_slow_chk")
     @volatile var reads = List.empty[(Long, String)]
     val q = spark.readStream.format("rate").option("rowsPerSecond", "5").load()

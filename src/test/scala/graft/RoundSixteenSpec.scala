@@ -97,7 +97,7 @@ class RoundSixteenSpec extends SparkTestBase {
     val before = spark.table(t).orderBy($"k").collect().toSeq
     spark.sql(s"DROP TABLE `$t`"): Unit // external: files survive
     val cat = newCat("r16_unsorted")
-    Incremental.publishCatalogVersioned(cat, Seq(h.encoded, "4"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(h.encoded, "4"))
     val resolved = Incremental.resolvePortableCatalog(spark, cat, expect = 2)
     assert(resolved === Seq(t, "4"),
       "the handle line must RESOLVE to the table name, not pass through")
@@ -113,7 +113,7 @@ class RoundSixteenSpec extends SparkTestBase {
     "IllegalArgumentException thrown by `update` propagates after exactly " +
     "one invocation instead of surfacing as a 10-attempt 'livelock'") {
     val cat = newCat("r16_updbug")
-    Incremental.publishCatalogVersioned(cat, Seq("table_a", "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("table_a", "8"))
     var calls = 0
     val boom = intercept[IllegalArgumentException] {
       Incremental.commitCatalogCas(cat) { (_, lines) =>
@@ -138,8 +138,8 @@ class RoundSixteenSpec extends SparkTestBase {
     "catalog un-wedges — while a YOUNG torn slot (possible in-flight " +
     "writer) and a torn DEAD slot are both left alone") {
     val cat = newCat("r16_crash")
-    Incremental.publishCatalogVersioned(cat, Seq("gen1", "8"))
-    Incremental.publishCatalogVersioned(cat, Seq("gen2", "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("gen1", "8"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("gen2", "8"))
 
     // simulate the crash: the v3 slot file exists (CREATE_NEW won) but
     // the content/checksum never landed — zero bytes, like a publisher
@@ -190,7 +190,7 @@ class RoundSixteenSpec extends SparkTestBase {
     "as released, but an UNEXPECTED I/O error on a lease aborts the scan " +
     "(and hence the retention sweep) instead of silently unpinning") {
     val cat = newCat("r16_pins")
-    (1 to 3).foreach(i => Incremental.publishCatalogVersioned(cat, Seq(s"g$i")))
+    (1 to 3).foreach(i => Incremental.commitCatalogCas(cat)((_, _) => Seq(s"g$i")))
     Incremental.acquireCatalogPin(cat, 1, "live-reader", leaseMs = 60000)
 
     val pd = java.nio.file.Paths.get(cat + ".pins")
@@ -226,7 +226,7 @@ class RoundSixteenSpec extends SparkTestBase {
     "retention sweep reclaims, and no .crc sidecars pollute the history") {
     val cat = newCat("r16_hadoopfs")
     val hfs = Incremental.HadoopFsCommitter
-    Incremental.publishCatalogVersioned(cat, Seq("base"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("base"))
     (1 to 5).foreach { i =>
       val (v, _) = Incremental.commitCatalogCas(cat, committer = hfs) {
         (_, lines) => lines :+ s"gen$i"
@@ -330,9 +330,9 @@ class RoundSixteenSpec extends SparkTestBase {
     "store it does not govern") {
     val work = Scratch.dir("graft_r16_plainname")
     val cat = s"$work/store.catalog"
-    // the default writeIvfIndex/publishCatalogVersioned flow: lines are
-    // plain metastore table names + scalar metadata, no handles
-    Incremental.publishCatalogVersioned(cat,
+    // the default writeIvfIndex flow: lines are plain metastore
+    // table names + scalar metadata, no handles
+    Incremental.commitCatalogCas(cat)((_, _) =>
       Seq("graft_plain_gen1", "8", "schema=v2"))
     val gen = java.nio.file.Paths.get(s"$work/gen1")
     java.nio.file.Files.createDirectories(gen)
@@ -352,7 +352,7 @@ class RoundSixteenSpec extends SparkTestBase {
     val t = "graft_r16_handle_" + Scratch.nameTag().take(16)
     (1 to 10).map(i => (i.toLong, i.toString)).toDF("k", "v")
       .write.bucketBy(2, "k").option("path", s"$work/gen2").saveAsTable(t)
-    Incremental.publishCatalogVersioned(cat,
+    Incremental.commitCatalogCas(cat)((_, _) =>
       Seq(Incremental.exportHandle(spark, t).encoded, "8", "schema=v2"))
     val orphan = java.nio.file.Paths.get(s"$work/dead_gen")
     java.nio.file.Files.createDirectories(orphan)

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * commit (compare-and-swap on the version the publisher based its
   * update on, atomic hard-link claim on the version slot) and these
   * drills prove the three contracts the r11 verdict demanded:
-  * the lost-update anomaly EXISTS under plain last-writer-wins publish,
-  * it is IMPOSSIBLE under CAS (the stale publisher fails loudly), and
+  * the lost-update anomaly EXISTS under a blind (basis-ignoring)
+  * commit, it is IMPOSSIBLE under CAS (the stale publisher fails
+  * loudly), and
   * genuinely concurrent racing publishers all survive via re-read +
   * re-apply + retry — including the real-store race (ingest append vs
   * takedown compaction) where the final probe content must contain BOTH
@@ -24,22 +25,23 @@ class RoundThirteenSpec extends SparkTestBase {
     "stale CAS publish fails loudly instead, and the retry composes " +
     "both updates") {
     // --- the anomaly, demonstrated: both publishers snapshot v1, then
-    // publish blindly; the second silently erases the first's update
+    // commit blindly (the update ignores its basis); the second
+    // silently erases the first's update
     val plain = newCat("r13_plain")
-    Incremental.publishCatalogVersioned(plain, Seq("base"))
+    Incremental.commitCatalogCas(plain)((_, _) => Seq("base"))
     val snapA = Incremental.resolveCatalog(plain, expect = 1)
     val snapB = Incremental.resolveCatalog(plain, expect = 1)
-    Incremental.publishCatalogVersioned(plain, snapA :+ "ingest")
-    Incremental.publishCatalogVersioned(plain, snapB :+ "compact")
+    Incremental.commitCatalogCas(plain)((_, _) => snapA :+ "ingest")
+    Incremental.commitCatalogCas(plain)((_, _) => snapB :+ "compact")
     val lost = Incremental.resolveCatalog(plain, expect = 2)
     assert(lost === Seq("base", "compact"),
-      "plain publish should exhibit last-writer-wins")
+      "a blind commit should exhibit last-writer-wins")
     assert(!lost.contains("ingest"), "the ingest update is LOST — the anomaly")
 
     // --- under CAS the same interleave cannot lose the update: the
     // stale second publisher conflicts, re-reads, re-applies
     val cas = newCat("r13_cas")
-    Incremental.publishCatalogVersioned(cas, Seq("base"))
+    Incremental.commitCatalogCas(cas)((_, _) => Seq("base"))
     val v1 = Incremental.currentCatalogVersion(cas)
     assert(v1 === 1)
     val base = Incremental.readCatalogVersion(cas, v1)
@@ -72,7 +74,7 @@ class RoundThirteenSpec extends SparkTestBase {
       // 20 rounds of a 2-thread same-slot race; a non-atomic claim would
       // let both 'win' (or corrupt the slot) at least once
       val cat = newCat(s"r13_slot_${committer.name}")
-      Incremental.publishCatalogVersioned(cat, Seq("g1"))
+      Incremental.commitCatalogCas(cat)((_, _) => Seq("g1"))
       (1 to 20).foreach { round =>
         val expected = Incremental.currentCatalogVersion(cat)
         val start = new java.util.concurrent.CountDownLatch(1)
@@ -107,7 +109,7 @@ class RoundThirteenSpec extends SparkTestBase {
       "commitCatalogCas: every update survives, versions are contiguous, " +
       "and the pointer converges to the latest generation") {
       val cat = newCat(s"r13_many_${committer.name}")
-      Incremental.publishCatalogVersioned(cat, Seq("base"))
+      Incremental.commitCatalogCas(cat)((_, _) => Seq("base"))
       val start = new java.util.concurrent.CountDownLatch(1)
       val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val ts = (1 to 8).map { i =>
@@ -147,7 +149,7 @@ class RoundThirteenSpec extends SparkTestBase {
     }
     val cat = newCat("r13_orphan")
     val t1 = mkTable("g1", col("id") % 2 === 0)
-    Incremental.publishCatalogVersioned(cat, Seq(t1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1))
     // the d69 interleave: two publishers base on v1; the loser's table
     // is materialized but its stale CAS fails — the orphan
     val baseV = Incremental.currentCatalogVersion(cat)
@@ -191,8 +193,8 @@ class RoundThirteenSpec extends SparkTestBase {
     val cat = newCat("r13_lease")
     // scalar metadata lines — GC reclaims the history version itself
     // without touching any store (the path-classification guard)
-    Incremental.publishCatalogVersioned(cat, Seq("g1-meta"))
-    Incremental.publishCatalogVersioned(cat, Seq("g2-meta"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("g1-meta"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("g2-meta"))
     Incremental.acquireCatalogPin(cat, version = 1, holder = "slow-reader",
       leaseMs = 600000)
     assert(Incremental.activeCatalogPins(cat) === Map("slow-reader" -> 1))
@@ -227,7 +229,7 @@ class RoundThirteenSpec extends SparkTestBase {
     "two consumers pinned to different dead-window generations both " +
     "survive, and each release exposes exactly its own generation") {
     val cat = newCat("r13_multi")
-    (1 to 4).foreach(i => Incremental.publishCatalogVersioned(cat, Seq(s"g$i")))
+    (1 to 4).foreach(i => Incremental.commitCatalogCas(cat)((_, _) => Seq(s"g$i")))
     Incremental.acquireCatalogPin(cat, 1, "reader-a", leaseMs = 600000)
     Incremental.acquireCatalogPin(cat, 2, "reader-b", leaseMs = 600000)
     // retain=1 would reclaim v1..v3; the two leases keep v1 and v2
@@ -247,7 +249,7 @@ class RoundThirteenSpec extends SparkTestBase {
     "with a publisher storm and never reclaims the current generation " +
     "or loses an update") {
     val cat = newCat("r13_gcrace")
-    Incremental.publishCatalogVersioned(cat, Seq("base"))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq("base"))
     val start = new java.util.concurrent.CountDownLatch(1)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val pubs = (1 to 6).map { i =>
@@ -376,7 +378,7 @@ class RoundThirteenSpec extends SparkTestBase {
     val t1 = s"graft_band_r13${committer.name.take(2)}_" + Scratch.nameTag()
     Dedup.writeBandIndex(spark, buckets.filter(!isBatch), t1)
     val cat = newCat(s"r13_store_${committer.name}")
-    Incremental.publishCatalogVersioned(cat, Seq(t1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1))
 
     val tomb = docs.filter(col("doc_id") % 7 === 1).select(col("doc_id").as("id"))
     val start = new java.util.concurrent.CountDownLatch(1)

@@ -415,7 +415,7 @@ class RoundTwelveSpec extends SparkTestBase {
     val noTomb = Tables.documents(spark, sf0001)
       .select(col("doc_id").as("id")).limit(0)
     val t3 = Dedup.compactBandIndex(spark, t2, noTomb, "r12gc")
-    Incremental.publishCatalogVersioned(cat, Seq(t3))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t3))
     val dropped = Incremental.gcCatalogHistory(spark, cat, retain = 2)
     assert(dropped == Seq(1), s"GC reclaimed $dropped, expected Seq(1)")
 
@@ -446,6 +446,12 @@ class RoundTwelveSpec extends SparkTestBase {
     val tSmall = Incremental.resolveCatalog(Dedup.d67Catalog, expect = 1).head
     assert(spark.table(tSmall).count() == small.getLong(0),
       "holding gate still rewrote the store")
+    // every catalog a query publishes has a history: the held gate
+    // committed exactly one generation, and the pointer mirrors it
+    assert(Incremental.catalogVersions(Dedup.d67Catalog) == Seq(1))
+    assert(Incremental.resolveCatalog(Dedup.d67Catalog, expect = 1) ==
+      Incremental.readCatalogVersion(Dedup.d67Catalog,
+        Incremental.currentCatalogVersion(Dedup.d67Catalog)))
 
     val big = SparkEntry.queries("d67_reclamation_gated_compaction")(
       spark, "/root/testdata/sf0.1").collect().head
@@ -509,7 +515,7 @@ class RoundTwelveSpec extends SparkTestBase {
     }
     val cat = graft.Scratch.dir("graft_r12_gccrash") + "/store.catalog"
     val t1 = freshTable("gcc1")
-    Incremental.publishCatalogVersioned(cat, Seq(t1))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t1))
     // the crash window: v2's history lands but the pointer swap never
     // ran — the pointer still names v1's generation
     val t2 = freshTable("gcc2")
@@ -528,9 +534,9 @@ class RoundTwelveSpec extends SparkTestBase {
     // partial-crash idempotence: a GC that died after dropping the
     // table but before deleting the history entry converges on retry
     val t3 = freshTable("gcc3")
-    Incremental.publishCatalogVersioned(cat, Seq(t3))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t3))
     val t4 = freshTable("gcc4")
-    Incremental.publishCatalogVersioned(cat, Seq(t4))
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(t4))
     // simulate the torn state for the oldest version: table gone, entry kept
     val victim = Incremental.resolveCatalogVersion(cat,
       Incremental.catalogVersions(cat).head, expect = 1).head
