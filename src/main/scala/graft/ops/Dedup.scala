@@ -143,15 +143,12 @@ object Dedup {
     * benchmark/eval suite is tiny relative to the corpus, so its digest
     * rides a broadcast and the corpus side never shuffles a gram. A
     * deployment feeding a corpus-scale "benchmark" sets
-    * `graft.decontam.broadcastBench=false` (legacy spelling
-    * `graft.pipeline.broadcastBench` still honored) to take the
-    * shuffled hash join instead — identical rows, and A/B-measured
+    * `graft.decontam.broadcastBench=false` to take the shuffled hash
+    * join instead — identical rows, and A/B-measured
     * ~0.97× on p01's stage 7 at 500k docs, so the knob exists to keep
     * the driver alive, not to trade speed. */
   private[graft] def benchSide(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val bcast = conf.getOption("graft.decontam.broadcastBench")
-      .orElse(conf.getOption("graft.pipeline.broadcastBench"))
+    val bcast = df.sparkSession.conf.getOption("graft.decontam.broadcastBench")
       .forall(_.toBoolean)
     if (bcast) broadcast(df) else df
   }
@@ -206,7 +203,7 @@ object Dedup {
     * (default 0 = off). The per-bucket cap bounds the WORST key, but on
     * a collision-dense corpus (saturated shingle vocabulary, templated
     * text) the edge total still grows super-linearly through many
-    * medium buckets — ScaleProbeDedup measured d08's candidate edges
+    * medium buckets — BENCH_SCALE_r11.json measured d08's candidate edges
     * growing 8.6× at 10× docs, and every edge also pays verification
     * downstream. When set, the budget derives the LARGEST bucket-size
     * threshold t whose cumulative pair count fits (greedy from the
@@ -811,7 +808,7 @@ object Dedup {
     * on collision-dense corpora the TOTAL edge count is the real cost
     * driver (measured 8.6× at 10× docs on the saturated-vocab probe) —
     * the `graft.dedup.maxCandidateEdges` budget is the operational lever
-    * there ([[edgeBudgetCap]]; priced in ScaleProbeDedup). */
+    * there ([[edgeBudgetCap]]; priced in BENCH_SCALE_r11.json). */
   private val d08 = Q(
     "d08_dedup_groups",
     """WITH RECURSIVE docs AS (
@@ -3423,8 +3420,8 @@ object Dedup {
     * must exist. On a corpus with ~uniform shingle frequencies every
     * prefix bucket is corpus_size/universe docs and the candidate stage
     * goes quadratic even when the true result is tiny (the ScaleProbe
-    * generator is exactly that degenerate case — see its exclusion
-    * note). Real text is Zipfian (t32 fits the fixture's curve); for
+    * generator is exactly that case: d54 runs out of memory on its 50k
+    * docs). Real text is Zipfian (t32 fits the fixture's curve); for
     * non-text or adversarial inputs, use the capped LSH family
     * (d03/d15), which bounds work by trading recall. */
   private val d54 = Q(

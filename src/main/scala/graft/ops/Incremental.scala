@@ -126,7 +126,7 @@ object Incremental {
       ELSE text END"""
   }
 
-  /** The plant expression, exposed for the profile/scale probes. */
+  /** The plant expression, for IncrementalSpec and the p02 probes. */
   private[graft] def plantSqlForProbe: String = plantSql
 
   /** The planted corpus view both p02 and its streaming twin s31 run on. */
@@ -168,8 +168,7 @@ object Incremental {
   }
 
   /** One delta of the batch pipeline: select the arrival split and admit
-    * it. Exposed private[graft] for the scale probe, which times store
-    * init and each delta separately. */
+    * it. IncrementalSpec and P02Profile run it against their own stores. */
   private[graft] def deltaStep(s: SparkSession, docs: DataFrame, k: Int,
       idxTable: String, exDir: String, shDir: String): (DataFrame, DataFrame) =
     admitBatch(s,
@@ -1214,18 +1213,21 @@ object Incremental {
     // conflict, detected one step later
     if (!committer.claim(versionFile(path, v), versionFileBytes(lines)))
       throw new CatalogCasConflict(path, expectedVersion, v)
-    syncCatalogPointer(path)
+    syncCatalogPointer(path, v, lines)
     v
   }
 
-  /** Re-derives the pointer file from the LATEST history version, looping
-    * until the write landed for the version that is still latest. The
-    * pointer is a convergent cache: two CAS winners syncing out of order
-    * both re-check and the later content wins; pointer
-    * ([[resolveCatalog]]) readers stay at most one converging write behind,
-    * while version-aware readers never see a torn state at all. */
-  private def syncCatalogPointer(path: String): Unit = {
-    var settled = false
+  /** Writes the pointer from the lines just claimed as `v`, then lists
+    * the history once to confirm `v` is still latest. It must list: a
+    * stat of `v+1` cannot prove that, since with `v` pinned
+    * `gcCatalogHistory(retain = 1)` can reclaim `v+1` while `v+2` lives.
+    * If a rival moved on, re-derives the pointer from the LATEST version
+    * until the write landed for the version still latest: the pointer is
+    * a convergent cache, at most one converging write behind, and
+    * version-aware readers never see a torn state. */
+  private def syncCatalogPointer(path: String, v: Int, lines: Seq[String]): Unit = {
+    publishCatalog(path, lines)
+    var settled = currentCatalogVersion(path) == v
     var tries = 0
     while (!settled && tries < 1000) {
       tries += 1

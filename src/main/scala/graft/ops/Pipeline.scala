@@ -258,9 +258,8 @@ object Pipeline {
     // the corpus (1/7 of it), so the broadcast grows with the input
     // here — fine at test SFs, wrong for a deployment whose
     // "benchmark" is actually corpus-scale; such a deployment sets
-    // graft.decontam.broadcastBench=false (legacy
-    // graft.pipeline.broadcastBench honored) for the shuffled hash
-    // join (identical rows, AQE picks the build side, measured 0.97×).
+    // graft.decontam.broadcastBench=false for the shuffled hash join
+    // (identical rows, AQE picks the build side, measured 0.97×).
     val benchSide = Dedup.benchSide(bench)
     // ONE gram pass: a left join against the (at-most-one-match) distinct
     // benchmark set tags each corpus gram in place, so n_g and n_h come

@@ -1130,9 +1130,9 @@ object Similarity {
     * top-k cosine neighbors within its IVF cell. `numCents` is THE scale
     * knob — in-cell pair work is Σn_c², so cells must grow with the
     * corpus to keep cell population (and per-vector candidate cost)
-    * constant; ScaleProbe measures exactly that (8 cells at 10× corpus
-    * go quadratic, 10× cells restore the ratio). Parametric so probes
-    * can exercise the knob; d32 pins (8, 3) for its oracle. */
+    * constant; BENCH_SCALE_r06.json's `knn_cells_knob` measured that (8
+    * cells at 10× corpus go quadratic, 10× cells restore the ratio).
+    * Parametric so probes can exercise the knob; d32 pins (8, 3). */
   private[graft] def knnEdges(e0: DataFrame, numCents: Int, k: Int): DataFrame = {
     graft.functions.LongDot.register(e0.sparkSession)
     graft.plans.TopKPerGroup.install(e0.sparkSession)
@@ -1535,7 +1535,7 @@ object Similarity {
     * so file-level parallelism grows with the logical layout. This is
     * THE vector-tier scale lever: per-cell population (and therefore
     * per-probe candidate cost) stays constant only if cells grow with
-    * the corpus — ScaleProbePqCells measured the 8-cell probe at
+    * the corpus — BENCH_SCALE_r12.json measured the 8-cell probe at
     * 74.9× under a 100× corpus and the re-laid index back at 2.17×. */
   def migrateIvfIndexCells(s: org.apache.spark.sql.SparkSession,
       table: String, numCents: Int, tag: String,
@@ -1720,7 +1720,7 @@ object Similarity {
     * append that dropped, duplicated, or mis-bucketed a vector surfaces
     * as a ranking mismatch. RoundElevenSpec additionally proves
     * probe-after-append ≡ probe-after-rebuild byte-equality and the
-    * appended table's bucket-aware scan; ScaleProbeLifecycle prices
+    * appended table's bucket-aware scan; BENCH_SCALE_r11.json prices
     * append ∝ batch vs rebuild ∝ corpus. */
   private val d60 = Q(
     "d60_ivf_append",
@@ -2390,7 +2390,7 @@ object Similarity {
     * (census → pinned budget → bounded sizing ladder → gated migration)
     * on the IVF cell axis, closing the one measured 100× pathology that
     * still had a MANUAL trigger: probe cost under a fixed cell count is
-    * per-cell-population-linear (ScaleProbePqCells: 74.9× at 100× under
+    * per-cell-population-linear (BENCH_SCALE_r12.json: 74.9× at 100× under
     * 8 cells; 2.17× after re-laying at the grown count). The census is
     * ONE map-side-combined aggregation over the stored bucketed index
     * (total rows, non-empty cells, largest cell — the skew signal); the
@@ -2535,7 +2535,7 @@ object Similarity {
   @volatile private[graft] var d73Catalog: String = _
 
   /** d74 — COMPRESSED-TIER growth gate, the COMPOSED automation of the
-    * measured cure (ScaleProbeR13b: fixed-8-cells compressed probe
+    * measured cure (BENCH_SCALE_r13.json: fixed-8-cells compressed probe
     * 88.6 s at a 100× corpus → 11.9 s after cell migration + re-encode):
     * d73 gates the RAW tier, but the tier that actually serves a 100 TB
     * corpus is the compressed one, and its probe cost is per-cell
@@ -2767,7 +2767,7 @@ object Similarity {
     * [[probeIvfPqTopK]]'s refine step fetches candidate vectors with
     * `corpus.join(broadcast(cand))` — a broadcast probe whose BUILD side
     * is tiny but whose STREAM side scans the whole corpus, and
-    * ScaleProbeR13b measured exactly that residual: after the d74 cell
+    * BENCH_SCALE_r13.json measured exactly that residual: after the d74 cell
     * cure the fixed-query compressed probe's remaining cost is the
     * corpus-∝ refine fetch. At 100 TB that is the funnel's bottleneck.
     *
@@ -2789,7 +2789,7 @@ object Similarity {
     * corpus-fetch row-for-row and that the pruned scan touches fewer
     * buckets than the table has.
     *
-    * Priced honestly (ScaleProbeR15, 200k vectors at 1024 cells): the
+    * Priced honestly (BENCH_SCALE_r13.json, 200k vectors, 1024 cells): the
     * saving is VOLUMETRIC — the pruned scan's bytes are nprobe/cells of
     * the tier — while the pruned scan's WALL at toy scale is
     * task-launch-bound, because Spark schedules one task per bucket

@@ -1427,11 +1427,12 @@ object StreamingQueries {
     // the batch against the broadcast INTERSECTION — semantically
     // identical to anti-joining the whole store, restricted to batch
     // rows, but the exchange carries ≤|batch| keys instead of the store
-    // (the d15 probe discipline applied to frontier state; at
-    // ScaleProbeS30's 455k-key store the wall delta is inside the drift
-    // band — the candidate-restricted digest semi-join dominates there —
-    // but the store-SHUFFLE term this removes is the one that grows
-    // with frontier state, and both routes still pay the narrow scan)
+    // (the d15 probe discipline applied to frontier state; at the
+    // 455k-key s30 store of BENCH_SCALE_r09.json the wall delta is
+    // inside the drift band — the candidate-restricted digest semi-join
+    // dominates there — but the store-SHUFFLE term this removes is the
+    // one that grows with frontier state, and both routes still pay the
+    // narrow scan)
     val batchKeys = withCu.select("cu").distinct()
     val seenHits = seen.join(broadcast(batchKeys), Seq("cu"))
     val fresh = withCu.join(broadcast(seenHits), Seq("cu"), "left_anti")

@@ -27,8 +27,8 @@ class RoundTenSpec extends SparkTestBase {
 
   test("Dedup.benchSide routes the benchmark join by conf: forced " +
     "broadcast by default (the tiny-benchmark premise), a real shuffled " +
-    "join under graft.decontam.broadcastBench=false (or the legacy " +
-    "pipeline spelling), identical rows on both routes") {
+    "join under graft.decontam.broadcastBench=false, identical rows on " +
+    "both routes") {
     import ops.Dedup
     val corpus = spark.range(0, 2000).select(
       col("id").as("doc_id"), (col("id") % 97).as("gh"))
@@ -58,12 +58,6 @@ class RoundTenSpec extends SparkTestBase {
         assert(!hasBroadcastJoin(q2),
           "conf=false still forced a broadcast — the driver-OOM path is back")
         assert(rows(q2) == expected, "shuffled route changed the rows")
-      }
-      // the legacy p01 spelling keeps working (probes/docs reference it)
-      withConfs("graft.pipeline.broadcastBench" -> "false") {
-        val q3 = corpus.join(Dedup.benchSide(bench), "gh")
-        assert(!hasBroadcastJoin(q3), "legacy conf spelling ignored")
-        assert(rows(q3) == expected)
       }
     }
   }

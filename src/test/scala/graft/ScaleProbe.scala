@@ -2,23 +2,34 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** One scaling datapoint beyond sf0.1 (round-6 item 8): synthesizes an
-  * sf1-EQUIVALENT documents corpus (50,000 docs — 10× sf0.1) with the
-  * fixture's measured statistics — the same 31-word vocabulary, 10-100
-  * token uniform lengths, 20 sources, and the same 0.16% exact-duplicate
-  * rate — deterministically from md5 (no RNG), then times the three
-  * heaviest dedup pipelines at 5k and 50k docs. Near-linear growth here
-  * means no hidden candidate-pair blowup: LSH bucket population is the
-  * quadratic hazard, and it is driven by the vocabulary/length profile
-  * this generator reproduces.
+/** The scale probe: times `SparkEntry` queries on the sf0.1 fixture and
+  * on synthetic corpora `f`× bigger, and prints one JSON line of
+  * per-query walls, wall ratios and row counts. Near-linear ratios mean
+  * no plan hides a super-linear stage (LSH bucket population, cell
+  * population, candidate pairs) that the fixture is too small to show.
   *
-  * Run: sbt 'Test/runMain graft.ScaleProbe'; the JSON line is copied into
-  * BENCH_SCALE_r06.json and summarized in SURVEY §6.
+  * At each factor `f` the corpus is [[synthCorpus]] with 5000·f docs,
+  * 2000·f vectors and vocabulary round(31·f^(1/3)) (67 at 10×, 144 at
+  * 100×), in 8 partitions below 100× and 32 from 100×. A selected
+  * q-family query runs on [[synthStar]]'s star schema at the same
+  * scale instead. Method, as `Bench`: one warm pass at sf0.001, then
+  * the min of 2 `clearCache`+`gc` reps of `.count()` per query and data
+  * size. Ratios of d45/d48 (their benchmark grows with the corpus) and
+  * d54 (quadratic on this uniform generator) measure the data, not the
+  * operator.
+  *
+  * Run: sbt "Test/runMain graft.ScaleProbe <prefixes> [factors]", e.g.
+  * `d03,d08,d15,d22 10` or `t53 10,100`. `<prefixes>` is a comma list
+  * matched against the `SparkEntry.queries` keys; `[factors]` defaults
+  * to 10. Recorded runs are in BENCH_SCALE_r*.json.
   */
 object ScaleProbe {
 
+  /** The fixture root the sf0.1 baseline and the warm pass read. */
+  private val Fixtures = "/root/testdata"
+
   /** md5-derived positive long — the probe's deterministic "RNG". */
-  def h(seed: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def h(seed: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(seed), 1, 7), 16, 10).cast("long")
 
   /** Synthesize an n-doc corpus (+ nVecs embeddings) with the sf0.1
@@ -39,8 +50,8 @@ object ScaleProbe {
     * vocab ∝ nDocs^(1/3) holds docs-per-hot-shingle at the fixture's
     * value, which is the "same statistics, more volume" question a scale
     * probe is asking. The fixed-vocab regime is still valuable as a
-    * template-flood stress test — see the bucket-cap knob in
-    * [[ScaleProbe100]]. */
+    * template-flood stress test — see the bucket-cap knob entry of
+    * BENCH_SCALE_r07.json. */
   def synthCorpus(spark: org.apache.spark.sql.SparkSession, nDocs: Long,
       nVecs: Long, dirName: String, parts: Int, vocabSize: Int = 31): String = {
     import spark.implicits._
@@ -75,141 +86,148 @@ object ScaleProbe {
     dir
   }
 
+  /** Synthesize the q-family star schema at `scale`× sf0.1 (at 10×: 6M
+    * lineitem / 1.5M orders / 150k customer / 10k supplier / 1M events)
+    * from md5, keeping each query's selectivity structure (BUILDING ≈
+    * 1/5, date windows inside the generated ranges, 4 lines per order,
+    * overlapping user/customer keys); nation, region and part are the
+    * fixture's own. */
+  def synthStar(spark: org.apache.spark.sql.SparkSession, scale: Int,
+      dirName: String, parts: Int): String = {
+    val dir = Scratch.dir(dirName)
+    val nCust = 15000L * scale
+    val nOrders = 150000L * scale
+    val nLine = nOrders * 4
+    val nSupp = 1000L * scale
+    val nEvents = 100000L * scale
+    // 1995-01-01 .. 1998-01-01 in epoch seconds — every query's date
+    // window (1996-03-15, 1996-07-01 .. +3mo, 1998-03-15) cuts a real
+    // fraction of it, as in the fixture
+    val t0 = 788918400L
+    val span = 94608000L
+
+    spark.range(nCust).select(
+      col("id").as("c_custkey"),
+      concat(lit("Customer#"), col("id")).as("c_name"),
+      (h(concat(col("id"), lit("|cn"))) % 25).cast("int").as("c_nationkey"),
+      ((h(concat(col("id"), lit("|cb"))) % 1099999) / 100.0 - 999.99).as("c_acctbal"),
+      element_at(typedLit(Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "MACHINERY", "HOUSEHOLD")),
+        (h(concat(col("id"), lit("|cm"))) % 5 + 1).cast("int")).as("c_mktsegment"))
+      .repartition(parts).write.mode("overwrite").parquet(s"$dir/customer.parquet")
+
+    spark.range(nSupp).select(
+      col("id").as("s_suppkey"),
+      concat(lit("Supplier#"), col("id")).as("s_name"),
+      (h(concat(col("id"), lit("|sn"))) % 25).cast("int").as("s_nationkey"),
+      ((h(concat(col("id"), lit("|sb"))) % 1099999) / 100.0 - 999.99).as("s_acctbal"))
+      .repartition(parts).write.mode("overwrite").parquet(s"$dir/supplier.parquet")
+
+    spark.range(nOrders).select(
+      col("id").as("o_orderkey"),
+      (h(concat(col("id"), lit("|oc"))) % nCust).as("o_custkey"),
+      element_at(typedLit(Seq("O", "F", "P")),
+        (h(concat(col("id"), lit("|os"))) % 3 + 1).cast("int")).as("o_orderstatus"),
+      ((h(concat(col("id"), lit("|ot"))) % 50000000) / 100.0).as("o_totalprice"),
+      (lit(t0) + h(concat(col("id"), lit("|od"))) % span).cast("timestamp").as("o_orderdate"),
+      element_at(typedLit(Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")),
+        (h(concat(col("id"), lit("|op"))) % 5 + 1).cast("int")).as("o_orderpriority"))
+      .repartition(parts).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+
+    spark.range(nLine).select(
+      (col("id") / 4).cast("long").as("l_orderkey"),
+      (h(concat(col("id"), lit("|lp"))) % (20000L * scale)).as("l_partkey"),
+      (h(concat(col("id"), lit("|ls"))) % nSupp).as("l_suppkey"),
+      (col("id") % 4 + 1).cast("int").as("l_linenumber"),
+      (h(concat(col("id"), lit("|lq"))) % 50 + 1).cast("double").as("l_quantity"),
+      ((h(concat(col("id"), lit("|le"))) % 9000000) / 100.0 + 900.0).as("l_extendedprice"),
+      ((h(concat(col("id"), lit("|ld"))) % 11) / 100.0).as("l_discount"),
+      ((h(concat(col("id"), lit("|lt"))) % 9) / 100.0).as("l_tax"),
+      element_at(typedLit(Seq("A", "N", "R")),
+        (h(concat(col("id"), lit("|lr"))) % 3 + 1).cast("int")).as("l_returnflag"),
+      element_at(typedLit(Seq("O", "F")),
+        (h(concat(col("id"), lit("|ll"))) % 2 + 1).cast("int")).as("l_linestatus"),
+      (lit(t0) + h(concat(col("id"), lit("|lsd"))) % span).cast("timestamp").as("l_shipdate"))
+      .repartition(parts).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+
+    spark.range(nEvents).select(
+      col("id").as("event_id"),
+      (lit(t0) + h(concat(col("id"), lit("|et"))) % span).cast("timestamp").as("ts"),
+      (h(concat(col("id"), lit("|eu"))) % nCust).as("user_id"),
+      element_at(typedLit(Seq("click", "view", "purchase", "error")),
+        (h(concat(col("id"), lit("|ek"))) % 4 + 1).cast("int")).as("event_type"),
+      ((h(concat(col("id"), lit("|ev"))) % 100000) / 100.0).as("value"),
+      concat(lit("""{"k":"""), col("id") % 10, lit("}")).as("props"))
+      .repartition(parts).write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+    // tiny dims: the fixture's own
+    for (t <- Seq("nation", "region", "part"))
+      spark.read.parquet(s"$Fixtures/sf0.1/$t.parquet")
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    dir
+  }
+
+  /** The `SparkEntry.queries` keys matching any of the name prefixes
+    * (the `Bench`/`Profile` rule), sorted. A prefix that matches no key
+    * fails loudly instead of silently timing nothing, and an empty one
+    * instead of timing every query. */
+  def select(prefixes: Seq[String]): Seq[String] = {
+    require(prefixes.nonEmpty && prefixes.forall(_.nonEmpty), "empty query prefix")
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    val unmatched = prefixes.filterNot(p => keys.exists(_.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"no SparkEntry query starts with: ${unmatched.mkString(", ")}")
+    keys.filter(k => prefixes.exists(k.startsWith))
+  }
+
+  /** Vocabulary at factor `f`: ∝ docs^(1/3), see [[synthCorpus]]. */
+  def vocabAt(f: Int): Int = math.round(31 * math.cbrt(f.toDouble)).toInt
+
   def main(args: Array[String]): Unit = {
+    require(args.length == 1 || args.length == 2,
+      "usage: ScaleProbe <prefixes> [factors]")
+    val names = select(args(0).split(',').toSeq)
+    val factors = args.lift(1).fold(Seq(10))(_.split(',').toSeq.map(_.toInt))
+    require(factors.forall(_ >= 1), s"factors must be >= 1: ${factors.mkString(",")}")
     val spark = Engine.session(appName = "graft-scale-probe")
+    val sf01 = s"$Fixtures/sf0.1"
 
-    val sf01 = "/root/testdata/sf0.1"
-    // 10× docs; 10× embeddings (20,000 vectors vs sf0.1's 2,000) cover
-    // the clustering/ANN family (d24 k-means, d26 PQ funnel) whose
-    // quadratic hazard is cell/candidate population, not LSH buckets.
-    val n = 50000L
-    val dir = synthCorpus(spark, n, 20000L, "graft_sf1_docs", parts = 8)
+    // per factor, the directory each selected query reads
+    val dirs = factors.map { f =>
+      val parts = if (f < 100) 8 else 32
+      val docs = synthCorpus(spark, 5000L * f, 2000L * f, s"graft_scale_x$f",
+        parts, vocabSize = vocabAt(f))
+      val star = if (names.exists(_.startsWith("q")))
+        synthStar(spark, f, s"graft_scale_star_x$f", parts) else docs
+      f -> ((nm: String) => if (nm.startsWith("q")) star else docs)
+    }
+    names.foreach(nm => SparkEntry.queries(nm)(spark, s"$Fixtures/sf0.001").count())
 
-    val names = Seq("d08_dedup_groups", "d11_simhash_dedup", "d15_verified_dedup_groups",
-      "m05_media_near_dup", "d24_kmeans", "d26_pq_recall",
-      // session-3 additions: the kNN graph (cell-population hazard),
-      // novelty (gram-census join), and PageRank (iterative joins over
-      // the verified-pair graph)
-      "d32_knn_graph", "t23_novelty", "d34_pagerank",
-      // round-7 curation batch: the two corpus-digest ops (segment
-      // census + bigram census/scoring) and the dPS-ranked bucketing,
-      // whose hazard is the single-language sort at fixed lang count
-      "d38_segment_dedup", "t25_dsir_importance", "t26_perplexity_buckets",
-      // round-7 session-2: frame-set dedup (payload-derived digest) and
-      // the cluster-keyed split (d15's full pipeline + the split join)
-      "m07_media_frame_dedup", "t28_leakage_free_split",
-      // round-7 session-3: the bigram-LM trainer/scorer (census-table
-      // math + one stream join) and BPE segmentation (word-type loop;
-      // its cost should be ~flat in corpus size once the census exists)
-      "t29_bigram_lm", "t31_bpe_segment",
-      // round-7 session-4: the Gopher battery (5 tagged gram families in
-      // one explode — the heaviest new census), char entropy (alphabet-
-      // bounded agg), the unigram-LM EM (type-table loop, ~flat once the
-      // census exists), source KL (vocab-bounded after the census), and
-      // the triangle census (wedge fan-out is the quadratic hazard the
-      // degree orientation bounds)
-      "t35_gopher_repetition", "t33_char_entropy", "t37_unigram_segment",
-      "t38_source_divergence", "d41_dup_graph_triangles",
-      // round-7 session-5: URL dedup (string-normalize + hash agg),
-      // mojibake repair (regex-scan cost), train order (shard-bounded
-      // windows over 2× corpus rows), priority sample (TakeOrdered),
-      // and the dedup-rate estimator (two distinct-aggs) — all designed
-      // linear; the probe checks none hides a super-linear stage.
-      // (d45 is EXCLUDED deliberately: its %37 benchmark rule scales the
-      // benchmark with the synthetic corpus, so a probe ratio would
-      // measure the parameterization, not the fixed-benchmark design.)
-      "d46_url_dedup", "t40_mojibake_repair", "t43_train_order",
-      "t44_priority_sample", "d47_dedup_rate_estimate",
-      // d49 soft weights = the full d44/d15 pipeline + a component
-      // census; d48 is excluded for d45's reason — its %7 benchmark
-      // grows with the synthetic corpus, so a ratio would measure the
-      // parameterization, not the fixed-benchmark design.
-      "d49_soft_dedup_weights",
-      // d50 span removal = d22's detection + the interval-merge/rebuild
-      // tail (touches only affected docs)
-      "d50_span_removal",
-      // round-7 session-6: the dHash banded pair join (m10 — band-bucket
-      // population is the quadratic hazard, capped like d03/d11), the
-      // lexical/kappa censuses (t48/t49 — designed-linear one-scan aggs),
-      // the snapshot delta (d51 — id/hash-only full-outer join), and the
-      // cluster-quality contingency (d52 — d24's assignment + a k×L agg).
-      // q76 is EXCLUDED (needs the events fixture the synth corpus lacks;
-      // its day-cell population is bounded by construction), x14/x15
-      // (connector scale is an option knob / a write of the input, not a
-      // corpus-driven cost), src12/q74 (orders/nation fixtures), s26
-      // (streaming — covered by the state-bound specs).
-      "m10_perceptual_hash_dedup", "t48_lexical_diversity",
-      "t49_gate_agreement", "d51_snapshot_delta", "d52_cluster_quality",
-      // session-6 batch 2: index maintenance (the append write is the
-      // cost under test — it must scale with the batch, not the corpus)
-      // and the normalization census (map-side regex + NFC per doc)
-      "d53_index_update", "t50_unicode_normalize",
-      // session-6 closing evals: the lang-id audit (two tiny censuses)
-      // and the mutation curve (5x the corpus shingle digest, linear)
-      "t51_langid_eval", "t52_mutation_sensitivity")
-      // d54 prefix filter is EXCLUDED (measured, not guessed): this
-      // generator draws shingles ~uniformly, so at 50k docs every
-      // 3-gram type sits in ~163 docs and NO shingle is rare — the
-      // rarity skew prefix filtering exploits (real text is Zipfian;
-      // t32 measures the fixture's fit) is absent by construction, the
-      // candidate stage goes quadratic (OOM at 50k) while the TRUE
-      // J≥0.5 result stays tiny. The probe would measure the synthetic
-      // corpus's uniformity, not the operator; d54's scale story is the
-      // docstring's precondition plus the sf0.1 fixture timing.
-    // optional arg: comma-separated subset — incremental probe runs
-    // (new-session ops only) merge into the recorded JSON without
-    // re-timing the whole battery; the kNN knob section is skipped too.
-    val onlyFilter = args.headOption.map(_.split(',').toSet)
-    val selected = onlyFilter.fold(names)(f => names.filter(f))
-    // JIT/codegen warm at the smallest SF (Bench methodology)
-    selected.foreach(nm =>
-      SparkEntry.queries(nm)(spark, "/root/testdata/sf0.001").count())
-
-    def time(nm: String, d: String): (Double, Long) = {
+    def time(nm: String, dir: String): (Double, Long) = {
       val ts = (1 to 2).map { _ =>
         spark.catalog.clearCache(); System.gc()
         val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(nm)(spark, d).count()
+        val rows = SparkEntry.queries(nm)(spark, dir).count()
         ((System.nanoTime() - t0) / 1e9, rows)
       }
       (ts.map(_._1).min, ts.head._2)
     }
-    val entries = selected.map { nm =>
-      val (t5k, r5k) = time(nm, sf01)
-      val (t50k, r50k) = time(nm, dir)
-      val ratio = t50k / t5k
-      s""""$nm":{"sec_5k":${f"$t5k%.2f"},"sec_50k":${f"$t50k%.2f"},""" +
-        s""""ratio":${f"$ratio%.2f"},"rows_5k":$r5k,"rows_50k":$r50k}"""
+    def sec(t: Double) = f"$t%.2f"
+    val entries = names.map { nm =>
+      val (t01, r01) = time(nm, sf01)
+      val at = dirs.map { case (f, dirOf) => (f, time(nm, dirOf(nm))) }
+      println(s"== $nm: sf0.1 ${sec(t01)} s, " +
+        at.map { case (f, (t, _)) => s"${f}x ${sec(t)} s" }.mkString(", "))
+      val walls = at.map { case (f, (t, _)) =>
+        s""""x${f}_sec":${sec(t)},"ratio_${f}x":${sec(t / t01)}""" }
+      val rows = at.map { case (f, (_, r)) => s""""rows_x$f":$r""" }
+      val fields = (s""""sf01_sec":${sec(t01)}""" +: walls) ++
+        (s""""rows_sf01":$r01""" +: rows)
+      s""""$nm":{${fields.mkString(",")}}"""
     }
-    // the kNN-graph cell knob, measured: at FIXED 8 cells a 10× corpus
-    // grows in-cell pair work 100× (quadratic); growing cells WITH the
-    // corpus (80) keeps cell population constant → pair work 10× (the
-    // linear scale path the d32 docstring names). Times via knnEdges
-    // directly — d32's oracle pins 8 cells, the knob is the helper's.
-    def knnTime(d: String, cells: Int): Double = {
-      val e = graft.ops.Dedup.reuse(Tables.embeddings(spark, d)
-        .select(col("vec_id"), graft.ops.Similarity.quantize(col("embedding")).as("v"))
-        .withColumn("n2", graft.ops.Similarity.norm2Q(col("v"))))
-      val ts = (1 to 2).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        graft.ops.Similarity.knnEdges(e, cells, 3).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.min
-    }
-    val knnEntry = if (onlyFilter.isDefined) "" else {
-      val knn2k8 = knnTime(sf01, 8)
-      val knn20k8 = knnTime(dir, 8)
-      val knn20k80 = knnTime(dir, 80)
-      "," +
-        s""""knn_cells_knob":{"sec_2k_8c":${f"$knn2k8%.2f"},""" +
-        s""""sec_20k_8c":${f"$knn20k8%.2f"},"sec_20k_80c":${f"$knn20k80%.2f"},""" +
-        s""""ratio_fixed_cells":${f"${knn20k8 / knn2k8}%.2f"},""" +
-        s""""ratio_scaled_cells":${f"${knn20k80 / knn2k8}%.2f"}}"""
-    }
-    println(s"""{"metric":"scale_10x","docs_small":5000,"docs_large":$n,""" +
-      entries.mkString("\"queries\":{", ",", "}") + knnEntry + "}")
+    println(s"""{"metric":"scale_probe",""" +
+      s""""docs":[${(1 +: factors).map(5000L * _).mkString(",")}],""" +
+      s""""vocab":[${(1 +: factors).map(vocabAt).mkString(",")}],""" +
+      entries.mkString(",") + "}")
     spark.stop()
   }
 }
