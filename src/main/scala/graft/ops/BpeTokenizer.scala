@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *    re-segmentation via a fold expression. Lineage is truncated with a
   *    localCheckpoint every 8 merges so K=1000 doesn't build a
   *    K-deep plan.
-  *  - Mirroring d34's PageRank discipline, a census under
-  *    `graft.bpe.driverThreshold` word types (default 100k — megabytes)
-  *    runs the identical loop driver-side, skipping per-iteration job
-  *    overhead; BpeSpec pins the two routes bit-identical.
+  *  - Mirroring d34's PageRank discipline, a census of at most
+  *    [[DriverThreshold]] word types (100k — megabytes) runs the
+  *    identical loop driver-side, skipping per-iteration job overhead;
+  *    BpeSpec pins the two routes bit-identical.
   *  - Segmentation (t31) never tokenizes the stream: the final symbol
   *    table IS the tokenization of every word type, and per-doc BPE
   *    token counts are one join of the per-doc word census against it —
@@ -52,8 +52,10 @@ import org.apache.spark.sql.functions._
   */
 object BpeTokenizer {
 
-  private def confInt(s: SparkSession, key: String, dflt: Int): Int =
-    s.conf.getOption(key).map(_.toInt).getOrElse(dflt)
+  /** Merge count K the queries learn (t30, t31, t39, t54, s41), and the
+    * word-type count up to which [[learn]] runs driver-side. */
+  private[graft] val Merges = 40
+  private val DriverThreshold = 100000L
 
   /** Word chars as array<string> ("abc" → [a, b, c]). */
   private def charsCol(c: Column): Column =
@@ -118,55 +120,58 @@ object BpeTokenizer {
       words.map(_._1).zip(tab.map(_._1.length)).map { case (w, n) => (w, n) })
   }
 
-  /** Learn K merges from a (word, freq) census. Routes driver-side under
-    * the type-count threshold; both routes return the merge table and
+  /** Learn K merges from a (word, freq) census. Routes driver-side up to
+    * [[DriverThreshold]] types; both routes return the merge table and
     * the final (word, n_tok) segmentation table. */
   private[graft] def learn(s: SparkSession, census: DataFrame, k: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     import s.implicits._
-    val threshold = confInt(s, "graft.bpe.driverThreshold", 100000).toLong
     val cached = Dedup.reuse(census)
-    val nTypes = cached.count()
-    if (nTypes <= threshold) {
+    if (cached.count() <= DriverThreshold) {
       val rows = cached.select(col("word"), col("freq"))
         .as[(String, Long)].collect().sortBy(_._1).toSeq
       val (merges, segs) = learnDriver(rows, k)
       (merges, segs.toDF("word", "n_tok"))
-    } else {
-      var syms = cached
-        .select(col("word"), col("freq"), charsCol(col("word")).as("syms"))
-        .persist()
-      syms.count()
-      val merges = new ArrayBuffer[(Int, String, String, Long)]
-      var rank = 1
-      var done = false
-      while (rank <= k && !done) {
-        val top = syms.filter(size(col("syms")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(syms) - 1), i -> struct(syms[i-1] AS l, syms[i] AS r))"))
-            .as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("n"))
-          .orderBy(col("n").desc, col("l"), col("r"))
-          .limit(1).collect()
-        if (top.isEmpty || top(0).getLong(2) < 2) done = true
-        else {
-          val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((rank, l, r, n))
-          val nextRaw = syms.withColumn("syms", mergeCol(col("syms"), l, r))
-          val next =
-            if (rank % 8 == 0) nextRaw.localCheckpoint(true)
-            else { val p = nextRaw.persist(); p.count(); p }
-          syms.unpersist()
-          syms = next
-          rank += 1
-        }
-      }
-      (merges.toSeq, syms.select(col("word"), size(col("syms")).as("n_tok")))
-    }
+    } else learnDistributed(cached, k)
   }
 
-  private def wordCensus(s: SparkSession, d: String): DataFrame =
+  /** The distributed merge loop over a (word, freq) census: one pair
+    * census + argmax job per merge, lineage truncated every 8 merges. */
+  private[graft] def learnDistributed(census: DataFrame, k: Int)
+      : (Seq[(Int, String, String, Long)], DataFrame) = {
+    var syms = census
+      .select(col("word"), col("freq"), charsCol(col("word")).as("syms"))
+      .persist()
+    syms.count()
+    val merges = new ArrayBuffer[(Int, String, String, Long)]
+    var rank = 1
+    var done = false
+    while (rank <= k && !done) {
+      val top = syms.filter(size(col("syms")) >= 2)
+        .select(col("freq"), explode(expr(
+          "transform(sequence(1, size(syms) - 1), i -> struct(syms[i-1] AS l, syms[i] AS r))"))
+          .as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum(col("freq")).as("n"))
+        .orderBy(col("n").desc, col("l"), col("r"))
+        .limit(1).collect()
+      if (top.isEmpty || top(0).getLong(2) < 2) done = true
+      else {
+        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        merges += ((rank, l, r, n))
+        val nextRaw = syms.withColumn("syms", mergeCol(col("syms"), l, r))
+        val next =
+          if (rank % 8 == 0) nextRaw.localCheckpoint(true)
+          else { val p = nextRaw.persist(); p.count(); p }
+        syms.unpersist()
+        syms = next
+        rank += 1
+      }
+    }
+    (merges.toSeq, syms.select(col("word"), size(col("syms")).as("n_tok")))
+  }
+
+  private[graft] def wordCensus(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
       .filter(length(col("word")) > 0)
@@ -181,23 +186,18 @@ object BpeTokenizer {
     * hash-checked, not just the application. */
   private val t30 = Q.dynamic("t30_bpe_merges") { (s, d) =>
     import s.implicits._
-    val k = confInt(s, "graft.bpe.merges", 40)
-    val (merges, _) = learn(s, wordCensus(s, d), k)
+    val (merges, _) = learn(s, wordCensus(s, d), Merges)
     merges.toDF("rank", "left", "right", "n_pairs")
       .select(col("rank"), col("left"), col("right"),
         concat(col("left"), col("right")).as("merged"), col("n_pairs"))
       .orderBy("rank")
-  } { (s, _) => TokenizerOracles.t30Sql(confInt(s, "graft.bpe.merges", 40)) }
+  } { (_, _) => TokenizerOracles.t30Sql(Merges) }
 
-  /** t31: the corpus segmented with the learned merges — per-doc BPE
-    * token count next to the word count, the compression a tokenizer
+  /** t31's body: the corpus segmented with `k` learned merges — per-doc
+    * BPE token count next to the word count, the compression a tokenizer
     * report needs. The stream is never re-tokenized: the per-doc word
-    * census joins the type-level segmentation, hot words broadcast.
-    * Oracle: DYNAMIC — the learned merge table renders into DuckDB SQL
-    * ([[TokenizerOracles.t31Sql]]) and DuckDB re-segments the corpus
-    * independently, hash-checking the whole application path. */
-  private val t31 = Q.dynamic("t31_bpe_segment") { (s, d) =>
-    val k = confInt(s, "graft.bpe.merges", 40)
+    * census joins the type-level segmentation, hot words broadcast. */
+  private[graft] def segmentDocs(s: SparkSession, d: String, k: Int): DataFrame = {
     val census = Dedup.reuse(wordCensus(s, d))
     val (_, seg) = learn(s, census, k)
     val segDf = Dedup.reuse(seg)
@@ -219,9 +219,16 @@ object BpeTokenizer {
       .agg(sum(col("cnt")).as("n_words"),
         sum(col("cnt") * col("n_tok")).as("n_bpe_tokens"))
       .orderBy("doc_id")
+  }
+
+  /** t31: [[segmentDocs]] at [[Merges]]. Oracle: DYNAMIC — the learned
+    * merge table renders into DuckDB SQL ([[TokenizerOracles.t31Sql]])
+    * and DuckDB re-segments the corpus independently, hash-checking the
+    * whole application path. */
+  private val t31 = Q.dynamic("t31_bpe_segment") { (s, d) =>
+    segmentDocs(s, d, Merges)
   } { (s, d) =>
-    val k = confInt(s, "graft.bpe.merges", 40)
-    val (merges, _) = learn(s, wordCensus(s, d), k)
+    val (merges, _) = learn(s, wordCensus(s, d), Merges)
     TokenizerOracles.t31Sql(merges)
   }
 
@@ -264,7 +271,6 @@ object BpeTokenizer {
     * recursive-apply SQL and DuckDB independently re-segments BOTH
     * populations, recomputes both fertilities, and re-decides the gate. */
   private val t54 = Q.dynamic("t54_tokenizer_drift_census") { (s, d) =>
-    val k = confInt(s, "graft.bpe.merges", 40)
     val docs = Tables.documents(s, d)
     val baseCen = Dedup.reuse(docs.filter(col("doc_id") % 5 =!= 3)
       .select(explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
@@ -277,7 +283,7 @@ object BpeTokenizer {
       .groupBy("word").agg(count(lit(1)).as("cnt")))
     // the stored tokenizer: merges learned on the BASE census only
     val (merges, _) = learn(s,
-      baseCen.select(col("word"), col("cnt").as("freq")), k)
+      baseCen.select(col("word"), col("cnt").as("freq")), Merges)
     // ONE application pass over the union of type tables serves both
     // fertility censuses
     val segAll = Dedup.reuse(segmentTypes(
@@ -300,12 +306,11 @@ object BpeTokenizer {
           >= 30000L).as("acted"))
       .orderBy("base_words")
   } { (s, d) =>
-    val k = confInt(s, "graft.bpe.merges", 40)
     val baseCen = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 3)
       .select(explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    TokenizerOracles.t54Sql(learn(s, baseCen, k)._1, gateMicro = 30000L)
+    TokenizerOracles.t54Sql(learn(s, baseCen, Merges)._1, gateMicro = 30000L)
   }
 
   val defs: Seq[Q] = Seq(t30, t31, t54)

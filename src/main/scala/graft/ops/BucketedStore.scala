@@ -50,26 +50,27 @@ object BucketedStore {
   private[graft] def bucketCountOf(s: SparkSession, table: String): Int =
     spec(s, table)._1
 
-  /** Bucket count for a store's FIRST write: the d73 8·2^k ladder over
-    * the input's SOURCE row count, read from parquet footers on the
-    * driver ([[Dedup.footerRowCount]] — zero Spark jobs). Each write
-    * task sorts one whole bucket, so a fixed count would cap write
-    * parallelism and per-task memory at corpus scale; the ladder keeps
-    * per-bucket source rows within `graft.store.rowsPerBucket` (default
-    * 16384, so every fixture SF keeps the seed-8 layout while the 100×
-    * probes derive a grown count). Capped at 1024; an input that is not
-    * parquet-backed falls back to the seed. */
-  private[graft] def scaleBuckets(df: DataFrame, seed: Int = 8): Int = {
-    val budget = df.sparkSession.conf
-      .getOption("graft.store.rowsPerBucket").map(_.toLong).getOrElse(16384L)
-    Dedup.footerRowCount(df) match {
-      case Some(rows) =>
-        var b = seed
-        while (b < 1024 && rows > budget * b) b *= 2
-        b
-      case None => seed
-    }
+  /** Source rows one bucket of a first write budgets for: every fixture
+    * SF keeps the seed-8 layout, while the 100× probes derive a grown
+    * count. */
+  private[graft] val SourceRowsPerBucket = 16384L
+
+  /** The d73 8·2^k ladder: the fewest 8·2^k buckets holding `rows`
+    * source rows at [[SourceRowsPerBucket]] each, capped at 1024. */
+  private[graft] def bucketsForRows(rows: Long): Int = {
+    var b = 8
+    while (b < 1024 && rows > SourceRowsPerBucket * b) b *= 2
+    b
   }
+
+  /** Bucket count for a store's FIRST write: [[bucketsForRows]] over the
+    * input's SOURCE row count, read from parquet footers on the driver
+    * ([[Dedup.footerRowCount]] — zero Spark jobs). Each write task sorts
+    * one whole bucket, so a fixed count would cap write parallelism and
+    * per-task memory at corpus scale. An input that is not parquet-backed
+    * falls back to the seed count 8. */
+  private[graft] def scaleBuckets(df: DataFrame): Int =
+    bucketsForRows(Dedup.footerRowCount(df).getOrElse(0L))
 
   /** (table, path) of a new generation: a per-run table name
     * `graft_<tag>_<uuid>` (a fixed name collides across sessions sharing

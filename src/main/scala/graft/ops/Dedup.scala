@@ -153,8 +153,7 @@ object Dedup {
     if (bcast) broadcast(df) else df
   }
 
-  /** Bucket-cardinality cap for banded self-joins, from
-    * `graft.dedup.maxBucketSize` (default 1000). A bucket of size B
+  /** Bucket-cardinality cap for banded self-joins. A bucket of size B
     * emits B·(B−1)/2 candidate pairs, so one degenerate band key — a
     * near-constant shingle/bit distribution, common in templated web
     * text — makes the join quadratic in that bucket, and every pair it
@@ -167,16 +166,9 @@ object Dedup {
     * saturated shingle universe produced ~950-doc buckets and 121.6M
     * total candidates — the verification join then spilled past 80 GB;
     * see BENCH_SCALE_r07.json's flood entry). Recall loss is bounded:
-    * a doc in a dropped bucket still pairs through its other bands. */
-  def bucketCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.dedup.maxBucketSize").map(_.toLong)
-      .getOrElse(DefaultBucketCap)
-
-  /** The pinned default for `graft.dedup.maxBucketSize`. Oracle-paired
-    * queries whose DuckDB SQL hardcodes the cap (m10's QUALIFY mirror,
-    * p01's bandc CTE) must pass THIS constant to [[dropOversizedBuckets]]
-    * instead of the session-conf [[bucketCap]], so a conf override can
-    * never desynchronize engine and oracle. */
+    * a doc in a dropped bucket still pairs through its other bands.
+    * Oracle-paired queries (m10, p01, d08, …) interpolate the same
+    * constant into their DuckDB QUALIFY mirrors. */
   val DefaultBucketCap = 1000L
 
   /** Drop (and log) buckets whose cardinality exceeds `cap` before a
@@ -214,10 +206,10 @@ object Dedup {
     *
     * Scale shape: the decision input is the bucket-SIZE histogram —
     * ≤ cap rows by construction (sizes 2..cap), two map-side-combined
-    * aggs, a bounded driver collect. OPERATIONAL LEVER ONLY: like a
-    * `maxBucketSize` override, a triggered budget changes results, so
-    * oracle-verified runs must leave it unset (the census line makes a
-    * triggered run impossible to miss). */
+    * aggs, a bounded driver collect. OPERATIONAL LEVER ONLY: a
+    * triggered budget changes results, so oracle-verified runs must
+    * leave it unset (the census line makes a triggered run impossible
+    * to miss). */
   val DefaultEdgeBudgetConf = "graft.dedup.maxCandidateEdges"
 
   private def edgeBudgetCap(buckets: DataFrame, budget: Long): Long = {
@@ -250,22 +242,20 @@ object Dedup {
   /** Candidate near-dup pairs from LSH buckets (id_a < id_b, distinct).
     * The bucket pipeline is materialized once — a naive self-join would
     * run the whole minhash computation for both sides. Buckets above the
-    * cardinality cap (`cap`, or `graft.dedup.maxBucketSize` when 0) are
-    * dropped first so no band key can go quadratic, and an optional
-    * TOTAL edge budget ([[edgeBudgetCap]]) tightens that cap further on
-    * collision-dense corpora. Pass
+    * cardinality cap `cap` are dropped first so no band key can go
+    * quadratic, and an optional TOTAL edge budget ([[edgeBudgetCap]])
+    * tightens that cap further on collision-dense corpora. Pass
     * `materialize = false` ONLY when `buckets0` is already cheap to
     * recompute (e.g. derived from a persisted digest table, as in
     * [[lshBucketsAndShingles]]) — it skips the persist+count job and lets
     * the census and both join sides re-derive from the upstream cache. */
-  def candidatePairs(buckets0: DataFrame, cap: Long = 0L,
+  def candidatePairs(buckets0: DataFrame, cap: Long = DefaultBucketCap,
       materialize: Boolean = true): DataFrame = {
     val all = if (materialize) reuse(buckets0) else buckets0
-    val capBase = if (cap > 0) cap else bucketCap(all.sparkSession)
     val budget = all.sparkSession.conf.getOption(DefaultEdgeBudgetConf)
       .map(_.toLong).getOrElse(0L)
     val effCap =
-      if (budget > 0) math.min(capBase, edgeBudgetCap(all, budget)) else capBase
+      if (budget > 0) math.min(cap, edgeBudgetCap(all, budget)) else cap
     val buckets = dropOversizedBuckets(all, Seq("band", "band_key"), effCap)
     val a = buckets.as("a")
     val b = buckets.as("b")
@@ -566,8 +556,25 @@ object Dedup {
     * — at 100 TB the candidate subset is a sliver of the corpus), then
     * deduped to sets. The per-pair expansion is |pairs| × doc shingle
     * count — the irreducible verification cost. `shingles` is
-    * per-occurrence (id, h) as produced by [[wordShingleHashes]]. */
-  def pairOverlapStats(pairs: DataFrame, shingles: DataFrame): DataFrame = {
+    * per-occurrence (id, h) as produced by [[wordShingleHashes]]. The
+    * candidate-restriction route comes from [[bloomGate]]. */
+  def pairOverlapStats(pairs: DataFrame, shingles: DataFrame): DataFrame =
+    pairOverlapStats(pairs, shingles, bloomGate(footerRowCount(shingles)))
+
+  /** Corpus rows (under the measured 500k-doc crossover) above which
+    * the bloom route runs past [[AutoBloomPairs]] candidate pairs. */
+  private[graft] val AutoBloomDocs = 200000L
+  private[graft] val AutoBloomPairs = 500000L
+
+  /** The bloom route's pair threshold, or None (exact semi-join, no pair
+    * count) for a corpus of unknown size or ≤ [[AutoBloomDocs]] rows. */
+  private[graft] def bloomGate(corpusRows: Option[Long]): Option[Long] =
+    corpusRows.filter(_ > AutoBloomDocs).map(_ => AutoBloomPairs)
+
+  /** [[pairOverlapStats]] on a given route: the bloom runs above
+    * `bloomAbovePairs` candidate pairs, never when None. */
+  private[graft] def pairOverlapStats(pairs: DataFrame, shingles: DataFrame,
+      bloomAbovePairs: Option[Long]): DataFrame = {
     // p persists LAZILY: candIds scans it exactly once (explode, not a
     // two-scan union), so the eager `sh` materialization below fills p's
     // cache as a side effect — one job computes both, and the later
@@ -586,37 +593,24 @@ object Dedup {
     // broadcast threshold it plans as a SortMergeJoin that shuffles the
     // ENTIRE per-occurrence shingle stream — the measured decade-2
     // super-linearity of d15 at 500k docs (5.28× per 10×,
-    // BENCH_SCALE_r07.json) is exactly this exchange. A deployment that
-    // KNOWS its scale sets `graft.dedup.bloomCandidateThreshold`: the
-    // candidate pairs are then counted (the count fills p's cache; at
-    // the scales where the conf is set, one extra job is noise against
-    // the stream shuffle it saves) and above the threshold a
-    // driver-built bloom over candidate ids (~1.2 MB per 1M ids at 1%
-    // fpp) filters the stream MAP-SIDE instead. False positives only
-    // admit spectator docs into the size census — they never match the
-    // pair joins — so the output is bit-identical on either route
-    // (spec'd), and the oracle is unchanged. Measured at 500k docs:
-    // 43.5s exact → 26.9s bloom (BENCH_SCALE_r07.json d15_bloom_500k).
+    // BENCH_SCALE_r07.json) is exactly this exchange. On a large corpus
+    // the candidate pairs are therefore counted (the count fills p's
+    // cache; at that scale one extra job is noise against the stream
+    // shuffle it saves) and above the pair threshold a driver-built
+    // bloom over candidate ids (~1.2 MB per 1M ids at 1% fpp) filters
+    // the stream MAP-SIDE instead. False positives only admit spectator
+    // docs into the size census — they never match the pair joins — so
+    // the output is bit-identical on either route (spec'd), and the
+    // oracle is unchanged. Measured at 500k docs: 43.5s exact → 26.9s
+    // bloom (BENCH_SCALE_r07.json d15_bloom_500k).
     //
-    // When the conf is NOT set, the route self-selects at zero cost:
-    // the corpus row count is read off the parquet FOOTERS (driver-side
-    // metadata through df.inputFiles — no Spark job, microseconds) and
-    // only a corpus above `graft.dedup.autoBloomDocs` (default 200k,
-    // under the measured 500k crossover) enables the pair-count probe —
-    // small corpora keep the fused count-free pipeline that the A/B
-    // showed regressing 1.40× under an unconditional count, while a
-    // fleet-scale run gets the bloom cut without knowing the conf.
-    val conf = shingles.sparkSession.conf
-    val effectiveThreshold: Option[Long] =
-      conf.getOption("graft.dedup.bloomCandidateThreshold").map(_.toLong)
-        .orElse {
-          val autoDocs = conf.getOption("graft.dedup.autoBloomDocs")
-            .map(_.toLong).getOrElse(200000L)
-          val autoPairs = conf.getOption("graft.dedup.autoBloomPairs")
-            .map(_.toLong).getOrElse(500000L)
-          footerRowCount(shingles).filter(_ > autoDocs).map(_ => autoPairs)
-        }
-    val restricted = effectiveThreshold match {
+    // The route self-selects at zero cost: the corpus row count is read
+    // off the parquet FOOTERS (driver-side metadata through
+    // df.inputFiles — no Spark job, microseconds) and only a corpus
+    // above AutoBloomDocs enables the pair-count probe — small corpora
+    // keep the fused count-free pipeline that the A/B showed regressing
+    // 1.40× under an unconditional count.
+    val restricted = bloomAbovePairs match {
       case Some(threshold) if p.count() > threshold =>
         val nPairs = p.count() // cached — free after the route decision
         val bf = candIds.stat.bloomFilter("id", math.max(2L * nPairs, 1000L), 0.01)
@@ -802,11 +796,10 @@ object Dedup {
 
   /** Duplicate clusters: LSH candidate pairs → connected components
     * (iterative min-label propagation in Spark; recursive-CTE transitive
-    * closure in the oracle). Cap pinned to [[DefaultBucketCap]] with the
-    * oracle's QUALIFY mirror (the m10/p01 discipline), so a session
-    * `maxBucketSize` override can never desynchronize engine and oracle;
-    * on collision-dense corpora the TOTAL edge count is the real cost
-    * driver (measured 8.6× at 10× docs on the saturated-vocab probe) —
+    * closure in the oracle). The oracle's QUALIFY mirrors
+    * [[DefaultBucketCap]] (the m10/p01 discipline); on collision-dense
+    * corpora the TOTAL edge count is the real cost driver (measured
+    * 8.6× at 10× docs on the saturated-vocab probe) —
     * the `graft.dedup.maxCandidateEdges` budget is the operational lever
     * there ([[edgeBudgetCap]]; priced in BENCH_SCALE_r11.json). */
   private val d08 = Q(
@@ -851,8 +844,8 @@ object Dedup {
        FROM reach GROUP BY a ORDER BY doc_id""") { (s, d) =>
     val buckets = lshBuckets(Tables.documents(s, d), "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
-    // cap pinned (not the session conf): the QUALIFY above hardcodes 1000
-    connectedComponents(candidatePairs(buckets, cap = DefaultBucketCap))
+    // the QUALIFY above hardcodes DefaultBucketCap's 1000
+    connectedComponents(candidatePairs(buckets))
       .select(col("id").as("doc_id"), col("component"))
       .orderBy("doc_id")
   }
@@ -1098,7 +1091,7 @@ object Dedup {
     // same degenerate-key guard as the MinHash path: a boilerplate-heavy
     // corpus can collapse a 16-bit band onto one value; cap it before the
     // self-join (sigs are materialized, so the census is a cheap re-read)
-    val bands = dropOversizedBuckets(bands0, Seq("b", "bits"), bucketCap(s))
+    val bands = dropOversizedBuckets(bands0, Seq("b", "bits"), DefaultBucketCap)
     // hamming BEFORE dedup: a pair colliding in k bands is scored k≤4
     // times at 4 XOR+bit_count ops each — far cheaper than shuffling the
     // full collision set through distinct and re-joining signatures. The
@@ -1725,7 +1718,7 @@ object Dedup {
     *
     *  1. anchor k-grams (k=8): positioned gram hashes; grams seen in
     *     2..10 distinct docs anchor candidates (the cap is the LSH
-    *     maxBucketSize guard — boilerplate grams in >10 docs would
+    *     bucket-cap guard — boilerplate grams in >10 docs would
     *     explode the self-join; the oracle applies the same rule);
     *  2. candidate pairs from anchor co-occurrence, STRIDE-SAMPLED on
     *     the probe side (Lee et al. §4.1's sampling argument): a
@@ -2333,7 +2326,7 @@ object Dedup {
     val sig = dropOversizedBuckets(
       reuse(hv.select(col("id"),
         posexplode(minhashSignature(col("hv"), 8)).as(Seq("seed", "mh")))),
-      Seq("seed", "mh"), bucketCap(s))
+      Seq("seed", "mh"), DefaultBucketCap)
     val agr = reuse(sig.select(col("id").as("id_a"), col("seed"), col("mh"))
       .join(sig.select(col("id").as("id_b"), col("seed"), col("mh")), Seq("seed", "mh"))
       .filter(col("id_a") < col("id_b"))
@@ -2925,7 +2918,7 @@ object Dedup {
     val bands0 = sigs.select(col("doc_id"), col("si"),
       posexplode(array((0 until 4).map(b => substring(col("sig"), b * 16 + 1, 16)): _*))
         .as(Seq("b", "bits")))
-    val bands = dropOversizedBuckets(bands0, Seq("b", "bits"), bucketCap(s))
+    val bands = dropOversizedBuckets(bands0, Seq("b", "bits"), DefaultBucketCap)
     val hp = reuse(bands.as("a")
       .join(bands.as("b"),
         col("a.b") === col("b.b") && col("a.bits") === col("b.bits")

@@ -36,7 +36,7 @@ import graft.{Q, Tables}
   *      against delta ∪ stored shingle sets (the shingle store is cut to
   *      candidate ids before its distinct — non-candidates never move).
   *   3. near-dedup WITHIN the delta — banded self-join (bucket cap
-  *      pinned to [[Dedup.DefaultBucketCap]], mirrored by the oracle's
+  *      [[Dedup.DefaultBucketCap]], mirrored by the oracle's
   *      QUALIFY), verified pairs → connected components → min-id
   *      representative per cluster.
   *   4. admission — survivors append their hash / band keys / shingle
@@ -266,10 +266,9 @@ object Incremental {
       .localCheckpoint(true)
 
     // ---- stage 3: near-dedup within the delta ----
-    // cap pinned to DefaultBucketCap: the oracle's QUALIFY mirrors it
+    // the oracle's QUALIFY mirrors candidatePairs' DefaultBucketCap
     val b2 = dB.join(e2.select(col("doc_id").as("id")), Seq("id"))
-    val wCand = Dedup.candidatePairs(b2, cap = Dedup.DefaultBucketCap,
-      materialize = false)
+    val wCand = Dedup.candidatePairs(b2, materialize = false)
     val wVer = Dedup.jaccardVerifiedPairs(wCand, dS, tau = 0.5)
     val comp = Dedup.connectedComponents(wVer)
     val keepW = e2
@@ -1554,9 +1553,10 @@ object Incremental {
       }.toMap
 
   /** Resolve the generation a holder's pin names — loudly failing when
-    * the pin is absent or its lease EXPIRED (the consumer outlived its
-    * lease; its generation may be gone, and pretending otherwise would
-    * silently break session consistency). */
+    * the pin is absent, malformed (a torn write: it protects nothing, as
+    * [[activeCatalogPins]] reads it) or its lease EXPIRED (the consumer
+    * outlived its lease; its generation may be gone, and pretending
+    * otherwise would silently break session consistency). */
   def resolvePinnedCatalog(path: String, holder: String, expect: Int,
       now: Long = System.currentTimeMillis()): Seq[String] = {
     val pin = pinsDir(path).resolve(holder)
@@ -1564,6 +1564,10 @@ object Incremental {
       s"no pin '$holder' at $path — acquire a lease before pinned reads")
     val parts = new String(java.nio.file.Files.readAllBytes(pin),
       java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")
+    require(parts.length == 2 && parts(0).toIntOption.isDefined &&
+      parts(1).toLongOption.isDefined,
+      s"pin '$holder' at $path is malformed — re-acquire the lease; " +
+        "its generation may already be reclaimed")
     require(parts(1).toLong > now,
       s"pin '$holder' at $path EXPIRED (lease deadline ${parts(1)}) — " +
         "renew the lease; its generation may already be reclaimed")

@@ -240,7 +240,7 @@ object Multimodal {
     val bands0 = sigs.select(col("doc_id"), col("si"),
       posexplode(array((0 until 4).map(b => substring(col("sig"), b * 16 + 1, 16)): _*))
         .as(Seq("b", "bits")))
-    val bands = Dedup.dropOversizedBuckets(bands0, Seq("b", "bits"), Dedup.bucketCap(s))
+    val bands = Dedup.dropOversizedBuckets(bands0, Seq("b", "bits"), Dedup.DefaultBucketCap)
     bands.as("a")
       .join(bands.as("b"),
         col("a.b") === col("b.b") && col("a.bits") === col("b.bits")
@@ -560,9 +560,8 @@ object Multimodal {
     * hamming ≤ 3; at the τ = 4 gate both engines apply the identical
     * band-recall rule). The all-zero band (the "empty region" every
     * short payload shares) is ineligible as a join key; buckets are
-    * capped at [[Dedup.DefaultBucketCap]] pinned (not the session conf):
-    * the oracles' QUALIFY mirrors hardcode the same 1000, so a conf
-    * override must not desync engine and oracle. */
+    * capped at [[Dedup.DefaultBucketCap]], the 1000 the oracles' QUALIFY
+    * mirrors hardcode. */
   private[graft] def bands(sg: DataFrame): DataFrame = {
     val exploded = sg.select(col("id"), col("si"),
       posexplode(array((0 until 4).map(k => substring(col("sig"), k * 16 + 1, 16)): _*))
@@ -622,8 +621,7 @@ object Multimodal {
     * "empty region" every short payload shares) is ineligible as a join
     * key, and the d03/d11 oversized-bucket guard caps template-prefix
     * pileups before the pair join. The oracle mirrors the cap (QUALIFY
-    * count OVER (band) <= 1000 per side, the `graft.dedup.maxBucketSize`
-    * default) so an over-cap fixture bucket degrades both engines
+    * count OVER (band) <= 1000 per side, [[Dedup.DefaultBucketCap]]) so an over-cap fixture bucket degrades both engines
     * identically instead of silently desynchronizing recall. */
   /** The dHash replay CTEs shared by the m10 and m11 oracles: corpus
     * (`pa` → bands `ba`) and variant-batch (`vb`/`pb` → bands `bb`)

@@ -214,12 +214,10 @@ object Pipeline {
     // the same md5 job (lshBucketsAndShingles' persisted hv table)
     val (buckets, shingles) = Dedup.lshBucketsAndShingles(
       f5, "doc_id", "rt", shingleWords = 3, bands = 4, rowsPerBand = 2)
-    // cap pinned to DefaultBucketCap (not the session conf) because the
-    // oracle's QUALIFY mirror below interpolates the same constant — a
-    // session override of graft.dedup.maxBucketSize must not desync
-    // engine and oracle
+    // the oracle's QUALIFY mirror below interpolates the same
+    // DefaultBucketCap that candidatePairs applies
     val verified = Dedup.jaccardVerifiedPairs(
-      Dedup.candidatePairs(buckets, cap = Dedup.DefaultBucketCap, materialize = false),
+      Dedup.candidatePairs(buckets, materialize = false),
       shingles, tau = 0.5)
     val comp = Dedup.reuse(Dedup.connectedComponents(verified))
     val compAsDoc = comp.select(col("id").as("doc_id"), col("component"))
@@ -425,7 +423,7 @@ object Pipeline {
                 md5(string_agg(CAST(mh AS VARCHAR), '|' ORDER BY seed)) AS band_key
          FROM sig GROUP BY doc_id, CAST(seed // 2 AS INT)),
        bandc AS MATERIALIZED (
-         -- mirrors Dedup.dropOversizedBuckets' cap (pinned to the shared
+         -- mirrors Dedup.dropOversizedBuckets' cap (the shared
          -- DefaultBucketCap constant on the Spark side): a band bucket
          -- above the cap emits no pairs
          SELECT doc_id, band, band_key FROM bands

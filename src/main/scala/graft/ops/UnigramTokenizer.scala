@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *    entries — kilobytes) is BROADCAST, each word type runs integer
   *    Viterbi map-side, and only the (piece, count) table — vocab-sized
   *    — comes back to the driver for the M-step renormalize.
-  *  - Under `graft.unigram.driverThreshold` word types the identical
-  *    loop runs driver-side (d34/t30's discipline); UnigramSpec pins the
-  *    two routes bit-identical.
+  *  - Up to [[DriverThreshold]] word types the identical loop runs
+  *    driver-side (d34/t30's discipline); UnigramSpec pins the two
+  *    routes bit-identical.
   *
   * Determinism contract: costs are INTEGER micro-nats
   * (round(-ln p · 10⁶)) with Laplace-smoothed probs of exact integer
@@ -46,10 +46,14 @@ import org.apache.spark.sql.functions._
   */
 object UnigramTokenizer {
 
-  private def confInt(s: SparkSession, key: String, dflt: Int): Int =
-    s.conf.getOption(key).map(_.toInt).getOrElse(dflt)
-
   private val MaxPieceLen = 4
+
+  /** Seed vocabulary size M (multi-char pieces, plus every char), the
+    * hard-EM iteration count, and the word-type count up to which
+    * [[learn]] runs driver-side. */
+  private val Pieces = 200
+  private val Iters = 2
+  private val DriverThreshold = 100000L
 
   /** Viterbi segmentation of one word under integer micro-nat piece
     * costs. Ties break toward the longest last piece. Total: every
@@ -133,78 +137,90 @@ object UnigramTokenizer {
   }
 
   /** Train: returns the final (piece, count, cost_micro) table and the
-    * per-word-type segmentation (word, n_tok). Routes driver-side under
-    * the type threshold; the distributed route broadcasts the cost map
-    * and collects only vocab-sized count tables. */
-  private[graft] def learn(s: SparkSession, census: DataFrame, m: Int, iters: Int)
+    * per-word-type segmentation (word, n_tok). Routes driver-side up to
+    * [[DriverThreshold]] types; the distributed route broadcasts the
+    * cost map and collects only vocab-sized count tables. */
+  private[graft] def learn(s: SparkSession, census: DataFrame)
       : (Seq[(String, Long, Long)], DataFrame) = {
     import s.implicits._
-    val threshold = confInt(s, "graft.unigram.driverThreshold", 100000).toLong
     val cached = Dedup.reuse(census)
-    val nTypes = cached.count()
-    if (nTypes <= threshold) {
+    if (cached.count() <= DriverThreshold) {
       val rows = cached.select(col("word"), col("freq"))
         .as[(String, Long)].collect().sortBy(_._1).toSeq
-      var counts = seedDriver(rows, m)
-      var cost = costsFromCounts(counts)
-      var it = 0
-      while (it < iters) {
-        // prune-then-renormalize: pieces the Viterbi never uses drop out
-        // (chars always survive via Laplace + closure requirement)
-        val used = countsDriver(rows, cost)
-        counts = counts.keysIterator
-          .filter(p => p.length == 1 || used.getOrElse(p, 0L) > 0L)
-          .map(p => p -> used.getOrElse(p, 0L)).toMap
-        cost = costsFromCounts(counts)
-        it += 1
-      }
-      val fin = cost
-      val table = counts.toSeq.map { case (p, c) => (p, c, fin(p)) }
-        .sortBy { case (p, c, _) => (-c, p) }
-      val segs = rows.map { case (w, _) => (w, viterbi(w, fin).length.toLong) }
+      val (table, segs) = learnDriver(rows)
       (table, segs.toDF("word", "n_tok"))
-    } else {
-      val words = cached.select(col("word"), col("freq")).as[(String, Long)]
-      // distributed seed: types-table substring explode + hash agg;
-      // TakeOrdered(m) on (score desc, piece) + the full char set
-      val subCounts = words.flatMap { case (w, f) =>
-        for {
-          i <- 0 until w.length
-          l <- 1 to math.min(MaxPieceLen, w.length - i)
-        } yield (w.substring(i, i + l), f)
-      }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("c"))
-      val multi = subCounts.filter(length(col("piece")) > 1)
-        .orderBy(col("c").desc, col("piece")).limit(m)
-        .as[(String, Long)].collect()
-      val chars = subCounts.filter(length(col("piece")) === 1)
-        .as[(String, Long)].collect()
-      var counts: Map[String, Long] = (chars ++ multi).toMap
-      var cost = costsFromCounts(counts)
-      var it = 0
-      while (it < iters) {
-        val bc = s.sparkContext.broadcast(cost)
-        val used = words.flatMap { case (w, f) =>
-          viterbi(w, bc.value).map(p => (p, f)) }
-          .toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("c"))
-          .as[(String, Long)].collect().toMap
-        bc.destroy()
-        counts = counts.keysIterator
-          .filter(p => p.length == 1 || used.getOrElse(p, 0L) > 0L)
-          .map(p => p -> used.getOrElse(p, 0L)).toMap
-        cost = costsFromCounts(counts)
-        it += 1
-      }
-      val fin = cost
-      val table = counts.toSeq.map { case (p, c) => (p, c, fin(p)) }
-        .sortBy { case (p, c, _) => (-c, p) }
-      val bcFin = s.sparkContext.broadcast(fin)
-      val segs = words.map { case (w, _) => (w, viterbi(w, bcFin.value).length.toLong) }
-        .toDF("word", "n_tok")
-      (table, segs)
-    }
+    } else learnDistributed(s, cached)
   }
 
-  private def wordCensus(s: SparkSession, d: String): DataFrame =
+  /** Prune-then-renormalize M-step: pieces the Viterbi never used drop
+    * out (chars always survive via Laplace + the closure requirement). */
+  private def prune(counts: Map[String, Long], used: Map[String, Long]): Map[String, Long] =
+    counts.keysIterator
+      .filter(p => p.length == 1 || used.getOrElse(p, 0L) > 0L)
+      .map(p => p -> used.getOrElse(p, 0L)).toMap
+
+  /** The final (piece, count, cost_micro) table, ranked (count desc, piece). */
+  private def pieceTable(counts: Map[String, Long], fin: Map[String, Long])
+      : Seq[(String, Long, Long)] =
+    counts.toSeq.map { case (p, c) => (p, c, fin(p)) }
+      .sortBy { case (p, c, _) => (-c, p) }
+
+  /** The hard-EM loop driver-side over a collected census. */
+  private[graft] def learnDriver(rows: Seq[(String, Long)])
+      : (Seq[(String, Long, Long)], Seq[(String, Long)]) = {
+    var counts = seedDriver(rows, Pieces)
+    var cost = costsFromCounts(counts)
+    var it = 0
+    while (it < Iters) {
+      counts = prune(counts, countsDriver(rows, cost))
+      cost = costsFromCounts(counts)
+      it += 1
+    }
+    val fin = cost
+    (pieceTable(counts, fin),
+      rows.map { case (w, _) => (w, viterbi(w, fin).length.toLong) })
+  }
+
+  /** The distributed hard-EM loop over a (word, freq) census. */
+  private[graft] def learnDistributed(s: SparkSession, census: DataFrame)
+      : (Seq[(String, Long, Long)], DataFrame) = {
+    import s.implicits._
+    val words = census.select(col("word"), col("freq")).as[(String, Long)]
+    // distributed seed: types-table substring explode + hash agg;
+    // TakeOrdered(Pieces) on (score desc, piece) + the full char set
+    val subCounts = words.flatMap { case (w, f) =>
+      for {
+        i <- 0 until w.length
+        l <- 1 to math.min(MaxPieceLen, w.length - i)
+      } yield (w.substring(i, i + l), f)
+    }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("c"))
+    val multi = subCounts.filter(length(col("piece")) > 1)
+      .orderBy(col("c").desc, col("piece")).limit(Pieces)
+      .as[(String, Long)].collect()
+    val chars = subCounts.filter(length(col("piece")) === 1)
+      .as[(String, Long)].collect()
+    var counts: Map[String, Long] = (chars ++ multi).toMap
+    var cost = costsFromCounts(counts)
+    var it = 0
+    while (it < Iters) {
+      val bc = s.sparkContext.broadcast(cost)
+      val used = words.flatMap { case (w, f) =>
+        viterbi(w, bc.value).map(p => (p, f)) }
+        .toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("c"))
+        .as[(String, Long)].collect().toMap
+      bc.destroy()
+      counts = prune(counts, used)
+      cost = costsFromCounts(counts)
+      it += 1
+    }
+    val fin = cost
+    val bcFin = s.sparkContext.broadcast(fin)
+    val segs = words.map { case (w, _) => (w, viterbi(w, bcFin.value).length.toLong) }
+      .toDF("word", "n_tok")
+    (pieceTable(counts, fin), segs)
+  }
+
+  private[graft] def wordCensus(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
       .filter(length(col("word")) > 0)
@@ -218,18 +234,12 @@ object UnigramTokenizer {
     * hash-checked cross-engine end-to-end, not just spec-verified. */
   private val t36 = Q.dynamic("t36_unigram_pieces") { (s, d) =>
     import s.implicits._
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
-    val (table, _) = learn(s, wordCensus(s, d), m, iters)
+    val (table, _) = learn(s, wordCensus(s, d))
     table.zipWithIndex
       .map { case ((p, c, q), i) => (i + 1L, p, c, q) }
       .toDF("rank", "piece", "n_uses", "cost_micro")
       .orderBy("rank")
-  } { (s, _) =>
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
-    TokenizerOracles.t36Sql(m, iters)
-  }
+  } { (_, _) => TokenizerOracles.t36Sql(Pieces, Iters) }
 
   /** t37: the corpus segmented under the learned pieces — per-doc word
     * and unigram-token counts (t31's join shape: the stream is never
@@ -238,10 +248,8 @@ object UnigramTokenizer {
     * piece table renders into DuckDB SQL ([[TokenizerOracles.t37Sql]])
     * whose recursive-CTE Viterbi re-segments the corpus independently. */
   private val t37 = Q.dynamic("t37_unigram_segment") { (s, d) =>
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
     val census = Dedup.reuse(wordCensus(s, d))
-    val (_, seg) = learn(s, census, m, iters)
+    val (_, seg) = learn(s, census)
     val segDf = Dedup.reuse(seg)
     val docWords = Tables.documents(s, d)
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
@@ -261,9 +269,7 @@ object UnigramTokenizer {
         sum(col("cnt") * col("n_tok")).as("n_unigram_tokens"))
       .orderBy("doc_id")
   } { (s, d) =>
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
-    val (table, _) = learn(s, wordCensus(s, d), m, iters)
+    val (table, _) = learn(s, wordCensus(s, d))
     TokenizerOracles.t37Sql(table)
   }
 
@@ -279,12 +285,9 @@ object UnigramTokenizer {
     * ([[TokenizerOracles.t39Sql]]); the spec additionally pins the
     * totals to the sums of t31/t37's own outputs. */
   private val t39 = Q.dynamic("t39_tokenizer_fertility") { (s, d) =>
-    val mergesK = confInt(s, "graft.bpe.merges", 40)
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
     val census = Dedup.reuse(wordCensus(s, d))
-    val (_, segB) = BpeTokenizer.learn(s, census, mergesK)
-    val (_, segU) = learn(s, census, m, iters)
+    val (_, segB) = BpeTokenizer.learn(s, census, BpeTokenizer.Merges)
+    val (_, segU) = learn(s, census)
     val seg = Dedup.reuse(segB.select(col("word"), col("n_tok").as("bpe_n"))
       .join(segU.select(col("word"), col("n_tok").as("uni_n")), "word"))
     val docWords = Tables.documents(s, d)
@@ -302,12 +305,9 @@ object UnigramTokenizer {
         round(col("n_unigram_tokens") * lit(1.0) / col("n_words"), 4).as("fert_uni"))
       .orderBy("source")
   } { (s, d) =>
-    val mergesK = confInt(s, "graft.bpe.merges", 40)
-    val m = confInt(s, "graft.unigram.pieces", 200)
-    val iters = confInt(s, "graft.unigram.iters", 2)
     val census = Dedup.reuse(wordCensus(s, d))
-    val (merges, _) = BpeTokenizer.learn(s, census, mergesK)
-    val (table, _) = learn(s, census, m, iters)
+    val (merges, _) = BpeTokenizer.learn(s, census, BpeTokenizer.Merges)
+    val (table, _) = learn(s, census)
     TokenizerOracles.t39Sql(merges, table)
   }
 

@@ -3344,7 +3344,6 @@ object StreamingQueries {
     * still generation 1) is drilled in RoundThirteenSpec. */
   private val s41 = Q.dynamic("s41_stream_tokenizer_retrain") { (s, d) =>
     import graft.ops.{BpeTokenizer, Incremental, TextAnalysis}
-    val k = s.conf.getOption("graft.bpe.merges").map(_.toInt).getOrElse(40)
     val docs = Tables.documents(s, d)
     val wordsOf = (c: org.apache.spark.sql.Column) =>
       explode(TextAnalysis.tokens(c, "whitespace"))
@@ -3354,7 +3353,7 @@ object StreamingQueries {
       .groupBy("word").agg(count(lit(1)).as("freq")))
     // generation 1: merges learned on the base corpus, published as
     // catalog state (the merge table IS the tokenizer)
-    val m1 = BpeTokenizer.learn(s, baseCen, k)._1
+    val m1 = BpeTokenizer.learn(s, baseCen, BpeTokenizer.Merges)._1
     import s.implicits._
     val mergesDir1 = graft.Scratch.dir("graft_s41_m1")
     m1.toDF("rank", "left", "right", "n_pairs")
@@ -3455,7 +3454,7 @@ object StreamingQueries {
           val unionCen = baseCen
             .unionByName(arrived.select(col("word"), col("cnt").as("freq")))
             .groupBy("word").agg(sum(col("freq")).as("freq"))
-          val m2 = BpeTokenizer.learn(s, unionCen, k)._1
+          val m2 = BpeTokenizer.learn(s, unionCen, BpeTokenizer.Merges)._1
           val mergesDir2 = graft.Scratch.dir("graft_s41_m2")
           m2.toDF("rank", "left", "right", "n_pairs")
             .write.mode("overwrite").parquet(mergesDir2)
@@ -3466,7 +3465,6 @@ object StreamingQueries {
     s.read.parquet(outDir).orderBy("wave", "doc_id")
   } { (s, d) =>
     import graft.ops.{BpeTokenizer, TextAnalysis, TokenizerOracles}
-    val k = s.conf.getOption("graft.bpe.merges").map(_.toInt).getOrElse(40)
     val docs = Tables.documents(s, d)
     val baseCen = docs.filter(col("doc_id") % 5 =!= 3)
       .select(explode(TextAnalysis.tokens(col("text"), "whitespace")).as("word"))
@@ -3477,10 +3475,10 @@ object StreamingQueries {
       .filter(length(col("w0")) > 0)
       .select(reverse(col("w0")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    val m1 = BpeTokenizer.learn(s, baseCen, k)._1
+    val m1 = BpeTokenizer.learn(s, baseCen, BpeTokenizer.Merges)._1
     val unionCen = baseCen.unionByName(revCen)
       .groupBy("word").agg(sum(col("freq")).as("freq"))
-    val m2 = BpeTokenizer.learn(s, unionCen, k)._1
+    val m2 = BpeTokenizer.learn(s, unionCen, BpeTokenizer.Merges)._1
     TokenizerOracles.s41Sql(m1, m2, gateMicro = 30000L)
   }
 

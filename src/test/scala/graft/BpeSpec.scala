@@ -23,22 +23,19 @@ class BpeSpec extends SparkTestBase {
 
   test("t30/t31: the distributed merge loop and the driver fast path " +
     "produce identical merges and identical segmentation counts") {
-    def run(threshold: String): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      spark.conf.set("graft.bpe.driverThreshold", threshold)
-      val m = SparkEntry.queries("t30_bpe_merges")(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      val t = SparkEntry.queries("t31_bpe_segment")(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      (m, t)
-    }
-    try {
-      val (mDriver, tDriver) = run("100000")
-      val (mDist, tDist) = run("0")
-      assert(mDriver.nonEmpty && mDriver == mDist,
-        "distributed merge table diverged from the driver route")
-      assert(tDriver == tDist,
-        "distributed segmentation diverged from the driver route")
-    } finally spark.conf.unset("graft.bpe.driverThreshold")
+    import ops.BpeTokenizer
+    val s = spark
+    import s.implicits._
+    val census = ops.Dedup.reuse(BpeTokenizer.wordCensus(spark, sf0001))
+    val rows = census.select("word", "freq").as[(String, Long)]
+      .collect().sortBy(_._1).toSeq
+    val (mDriver, segDriver) = BpeTokenizer.learnDriver(rows, BpeTokenizer.Merges)
+    val (mDist, segDist) = BpeTokenizer.learnDistributed(census, BpeTokenizer.Merges)
+    assert(mDriver.nonEmpty && mDriver == mDist,
+      "distributed merge table diverged from the driver route")
+    val perTypeDist = segDist.as[(String, Int)].collect().toMap
+    assert(perTypeDist.size == rows.size && segDriver.toMap == perTypeDist,
+      "distributed segmentation diverged from the driver route")
   }
 
   test("t30: rank-1 merge is the independently-recounted hottest adjacent " +
@@ -82,23 +79,20 @@ class BpeSpec extends SparkTestBase {
       (3L, "abab abab aaaa"),
       (4L, "x"))
     val dir = writeDocs(docs)
-    spark.conf.set("graft.bpe.merges", "6")
-    try {
-      val got = SparkEntry.queries("t31_bpe_segment")(spark, dir)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      // reference: word freqs -> driver BPE -> greedy apply -> doc sums
-      val words = docs.flatMap(_._2.split(" ")).filter(_.nonEmpty)
-      val freq = words.groupBy(identity).map { case (w, g) => (w, g.size.toLong) }
-        .toSeq.sortBy(_._1)
-      val (merges, seg) = graft.ops.BpeTokenizer.learnDriver(freq, 6)
-      assert(merges.nonEmpty)
-      val ntok = seg.toMap
-      val want = docs.map { case (id, text) =>
-        val ws = text.split(" ").filter(_.nonEmpty)
-        id -> (ws.length.toLong, ws.map(w => ntok(w).toLong).sum)
-      }.toMap
-      assert(got == want, s"engine $got != reference $want")
-    } finally spark.conf.unset("graft.bpe.merges")
+    val got = ops.BpeTokenizer.segmentDocs(spark, dir, k = 6)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // reference: word freqs -> driver BPE -> greedy apply -> doc sums
+    val words = docs.flatMap(_._2.split(" ")).filter(_.nonEmpty)
+    val freq = words.groupBy(identity).map { case (w, g) => (w, g.size.toLong) }
+      .toSeq.sortBy(_._1)
+    val (merges, seg) = graft.ops.BpeTokenizer.learnDriver(freq, 6)
+    assert(merges.nonEmpty)
+    val ntok = seg.toMap
+    val want = docs.map { case (id, text) =>
+      val ws = text.split(" ").filter(_.nonEmpty)
+      id -> (ws.length.toLong, ws.map(w => ntok(w).toLong).sum)
+    }.toMap
+    assert(got == want, s"engine $got != reference $want")
   }
 
   test("t31 envelope at sf0.001: n_words <= n_bpe_tokens <= total word " +
@@ -118,13 +112,10 @@ class BpeSpec extends SparkTestBase {
         s"doc $id: envelope violated ($nw, $nb, ${chars(id)})")
     }
     // k=0 merges: every token is a single char
-    spark.conf.set("graft.bpe.merges", "0")
-    try {
-      val flat = SparkEntry.queries("t31_bpe_segment")(spark, sf0001)
-        .as[(Long, Long, Long)].collect()
-      flat.foreach { case (id, _, nb) =>
-        assert(nb == chars(id), s"doc $id: k=0 gave $nb tokens != ${chars(id)} chars")
-      }
-    } finally spark.conf.unset("graft.bpe.merges")
+    val flat = ops.BpeTokenizer.segmentDocs(spark, sf0001, k = 0)
+      .as[(Long, Long, Long)].collect()
+    flat.foreach { case (id, _, nb) =>
+      assert(nb == chars(id), s"doc $id: k=0 gave $nb tokens != ${chars(id)} chars")
+    }
   }
 }

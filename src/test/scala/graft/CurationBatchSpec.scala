@@ -162,44 +162,50 @@ class CurationBatchSpec extends SparkTestBase {
     assert(rows.exists(_.getLong(2) > 0L), "the dup gate excluded nothing — vacuous fixture")
   }
 
+  /** d15's verified-pair stats over `sf`: the default route (the
+    * footer gate's choice) next to the map-side bloom forced by a pair
+    * threshold of 0. */
+  private def d15PairStatsBothRoutes(sf: String)
+      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+    import ops.Dedup
+    val (buckets, shingles) = Dedup.lshBucketsAndShingles(
+      Tables.documents(spark, sf), "doc_id", "text",
+      shingleWords = 3, bands = 4, rowsPerBand = 2)
+    val pairs = Dedup.candidatePairs(buckets, materialize = false)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "ni", "na", "nb").orderBy("id_a", "id_b").collect().toSeq
+    (rows(Dedup.pairOverlapStats(pairs, shingles)),
+      rows(Dedup.pairOverlapStats(pairs, shingles, bloomAbovePairs = Some(0L))))
+  }
+
   test("d15: the bloom candidate-restriction route is bit-identical to the exact semi-join") {
-    // graft.dedup.bloomCandidateThreshold=0 forces the map-side bloom
-    // route (the configured-scale path); unset conf is the default exact
-    // left-semi. False positives must never reach the output.
-    def run(): Seq[org.apache.spark.sql.Row] =
-      SparkEntry.queries("d15_verified_dedup_groups")(spark, sf001).collect().toSeq
-    try {
-      spark.conf.set("graft.dedup.bloomCandidateThreshold", "0")
-      val viaBloom = run()
-      spark.conf.unset("graft.dedup.bloomCandidateThreshold")
-      val viaSemi = run()
-      assert(viaBloom == viaSemi, "bloom route changed the verified components")
-      assert(viaBloom.nonEmpty)
-    } finally spark.conf.unset("graft.dedup.bloomCandidateThreshold")
+    // a fixture corpus sits under the gate, so the default route is the
+    // exact left-semi. False positives must never reach the pair stats.
+    val (viaSemi, viaBloom) = d15PairStatsBothRoutes(sf001)
+    assert(viaBloom == viaSemi, "bloom route changed the verified pair stats")
+    assert(viaBloom.nonEmpty)
   }
 
   test("d15 auto route: the parquet-footer gate reads the exact corpus " +
     "count without a job, and an auto-engaged bloom cut is bit-identical " +
     "to the default semi-join route") {
+    import ops.Dedup.{AutoBloomDocs, AutoBloomPairs, bloomGate, footerRowCount}
     // footer metadata == the true row count (this is the zero-job signal
     // the auto gate routes on)
     val docs = Tables.documents(spark, sf0001)
-    assert(graft.ops.Dedup.footerRowCount(docs).contains(docs.count()))
-    val base = SparkEntry.queries("d15_verified_dedup_groups")(spark, sf0001)
-      .collect().map(_.toSeq).toSeq
-    try {
-      // force the auto gate open (fixtures sit far below the real 200k
-      // default): no bloomCandidateThreshold conf is set, yet the bloom
-      // route must engage and change nothing
-      spark.conf.set("graft.dedup.autoBloomDocs", "0")
-      spark.conf.set("graft.dedup.autoBloomPairs", "0")
-      val auto = SparkEntry.queries("d15_verified_dedup_groups")(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      assert(auto == base, "auto-engaged bloom route changed the output")
-    } finally {
-      spark.conf.unset("graft.dedup.autoBloomDocs")
-      spark.conf.unset("graft.dedup.autoBloomPairs")
-    }
+    assert(footerRowCount(docs).contains(docs.count()))
+    // the gate at its constants: shut up to AutoBloomDocs corpus rows,
+    // open (at AutoBloomPairs candidate pairs) above them
+    assert(bloomGate(footerRowCount(docs)).isEmpty,
+      "a fixture corpus must keep the exact semi-join route")
+    assert(bloomGate(Some(AutoBloomDocs)).isEmpty)
+    assert(bloomGate(Some(AutoBloomDocs + 1)).contains(AutoBloomPairs))
+    // a frame with no parquet footers is of unknown size: gate stays shut
+    val mem = spark.range(10).toDF("id")
+    assert(footerRowCount(mem).isEmpty && bloomGate(footerRowCount(mem)).isEmpty)
+    // the engaged bloom cut changes nothing against the default route
+    val (base, bloom) = d15PairStatsBothRoutes(sf0001)
+    assert(bloom == base, "auto-engaged bloom route changed the output")
   }
 
   test("t27: exactly ceil(n/5) docs per stratum, identical under any shuffle-partition count") {

@@ -174,6 +174,13 @@ class RoundFourteenSpec extends SparkTestBase {
     assert(Incremental.gcCatalogHistory(spark, cat, retain = 1) === Seq(2),
       "v1 pinned by the intact lease, v2's pin released/garbage → reclaimed")
     assert(Incremental.catalogVersions(cat) === Seq(1, 3))
+    // a pinned read through the garbage lease fails loudly, naming the
+    // holder, instead of an index or number-format crash
+    val e = intercept[IllegalArgumentException] {
+      Incremental.resolvePinnedCatalog(cat, "broken-reader", expect = 1)
+    }
+    assert(e.getMessage.contains("broken-reader") && e.getMessage.contains("re-acquire"),
+      e.getMessage)
   }
 
   test("d73 physical outcome: the cell gate HOLDS at sf0.001 (catalog " +

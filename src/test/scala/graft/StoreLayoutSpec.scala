@@ -69,48 +69,49 @@ class StoreLayoutSpec extends SparkTestBase {
   // generation's spec from the catalog so they ride any migrated count.
 
   test("scaleBuckets grows with source rows and falls back to seed") {
+    import ops.BucketedStore.{SourceRowsPerBucket => per, bucketsForRows, scaleBuckets}
     // in-memory frame: no parquet footers -> conservative seed
     val mem = (1L to 1000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
-    assert(ops.BucketedStore.scaleBuckets(mem) == 8)
-    // parquet-backed frame: ladder over the footer row count
+    assert(scaleBuckets(mem) == 8)
+    // parquet-backed frame: ladder over the footer row count, and a
+    // budget covering the corpus keeps the seed layout
     val dir = Scratch.dir("graft_layout_scale_src")
     (1L to 1000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)
-    val src = spark.read.parquet(dir)
-    spark.conf.set("graft.store.rowsPerBucket", "16")
-    try {
-      // 1000 rows / budget 16 -> first 8*2^k with 16*b >= 1000 is 64
-      assert(ops.BucketedStore.scaleBuckets(src) == 64)
-      spark.conf.set("graft.store.rowsPerBucket", "4000")
-      assert(ops.BucketedStore.scaleBuckets(src) == 8,
-        "a budget covering the corpus keeps the seed layout")
-    } finally spark.conf.unset("graft.store.rowsPerBucket")
+    assert(scaleBuckets(spark.read.parquet(dir)) == 8)
+    // the ladder: the first 8*2^k with per*b >= rows, capped at 1024
+    assert(bucketsForRows(0L) == 8)
+    assert(bucketsForRows(8 * per) == 8, "up to 8 budgets keep the seed layout")
+    assert(bucketsForRows(8 * per + 1) == 16)
+    assert(bucketsForRows(64 * per) == 64)
+    assert(bucketsForRows(64 * per + 1) == 128)
+    assert(bucketsForRows(1024 * per) == 1024)
+    assert(bucketsForRows(1L << 40) == 1024, "the ladder caps at 1024")
   }
 
   test("posting store derives a grown bucket count and appends ride it") {
+    // one source row past the seed layout's budget -> 16 buckets
+    val rows = 8 * ops.BucketedStore.SourceRowsPerBucket + 1
     val dir = Scratch.dir("graft_layout_grown_src")
-    (1L to 300L).map(i => (i, s"alpha beta w$i gamma"))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    spark.range(1L, rows + 1).select($"id".as("doc_id"),
+        concat(lit("alpha beta w"), $"id", lit(" gamma")).as("text"))
+      .write.mode("overwrite").parquet(dir)
     val docs = spark.read.parquet(dir)
-    spark.conf.set("graft.store.rowsPerBucket", "16")
-    try {
-      // 300 docs / budget 16 -> 32 buckets (8*16=128 < 300 <= 32*16)
-      val table = ops.TextAnalysis.writePostingStore(
-        spark, ops.TextAnalysis.postingsOf(docs), "layout_grown")
-      assert(ops.BucketedStore.bucketCountOf(spark, table) == 32,
-        "first write must scale the bucket count with the source")
-      val files = dataFiles(tableDir(table))
-      assert(files.nonEmpty && files.size <= 32,
-        s"grown posting store wrote ${files.size} files, expected <= 32")
-      // append resolves the STORED spec (32), not the seed: a mismatched
-      // bucketBy would throw in Spark's validation, and the file delta
-      // stays <= the grown bucket count
-      ops.TextAnalysis.appendPostingStore(spark,
-        ops.TextAnalysis.postingsOf(docs.limit(40)), table)
-      val after = dataFiles(tableDir(table))
-      assert(after.size - files.size <= 32,
-        s"append added ${after.size - files.size} files, expected <= 32")
-    } finally spark.conf.unset("graft.store.rowsPerBucket")
+    val table = ops.TextAnalysis.writePostingStore(
+      spark, ops.TextAnalysis.postingsOf(docs), "layout_grown")
+    assert(ops.BucketedStore.bucketCountOf(spark, table) == 16,
+      "first write must scale the bucket count with the source")
+    val files = dataFiles(tableDir(table))
+    assert(files.nonEmpty && files.size <= 16,
+      s"grown posting store wrote ${files.size} files, expected <= 16")
+    // append resolves the STORED spec (16), not the seed: a mismatched
+    // bucketBy would throw in Spark's validation, and the file delta
+    // stays <= the grown bucket count
+    ops.TextAnalysis.appendPostingStore(spark,
+      ops.TextAnalysis.postingsOf(docs.limit(40)), table)
+    val after = dataFiles(tableDir(table))
+    assert(after.size - files.size <= 16,
+      s"append added ${after.size - files.size} files, expected <= 16")
   }
 
   test("bucketCountOf rejects an unbucketed table") {

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class UnigramSpec extends SparkTestBase {
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val olds = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("viterbi: pieces concatenate back to the word, ties pick the " +
     "longest last piece, and a cheap whole-word piece wins") {
     val cost = Map("a" -> 100L, "b" -> 100L, "ab" -> 150L, "abab" -> 10L)
@@ -35,22 +26,22 @@ class UnigramSpec extends SparkTestBase {
 
   test("driver and distributed routes are bit-identical on the real " +
     "corpus: same piece table, same per-type segmentation") {
-    val driver = SparkEntry.queries("t36_unigram_pieces")(spark, sf0001).collect()
-    val dist = withConf("graft.unigram.driverThreshold" -> "0") {
-      SparkEntry.queries("t36_unigram_pieces")(spark, sf0001).collect()
-    }
+    import ops.UnigramTokenizer.{learnDistributed, learnDriver}
+    val s = spark
+    import s.implicits._
+    val census = ops.Dedup.reuse(ops.UnigramTokenizer.wordCensus(spark, sf0001))
+    val rows = census.select("word", "freq").as[(String, Long)]
+      .collect().sortBy(_._1).toSeq
+    val (driver, segD) = learnDriver(rows)
+    val (dist, segX) = learnDistributed(spark, census)
     assert(driver.length == dist.length,
       s"vocab sizes differ: ${driver.length} vs ${dist.length}")
     driver.zip(dist).foreach { case (a, b) =>
       assert(a == b, s"piece-table row diverged: $a vs $b")
     }
-    val segD = SparkEntry.queries("t37_unigram_segment")(spark, sf0001)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val segX = withConf("graft.unigram.driverThreshold" -> "0") {
-      SparkEntry.queries("t37_unigram_segment")(spark, sf0001)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    }
-    assert(segD == segX, "per-doc segmentation counts diverged between routes")
+    val perTypeX = segX.as[(String, Long)].collect().toMap
+    assert(perTypeX.size == rows.size && segD.toMap == perTypeX,
+      "per-type segmentation counts diverged between routes")
   }
 
   test("E-step counts recounted from scratch: Viterbi under the final " +
