@@ -210,7 +210,7 @@ object Dedup {
     * triggered budget changes results, so oracle-verified runs must
     * leave it unset (the census line makes a triggered run impossible
     * to miss). */
-  val DefaultEdgeBudgetConf = "graft.dedup.maxCandidateEdges"
+  val EdgeBudgetConf = "graft.dedup.maxCandidateEdges"
 
   private def edgeBudgetCap(buckets: DataFrame, budget: Long): Long = {
     val hist = buckets.groupBy("band", "band_key").agg(count(lit(1)).as("n"))
@@ -252,7 +252,7 @@ object Dedup {
   def candidatePairs(buckets0: DataFrame, cap: Long = DefaultBucketCap,
       materialize: Boolean = true): DataFrame = {
     val all = if (materialize) reuse(buckets0) else buckets0
-    val budget = all.sparkSession.conf.getOption(DefaultEdgeBudgetConf)
+    val budget = all.sparkSession.conf.getOption(EdgeBudgetConf)
       .map(_.toLong).getOrElse(0L)
     val effCap =
       if (budget > 0) math.min(cap, edgeBudgetCap(all, budget)) else cap

@@ -973,12 +973,13 @@ object Incremental {
     * serving generations published by OTHER processes: a micro-batch
     * that resolves after a foreign maintainer's CAS publish registers
     * the new generation on the fly and probes it with the full layout
-    * contract. */
+    * contract. Only a line that does not decode passes through; a handle
+    * that decodes but fails to register is an error, not metadata. */
   def resolvePortableCatalog(s: org.apache.spark.sql.SparkSession,
       path: String, expect: Int): Seq[String] =
     resolveCatalog(path, expect).map { l =>
-      try registerHandle(s, PortableHandle.decode(l))
-      catch { case scala.util.control.NonFatal(_) => l }
+      // Option.fold, not Try.fold: a registration error must propagate
+      scala.util.Try(PortableHandle.decode(l)).toOption.fold(l)(registerHandle(s, _))
     }
 
   /** Resolve the current generation through the pointer (see

@@ -1651,6 +1651,62 @@ object StreamingQueries {
     s.read.parquet(outDir).orderBy("doc_id")
   }
 
+  /** Lands `df` in `watched` as the ONE file `arrival<b>.parquet`: written
+    * coalesced to the scratch dir `tmp`, then its single part file is
+    * moved in, so a file stream over `watched` sees the wave whole. */
+  private[graft] def landArrival(df: DataFrame, tmp: String, watched: String,
+      b: Int): Unit = {
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      new java.io.File(watched, s"arrival$b.parquet").toPath): Unit
+  }
+
+  /** The two-wave file stream under s31–s43 (the streaming form of the
+    * reference mapper, which stages its split as one local file and runs
+    * the pipeline over it). Wave `b` (0, then 1) is landed as one file in
+    * `graft_<tag>_watched` and drained by its own `AvailableNow` run over
+    * the shared checkpoint `graft_<tag>_ckpt`, so the second run
+    * processes only the new file: deterministic batch membership that an
+    * oracle can replay. `onBatch(batch, b, batchId)` runs on the wave's
+    * one non-empty micro-batch; `between` is the maintenance window after
+    * wave 0's run.
+    *
+    * The one-file-one-batch guard counts NON-EMPTY batches, not the raw
+    * micro-batch id: Spark may run an intervening no-data batch
+    * (consuming an id) without breaking the contract, so equating the
+    * wave with `batchId` would fail spuriously on the next real batch.
+    * Two non-empty batches inside one wave (e.g. a session
+    * maxFilesPerTrigger conf splitting the file) still fail loudly
+    * instead of writing two census rows under one key. */
+  private[graft] def waveStream(s: SparkSession, tag: String, schema: String,
+      wave: Int => DataFrame, between: => Unit = ())(
+      onBatch: (DataFrame, Int, Long) => Unit): Unit = {
+    val watched = graft.Scratch.dir(s"graft_${tag}_watched")
+    val ckpt = graft.Scratch.dir(s"graft_${tag}_ckpt")
+    val nonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
+    (0 to 1).foreach { b =>
+      landArrival(wave(b), graft.Scratch.dir(s"graft_${tag}_wave$b"), watched, b)
+      s.readStream.schema(schema).parquet(watched)
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!batch.isEmpty) {
+            require(nonEmpty.getAndIncrement() == b.toLong,
+              s"$tag wave $b saw a second non-empty micro-batch ($batchId): " +
+                "one-file-one-batch broken")
+            onBatch(batch, b, batchId)
+          }
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      if (b == 0) between
+    }
+  }
+
   /** The streaming form of p02 — the stores are MAINTAINED by the
     * stream. s30 admits arrivals against a STATIC corpus index (two
     * micro-batches of near-identical new docs both pass, because neither
@@ -1663,9 +1719,8 @@ object StreamingQueries {
     * proves for the batch pipeline (the spec re-proves it on THIS
     * query's run).
     *
-    * Arrivals reach the stream as two waves (doc_id % 2) of one file
-    * each, each drained by its own AvailableNow run over a shared
-    * checkpoint — deterministic micro-batch boundaries, so the DuckDB
+    * Arrivals reach the stream as two waves (doc_id % 2) through
+    * [[waveStream]] — deterministic micro-batch boundaries, so the DuckDB
     * oracle replays the exact two-batch sequence with the shared
     * chained-CTE generator ([[graft.ops.Incremental.replayOracle]]). */
   private val s31 = Q("s31_stream_incremental_curation",
@@ -1675,50 +1730,13 @@ object StreamingQueries {
     val corpus = docs.filter(col("doc_id") % 11 =!= 5)
     val (idxTable, exDir, shDir) = Incremental.initStores(s, corpus, "s31")
     val arrivals = docs.filter(col("doc_id") % 11 === 5)
-    val watched = graft.Scratch.dir("graft_s31_watched")
     val outDir = graft.Scratch.dir("graft_s31_out")
-    val ckpt = graft.Scratch.dir("graft_s31_ckpt")
     s31LastStores = (idxTable, exDir, shDir)
-    val s31NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      // wave b arrives as ONE new file; the shared checkpoint makes the
-      // second run process only it — deterministic batch membership
-      val tmp = graft.Scratch.dir(s"graft_s31_wave$b")
-      arrivals.filter(col("doc_id") % 2 === lit(b.toLong))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // contract: one new file → ONE non-empty micro-batch per wave.
-          // Keyed on the count of NON-EMPTY batches seen, NOT the raw
-          // micro-batch id: Spark may run an intervening no-data batch
-          // (consuming an id) without violating the contract, so
-          // equating the wave counter with batchId would fail spuriously
-          // on the next real batch. Two non-empty batches inside one
-          // wave (e.g. a session maxFilesPerTrigger conf splitting the
-          // file) still fail loudly instead of writing two census rows
-          // under one key.
-          if (!batch.isEmpty) {
-            require(s31NonEmpty.getAndIncrement() == b.toLong,
-              s"s31 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            val (row, _) = Incremental.admitBatch(s, batch.toDF(),
-              "batch", b.toLong, idxTable, exDir, shDir)
-            row.write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    waveStream(s, "s31", "doc_id LONG, t STRING",
+      b => arrivals.filter(col("doc_id") % 2 === lit(b.toLong))) { (batch, b, _) =>
+      val (row, _) = Incremental.admitBatch(s, batch,
+        "batch", b.toLong, idxTable, exDir, shDir)
+      row.write.mode("append").parquet(outDir)
     }
     s.read.parquet(outDir).orderBy("batch")
   }
@@ -1754,55 +1772,26 @@ object StreamingQueries {
     val corpus = docs.filter(col("doc_id") % 11 =!= 5)
     val (idxTable, exDir, shDir) = Incremental.initOwnedStores(s, corpus, "s32")
     val arrivals = docs.filter(col("doc_id") % 11 === 5)
-    val watched = graft.Scratch.dir("graft_s32_watched")
     val outDir = graft.Scratch.dir("graft_s32_out")
-    val ckpt = graft.Scratch.dir("graft_s32_ckpt")
     val tombDir = graft.Scratch.dir("graft_s32_tomb")
     // the stream starts against an EMPTY tombstone store; the body
     // re-reads it every micro-batch
     corpus.select(col("doc_id")).limit(0)
       .write.mode("overwrite").parquet(tombDir)
     s32LastStores = (idxTable, exDir, shDir)
-    val s32NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s32_wave$b")
-      arrivals.filter(col("doc_id") % 2 === lit(b.toLong))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s32NonEmpty.getAndIncrement() == b.toLong,
-              s"s32 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the CURRENT tombstone set, read fresh each batch — this is
-            // the contract under test: state written between batches
-            // must bind the next admission
-            val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
-            val (row, _) = Incremental.admitBatch(s, batch.toDF(),
-              "batch", b.toLong, idxTable, exDir, shDir,
-              owned = true, tomb = Some(tomb))
-            row.write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
-        // the takedown lands BETWEEN micro-batches
-        corpus.filter(Incremental.removedPred).select("doc_id")
-          .write.mode("overwrite").parquet(tombDir)
-      }
+    waveStream(s, "s32", "doc_id LONG, t STRING",
+      b => arrivals.filter(col("doc_id") % 2 === lit(b.toLong)),
+      // the takedown lands BETWEEN micro-batches
+      between = corpus.filter(Incremental.removedPred).select("doc_id")
+        .write.mode("overwrite").parquet(tombDir)) { (batch, b, _) =>
+      // the CURRENT tombstone set, read fresh each batch — this is
+      // the contract under test: state written between batches
+      // must bind the next admission
+      val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
+      val (row, _) = Incremental.admitBatch(s, batch,
+        "batch", b.toLong, idxTable, exDir, shDir,
+        owned = true, tomb = Some(tomb))
+      row.write.mode("append").parquet(outDir)
     }
     s.read.parquet(outDir).orderBy("batch")
   }
@@ -1838,50 +1827,14 @@ object StreamingQueries {
     val cat = graft.Scratch.dir("graft_s33_cat") + "/stores.catalog"
     Incremental.commitCatalogCas(cat)((_, _) => Seq(idx1, ex1, sh1))
     val arrivals = docs.filter(col("doc_id") % 11 === 5)
-    val watched = graft.Scratch.dir("graft_s33_watched")
     val outDir = graft.Scratch.dir("graft_s33_out")
-    val ckpt = graft.Scratch.dir("graft_s33_ckpt")
     val tombDir = graft.Scratch.dir("graft_s33_tomb")
     corpus.select(col("doc_id")).limit(0)
       .write.mode("overwrite").parquet(tombDir)
     s33Catalog = cat
-    val s33NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s33_wave$b")
-      arrivals.filter(col("doc_id") % 2 === lit(b.toLong))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s33NonEmpty.getAndIncrement() == b.toLong,
-              s"s33 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the CURRENT generation and the CURRENT tombstone set,
-            // both re-read each batch — this is the contract under
-            // test: maintenance between batches binds the next one
-            val Seq(idx, ex, sh) = Incremental.resolveCatalog(cat, expect = 3)
-            val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
-            val (row, _) = Incremental.admitBatch(s, batch.toDF(),
-              "batch", b.toLong, idx, ex, sh,
-              owned = true, tomb = Some(tomb))
-            row.write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s33", "doc_id LONG, t STRING",
+      b => arrivals.filter(col("doc_id") % 2 === lit(b.toLong)),
+      between = {
         // the maintenance window between micro-batches: takedown lands,
         // compaction rewrites the CURRENT generation (wave-0 admissions
         // included) minus the tombstoned corpus docs, one atomic publish
@@ -1894,7 +1847,16 @@ object StreamingQueries {
         Incremental.commitCatalogCas(cat)((_, _) => Seq(i2, e2, h2))
         corpus.select(col("doc_id")).limit(0)
           .write.mode("overwrite").parquet(tombDir)
-      }
+      }) { (batch, b, _) =>
+      // the CURRENT generation and the CURRENT tombstone set,
+      // both re-read each batch — this is the contract under
+      // test: maintenance between batches binds the next one
+      val Seq(idx, ex, sh) = Incremental.resolveCatalog(cat, expect = 3)
+      val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
+      val (row, _) = Incremental.admitBatch(s, batch,
+        "batch", b.toLong, idx, ex, sh,
+        owned = true, tomb = Some(tomb))
+      row.write.mode("append").parquet(outDir)
     }
     s.read.parquet(outDir).orderBy("batch")
   }
@@ -1990,61 +1952,12 @@ object StreamingQueries {
     Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen1))
     val tombDir = graft.Scratch.dir("graft_s34_tomb")
     e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
-    val watched = graft.Scratch.dir("graft_s34_watched")
     val outDir = graft.Scratch.dir("graft_s34_out")
-    val ckpt = graft.Scratch.dir("graft_s34_ckpt")
     s34Catalog = cat
-    val s34NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s34_wave$b")
-      Tables.embeddings(s, d).filter(col("vec_id") % 20 === lit(5L + 10L * b))
-        .select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s34NonEmpty.getAndIncrement() == b.toLong,
-              s"s34 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the CURRENT generation and the CURRENT tombstone set, both
-            // re-resolved each batch — the contract under test
-            val idxTable = Incremental.resolveCatalog(cat, expect = 1).head
-            val tomb = s.read.schema("vec_id LONG").parquet(tombDir)
-            val bAssign = Similarity.ivfAssignAgainst(
-              batch.toDF()
-                .select(col("vec_id"), quantize(col("embedding")).as("v"))
-                .withColumn("n2", norm2Q(col("v"))),
-              cents).localCheckpoint(true)
-            val liveIdx = s.table(idxTable)
-              .join(broadcast(tomb.select(col("vec_id").as("cid"))),
-                Seq("cid"), "left_anti")
-            Similarity.probeIvfTopK(liveIdx,
-                bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
-                  col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
-              .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
-                col("cid"), col("rank"), col("cosine"))
-              .write.mode("append").parquet(outDir)
-            // maintained-index ingest: this batch's vectors become
-            // retrievable by every later arrival (probe-then-append, so
-            // a vector never ranks against itself within its own batch)
-            Similarity.appendIvfIndex(s, bAssign, idxTable)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s34", "vec_id LONG, embedding ARRAY<FLOAT>",
+      b => Tables.embeddings(s, d).filter(col("vec_id") % 20 === lit(5L + 10L * b))
+        .select(col("vec_id"), col("embedding")),
+      between = {
         // maintenance window: takedown lands, compaction rewrites the
         // CURRENT generation (wave-0 appends included) minus tombstoned
         // corpus vectors, one atomic publish swaps, tombstones clear
@@ -2055,7 +1968,28 @@ object StreamingQueries {
           s.read.schema("vec_id LONG").parquet(tombDir), "ivf_s34c")
         Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2))
         e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
-      }
+      }) { (batch, b, _) =>
+      // the CURRENT generation and the CURRENT tombstone set, both
+      // re-resolved each batch — the contract under test
+      val idxTable = Incremental.resolveCatalog(cat, expect = 1).head
+      val tomb = s.read.schema("vec_id LONG").parquet(tombDir)
+      val bAssign = Similarity.ivfAssignAgainst(
+        batch.select(col("vec_id"), quantize(col("embedding")).as("v"))
+          .withColumn("n2", norm2Q(col("v"))),
+        cents).localCheckpoint(true)
+      val liveIdx = s.table(idxTable)
+        .join(broadcast(tomb.select(col("vec_id").as("cid"))),
+          Seq("cid"), "left_anti")
+      Similarity.probeIvfTopK(liveIdx,
+          bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
+            col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
+        .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
+          col("cid"), col("rank"), col("cosine"))
+        .write.mode("append").parquet(outDir)
+      // maintained-index ingest: this batch's vectors become
+      // retrievable by every later arrival (probe-then-append, so
+      // a vector never ranks against itself within its own batch)
+      Similarity.appendIvfIndex(s, bAssign, idxTable)
     }
     s.read.parquet(outDir).orderBy("wave", "qid", "rank")
   }
@@ -2217,85 +2151,56 @@ object StreamingQueries {
         lit(1L).as("wave"))
     val arrivals = variants.unionByName(twins)
 
-    val watched = graft.Scratch.dir("graft_s35_watched")
     val outDir = graft.Scratch.dir("graft_s35_out")
-    val ckpt = graft.Scratch.dir("graft_s35_ckpt")
     val tombDir = graft.Scratch.dir("graft_s35_tomb")
     corpus.select(col("id")).limit(0).write.mode("overwrite").parquet(tombDir)
-    val s35NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s35_wave$b")
-      arrivals.filter(col("wave") === lit(b.toLong)).select("id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("id", LongType),
-          StructField("payload", BinaryType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s35NonEmpty.getAndIncrement() == b.toLong,
-              s"s35 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            val tomb = s.read.schema("id LONG").parquet(tombDir)
-            // ONE batch digest serves both probes and the store appends
-            val aS = Dedup.reuse(Multimodal.sigs(batch.toDF()))
-            val aBands = Dedup.reuse(Multimodal.bands(aS))
-            val cand = Dedup.reuse(Dedup.probeBandIndex(s, idxTable, aBands
-              .select(col("b").as("band"), col("bits").as("band_key"), col("id"))))
-            val arrIds = aS.select("id")
-            val stored = s.read.schema("id LONG, si ARRAY<BIGINT>").parquet(sigDir)
-            // admitted is the pre-append materialization boundary: the
-            // census and the appends below all consume it, and the sig
-            // store must not be re-read after its own append (s30's
-            // cache-invalidation lesson)
-            val adm = Dedup.reuse(
-              Multimodal.mediaAdmissions(arrIds, aS, cand, stored, Some(tomb)))
-            val admNoTomb = Dedup.reuse(
-              Multimodal.mediaAdmissions(arrIds, aS, cand, stored, None))
-            // census row written BEFORE the appends (its lazy inputs
-            // still read the pre-append stores)
-            adm.agg(count(lit(1)).as("n_admitted"),
-                coalesce(sum(col("id")), lit(0L)).as("sum_admitted_ids"))
-              .crossJoin(broadcast(arrIds.agg(count(lit(1)).as("n_arrived"))))
-              .crossJoin(broadcast(arrIds.join(adm, Seq("id"), "left_anti")
-                .agg(count(when(col("id") >= 1000000L, 1)).as("n_twins_dropped"))))
-              .crossJoin(broadcast(adm.join(admNoTomb, Seq("id"), "left_anti")
-                .agg(count(lit(1)).as("n_readmitted"))))
-              .select(lit(b.toLong).as("wave"), col("n_arrived"),
-                (col("n_arrived") - col("n_admitted")).as("n_dropped"),
-                col("n_admitted"), col("n_twins_dropped"), col("n_readmitted"),
-                col("sum_admitted_ids"))
-              .write.mode("append").parquet(outDir)
-            // maintain the stores with the ADMITTED rows only — the
-            // cross-batch claim: a wave-1 twin of an admitted wave-0
-            // scramble must be caught by these appended rows
-            Dedup.appendBandIndex(s,
-              aBands.join(adm, Seq("id"))
-                .select(col("b").as("band"), col("bits").as("band_key"), col("id")),
-              idxTable)
-            aS.select(col("id"), col("si")).join(adm, Seq("id"))
-              .write.mode("append").parquet(sigDir)
-            aS.unpersist(); aBands.unpersist(); cand.unpersist()
-            adm.unpersist(); admNoTomb.unpersist(): Unit
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
-        // the media takedown lands BETWEEN micro-batches (the s32 shape;
-        // reclamation of the dead store rows is m11 compaction's job)
-        corpus.filter(col("id") % 9 === 4).select("id")
-          .write.mode("overwrite").parquet(tombDir)
-      }
+    waveStream(s, "s35", "id LONG, payload BINARY",
+      b => arrivals.filter(col("wave") === lit(b.toLong)).select("id", "payload"),
+      // the media takedown lands BETWEEN micro-batches (the s32 shape;
+      // reclamation of the dead store rows is m11 compaction's job)
+      between = corpus.filter(col("id") % 9 === 4).select("id")
+        .write.mode("overwrite").parquet(tombDir)) { (batch, b, _) =>
+      val tomb = s.read.schema("id LONG").parquet(tombDir)
+      // ONE batch digest serves both probes and the store appends
+      val aS = Dedup.reuse(Multimodal.sigs(batch))
+      val aBands = Dedup.reuse(Multimodal.bands(aS))
+      val cand = Dedup.reuse(Dedup.probeBandIndex(s, idxTable, aBands
+        .select(col("b").as("band"), col("bits").as("band_key"), col("id"))))
+      val arrIds = aS.select("id")
+      val stored = s.read.schema("id LONG, si ARRAY<BIGINT>").parquet(sigDir)
+      // admitted is the pre-append materialization boundary: the
+      // census and the appends below all consume it, and the sig
+      // store must not be re-read after its own append (s30's
+      // cache-invalidation lesson)
+      val adm = Dedup.reuse(
+        Multimodal.mediaAdmissions(arrIds, aS, cand, stored, Some(tomb)))
+      val admNoTomb = Dedup.reuse(
+        Multimodal.mediaAdmissions(arrIds, aS, cand, stored, None))
+      // census row written BEFORE the appends (its lazy inputs
+      // still read the pre-append stores)
+      adm.agg(count(lit(1)).as("n_admitted"),
+          coalesce(sum(col("id")), lit(0L)).as("sum_admitted_ids"))
+        .crossJoin(broadcast(arrIds.agg(count(lit(1)).as("n_arrived"))))
+        .crossJoin(broadcast(arrIds.join(adm, Seq("id"), "left_anti")
+          .agg(count(when(col("id") >= 1000000L, 1)).as("n_twins_dropped"))))
+        .crossJoin(broadcast(adm.join(admNoTomb, Seq("id"), "left_anti")
+          .agg(count(lit(1)).as("n_readmitted"))))
+        .select(lit(b.toLong).as("wave"), col("n_arrived"),
+          (col("n_arrived") - col("n_admitted")).as("n_dropped"),
+          col("n_admitted"), col("n_twins_dropped"), col("n_readmitted"),
+          col("sum_admitted_ids"))
+        .write.mode("append").parquet(outDir)
+      // maintain the stores with the ADMITTED rows only — the
+      // cross-batch claim: a wave-1 twin of an admitted wave-0
+      // scramble must be caught by these appended rows
+      Dedup.appendBandIndex(s,
+        aBands.join(adm, Seq("id"))
+          .select(col("b").as("band"), col("bits").as("band_key"), col("id")),
+        idxTable)
+      aS.select(col("id"), col("si")).join(adm, Seq("id"))
+        .write.mode("append").parquet(sigDir)
+      aS.unpersist(); aBands.unpersist(); cand.unpersist()
+      adm.unpersist(); admNoTomb.unpersist(): Unit
     }
     s.read.parquet(outDir).orderBy("wave")
   }
@@ -2344,71 +2249,13 @@ object StreamingQueries {
         lit(1L).as("wave"))
     val arrivals = variants.unionByName(twins)
 
-    val watched = graft.Scratch.dir("graft_s36_watched")
     val outDir = graft.Scratch.dir("graft_s36_out")
-    val ckpt = graft.Scratch.dir("graft_s36_ckpt")
     val tombDir = graft.Scratch.dir("graft_s36_tomb")
     corpus.select(col("id")).limit(0).write.mode("overwrite").parquet(tombDir)
     s36Catalog = cat
-    val s36NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s36_wave$b")
-      arrivals.filter(col("wave") === lit(b.toLong)).select("id", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("id", LongType),
-          StructField("payload", BinaryType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s36NonEmpty.getAndIncrement() == b.toLong,
-              s"s36 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the CURRENT generation and the CURRENT tombstone set,
-            // both re-resolved each batch — the contract under test
-            val handles = Incremental.resolveCatalog(cat, expect = 2)
-            val (idx, sigD) = (handles(0), handles(1))
-            val tomb = s.read.schema("id LONG").parquet(tombDir)
-            val aS = Dedup.reuse(Multimodal.sigs(batch.toDF()))
-            val aBands = Dedup.reuse(Multimodal.bands(aS))
-            val cand = Dedup.reuse(Dedup.probeBandIndex(s, idx, aBands
-              .select(col("b").as("band"), col("bits").as("band_key"), col("id"))))
-            val arrIds = aS.select("id")
-            val stored = s.read.schema("id LONG, si ARRAY<BIGINT>").parquet(sigD)
-            val adm = Dedup.reuse(
-              Multimodal.mediaAdmissions(arrIds, aS, cand, stored, Some(tomb)))
-            adm.agg(count(lit(1)).as("n_admitted"),
-                coalesce(sum(col("id")), lit(0L)).as("sum_admitted_ids"))
-              .crossJoin(broadcast(arrIds.agg(count(lit(1)).as("n_arrived"))))
-              .crossJoin(broadcast(arrIds.join(adm, Seq("id"), "left_anti")
-                .agg(count(when(col("id") >= 1000000L, 1)).as("n_twins_dropped"))))
-              .select(lit(b.toLong).as("wave"), col("n_arrived"),
-                (col("n_arrived") - col("n_admitted")).as("n_dropped"),
-                col("n_admitted"), col("n_twins_dropped"),
-                col("sum_admitted_ids"))
-              .write.mode("append").parquet(outDir)
-            Dedup.appendBandIndex(s,
-              aBands.join(adm, Seq("id"))
-                .select(col("b").as("band"), col("bits").as("band_key"), col("id")),
-              idx)
-            aS.select(col("id"), col("si")).join(adm, Seq("id"))
-              .write.mode("append").parquet(sigD)
-            aS.unpersist(); aBands.unpersist(); cand.unpersist()
-            adm.unpersist(): Unit
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s36", "id LONG, payload BINARY",
+      b => arrivals.filter(col("wave") === lit(b.toLong)).select("id", "payload"),
+      between = {
         // maintenance window: takedown lands, BOTH stores compact into a
         // new generation (carrying wave-0's in-stream admissions), one
         // atomic publish swaps, the consumed tombstones clear
@@ -2428,7 +2275,38 @@ object StreamingQueries {
             .distinct().write.mode("overwrite").parquet(sig2))
         Incremental.commitCatalogCas(cat)((_, _) => Seq(idx2, sig2))
         corpus.select(col("id")).limit(0).write.mode("overwrite").parquet(tombDir)
-      }
+      }) { (batch, b, _) =>
+      // the CURRENT generation and the CURRENT tombstone set,
+      // both re-resolved each batch — the contract under test
+      val handles = Incremental.resolveCatalog(cat, expect = 2)
+      val (idx, sigD) = (handles(0), handles(1))
+      val tomb = s.read.schema("id LONG").parquet(tombDir)
+      val aS = Dedup.reuse(Multimodal.sigs(batch))
+      val aBands = Dedup.reuse(Multimodal.bands(aS))
+      val cand = Dedup.reuse(Dedup.probeBandIndex(s, idx, aBands
+        .select(col("b").as("band"), col("bits").as("band_key"), col("id"))))
+      val arrIds = aS.select("id")
+      val stored = s.read.schema("id LONG, si ARRAY<BIGINT>").parquet(sigD)
+      val adm = Dedup.reuse(
+        Multimodal.mediaAdmissions(arrIds, aS, cand, stored, Some(tomb)))
+      adm.agg(count(lit(1)).as("n_admitted"),
+          coalesce(sum(col("id")), lit(0L)).as("sum_admitted_ids"))
+        .crossJoin(broadcast(arrIds.agg(count(lit(1)).as("n_arrived"))))
+        .crossJoin(broadcast(arrIds.join(adm, Seq("id"), "left_anti")
+          .agg(count(when(col("id") >= 1000000L, 1)).as("n_twins_dropped"))))
+        .select(lit(b.toLong).as("wave"), col("n_arrived"),
+          (col("n_arrived") - col("n_admitted")).as("n_dropped"),
+          col("n_admitted"), col("n_twins_dropped"),
+          col("sum_admitted_ids"))
+        .write.mode("append").parquet(outDir)
+      Dedup.appendBandIndex(s,
+        aBands.join(adm, Seq("id"))
+          .select(col("b").as("band"), col("bits").as("band_key"), col("id")),
+        idx)
+      aS.select(col("id"), col("si")).join(adm, Seq("id"))
+        .write.mode("append").parquet(sigD)
+      aS.unpersist(); aBands.unpersist(); cand.unpersist()
+      adm.unpersist(): Unit
     }
     s.read.parquet(outDir).orderBy("wave")
   }
@@ -2578,15 +2456,11 @@ object StreamingQueries {
     // maintenance reads (NOT fixture knowledge)
     val logDir = graft.Scratch.dir("graft_s37_log")
     e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(logDir)
-    val watched = graft.Scratch.dir("graft_s37_watched")
     val outDir = graft.Scratch.dir("graft_s37_out")
-    val ckpt = graft.Scratch.dir("graft_s37_ckpt")
     s37Acted = false
     val a0vec = e.filter(col("vec_id") === 0).select("v").head.getSeq[Long](0)
-    val s37NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s37_wave$b")
-      val waveDf =
+    waveStream(s, "s37", "vec_id LONG, v ARRAY<LONG>",
+      b =>
         if (b == 0)
           // the planted skewed ingest: every arrival collapses toward
           // the anchor-0 region (3×anchor + own vector)
@@ -2594,46 +2468,8 @@ object StreamingQueries {
             .select(col("vec_id"),
               zip_with(typedLit(a0vec.toSeq), col("v"),
                 (a, x) => lit(3L) * a + x).as("v"))
-        else e.filter(col("vec_id") % 20 === 15).select(col("vec_id"), col("v"))
-      waveDf.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(LongType)))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s37NonEmpty.getAndIncrement() == b.toLong,
-              s"s37 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // BOTH generation handles re-resolved each batch: after a
-            // re-train swap, arrivals must assign against the CURRENT
-            // anchors, not the closure's
-            val handles = Incremental.resolveCatalog(cat, expect = 2)
-            val curCents = s.read.parquet(handles(1))
-            val bAssign = Similarity.ivfAssignAgainst(
-              batch.toDF().withColumn("n2", norm2Q(col("v"))),
-              curCents.select(col("cent_id"), col("cv"))).localCheckpoint(true)
-            Similarity.probeIvfTopK(s.table(handles(0)),
-                bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
-                  col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
-              .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
-                col("cid"), col("rank"), col("cosine"))
-              .write.mode("append").parquet(outDir)
-            Similarity.appendIvfIndex(s, bAssign, handles(0))
-            bAssign.select(col("vec_id")).write.mode("append").parquet(logDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+        else e.filter(col("vec_id") % 20 === 15).select(col("vec_id"), col("v")),
+      between = {
         // maintenance window: the d62 loop on the STORED index. Census
         // against the current anchors, appended membership from the
         // ingest log; on a firing gate, one Lloyd round + re-assignment
@@ -2670,7 +2506,23 @@ object StreamingQueries {
           cents1.write.mode("overwrite").parquet(centsDir2)
           Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2, centsDir2))
         }
-      }
+      }) { (batch, b, _) =>
+      // BOTH generation handles re-resolved each batch: after a
+      // re-train swap, arrivals must assign against the CURRENT
+      // anchors, not the closure's
+      val handles = Incremental.resolveCatalog(cat, expect = 2)
+      val curCents = s.read.parquet(handles(1))
+      val bAssign = Similarity.ivfAssignAgainst(
+        batch.withColumn("n2", norm2Q(col("v"))),
+        curCents.select(col("cent_id"), col("cv"))).localCheckpoint(true)
+      Similarity.probeIvfTopK(s.table(handles(0)),
+          bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
+            col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
+        .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
+          col("cid"), col("rank"), col("cosine"))
+        .write.mode("append").parquet(outDir)
+      Similarity.appendIvfIndex(s, bAssign, handles(0))
+      bAssign.select(col("vec_id")).write.mode("append").parquet(logDir)
     }
     s.read.parquet(outDir).orderBy("wave", "qid", "rank")
   }
@@ -2800,57 +2652,11 @@ object StreamingQueries {
     s38Catalog = cat
     val tombDir = graft.Scratch.dir("graft_s38_tomb")
     docs.select(col("doc_id")).limit(0).write.mode("overwrite").parquet(tombDir)
-    val watched = graft.Scratch.dir("graft_s38_watched")
     val outDir = graft.Scratch.dir("graft_s38_out")
-    val ckpt = graft.Scratch.dir("graft_s38_ckpt")
-    val s38NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s38_wave$b")
-      docs.filter(col("doc_id") % 20 === lit(5L + 10L * b))
-        .select(col("doc_id"), col("text"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s38NonEmpty.getAndIncrement() == b.toLong,
-              s"s38 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            val h = Incremental.resolveCatalog(cat, expect = 3)
-            val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
-            val pb = TextAnalysis.postingsOf(batch.toDF()).localCheckpoint(true)
-            // index the arrivals: bucketed append + ONE delta keyed by
-            // the MICRO-BATCH id — Spark's batchId IS the idempotence
-            // key (a crash-retried batch replaces its own deltas); the
-            // +10 offset keeps ingest keys clear of the init/takedown
-            // keys the maintenance window writes
-            TextAnalysis.appendPostingStore(s, pb, h(0))
-            TextAnalysis.logStatDeltas(pb, h(1), h(2),
-              batch = 10 + batchId.toInt, sign = 1)
-            // serve AFTER indexing: the wave's own docs are immediately
-            // retrievable, and every score reflects the moved stats
-            TextAnalysis.bm25Probe(s"w$b",
-                s.table(h(0)).join(broadcast(
-                  tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti"),
-                qt, vocab, h(1), h(2), s)
-              .select(lit(b.toLong).as("wave"), col("query_id"), col("doc_id"),
-                col("rank"), col("bm25"))
-              .write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s38", "doc_id LONG, text STRING",
+      b => docs.filter(col("doc_id") % 20 === lit(5L + 10L * b))
+        .select(col("doc_id"), col("text")),
+      between = {
         // maintenance window: takedown lands (negative deltas from the
         // STORED postings of the removed docs), both stores compact,
         // ONE atomic three-handle publish, tombstones clear
@@ -2876,7 +2682,27 @@ object StreamingQueries {
             .write.mode("overwrite").parquet(s"$statsDir2/batch=0"))
         Incremental.commitCatalogCas(cat)((_, _) => Seq(table2, dfDir2, statsDir2))
         docs.select(col("doc_id")).limit(0).write.mode("overwrite").parquet(tombDir)
-      }
+      }) { (batch, b, batchId) =>
+      val h = Incremental.resolveCatalog(cat, expect = 3)
+      val tomb = s.read.schema("doc_id LONG").parquet(tombDir)
+      val pb = TextAnalysis.postingsOf(batch).localCheckpoint(true)
+      // index the arrivals: bucketed append + ONE delta keyed by
+      // the MICRO-BATCH id — Spark's batchId IS the idempotence
+      // key (a crash-retried batch replaces its own deltas); the
+      // +10 offset keeps ingest keys clear of the init/takedown
+      // keys the maintenance window writes
+      TextAnalysis.appendPostingStore(s, pb, h(0))
+      TextAnalysis.logStatDeltas(pb, h(1), h(2),
+        batch = 10 + batchId.toInt, sign = 1)
+      // serve AFTER indexing: the wave's own docs are immediately
+      // retrievable, and every score reflects the moved stats
+      TextAnalysis.bm25Probe(s"w$b",
+          s.table(h(0)).join(broadcast(
+            tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti"),
+          qt, vocab, h(1), h(2), s)
+        .select(lit(b.toLong).as("wave"), col("query_id"), col("doc_id"),
+          col("rank"), col("bm25"))
+        .write.mode("append").parquet(outDir)
     }
     s.read.parquet(outDir)
       .select(col("wave"), col("query_id"), col("doc_id"),
@@ -3001,62 +2827,11 @@ object StreamingQueries {
     e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
     val corpus = e.select(col("vec_id").as("cid"), col("v").as("cv"),
       col("n2").as("cn2"))
-    val watched = graft.Scratch.dir("graft_s39_watched")
     val outDir = graft.Scratch.dir("graft_s39_out")
-    val ckpt = graft.Scratch.dir("graft_s39_ckpt")
-    val s39NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s39_wave$b")
-      Tables.embeddings(s, d).filter(col("vec_id") % 20 === lit(5L + 10L * b))
-        .select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s39NonEmpty.getAndIncrement() == b.toLong,
-              s"s39 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            val idxTable = Incremental.resolveCatalog(cat, expect = 1).head
-            val tomb = s.read.schema("vec_id LONG").parquet(tombDir)
-            val bAssign = Similarity.ivfAssignAgainst(
-              batch.toDF()
-                .select(col("vec_id"), quantize(col("embedding")).as("v"))
-                .withColumn("n2", norm2Q(col("v"))),
-              cents).localCheckpoint(true)
-            val liveIdx = s.table(idxTable)
-              .join(broadcast(tomb.select(col("vec_id").as("cid"))),
-                Seq("cid"), "left_anti")
-            // the full funnel against the compressed store: ADC from
-            // codes in-cell, exact refine via the id-keyed corpus fetch
-            Similarity.probeIvfPqTopK(liveIdx,
-                bAssign.select(col("vec_id").as("qid"), col("cell").as("qcell"),
-                  Similarity.pqLutCol(cb).as("lut")),
-                bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
-                  col("n2").as("qn2")),
-                corpus, kAdc = 10, k = 3)
-              .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
-                col("cid"), col("rank"), col("ad"), col("d2"))
-              .write.mode("append").parquet(outDir)
-            // probe-then-append (nothing ranks against itself), encode
-            // map-side against the frozen structures
-            Similarity.appendIvfPqIndex(s,
-              bAssign.withColumn("codes", Similarity.pqCodesCol(cb)), idxTable)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s39", "vec_id LONG, embedding ARRAY<FLOAT>",
+      b => Tables.embeddings(s, d).filter(col("vec_id") % 20 === lit(5L + 10L * b))
+        .select(col("vec_id"), col("embedding")),
+      between = {
         // maintenance window: takedown → compaction (wave-0 codes
         // carried) → atomic publish → tombstone clear
         e.filter(col("vec_id") % 10 =!= 5 && col("vec_id") % 7 === 3)
@@ -3066,7 +2841,31 @@ object StreamingQueries {
           s.read.schema("vec_id LONG").parquet(tombDir), "ivfpq_s39c")
         Incremental.commitCatalogCas(cat)((_, _) => Seq(idxGen2))
         e.select(col("vec_id")).limit(0).write.mode("overwrite").parquet(tombDir)
-      }
+      }) { (batch, b, _) =>
+      val idxTable = Incremental.resolveCatalog(cat, expect = 1).head
+      val tomb = s.read.schema("vec_id LONG").parquet(tombDir)
+      val bAssign = Similarity.ivfAssignAgainst(
+        batch.select(col("vec_id"), quantize(col("embedding")).as("v"))
+          .withColumn("n2", norm2Q(col("v"))),
+        cents).localCheckpoint(true)
+      val liveIdx = s.table(idxTable)
+        .join(broadcast(tomb.select(col("vec_id").as("cid"))),
+          Seq("cid"), "left_anti")
+      // the full funnel against the compressed store: ADC from
+      // codes in-cell, exact refine via the id-keyed corpus fetch
+      Similarity.probeIvfPqTopK(liveIdx,
+          bAssign.select(col("vec_id").as("qid"), col("cell").as("qcell"),
+            Similarity.pqLutCol(cb).as("lut")),
+          bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
+            col("n2").as("qn2")),
+          corpus, kAdc = 10, k = 3)
+        .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
+          col("cid"), col("rank"), col("ad"), col("d2"))
+        .write.mode("append").parquet(outDir)
+      // probe-then-append (nothing ranks against itself), encode
+      // map-side against the frozen structures
+      Similarity.appendIvfPqIndex(s,
+        bAssign.withColumn("codes", Similarity.pqCodesCol(cb)), idxTable)
     }
     s.read.parquet(outDir).orderBy("wave", "qid", "rank")
   }
@@ -3221,76 +3020,13 @@ object StreamingQueries {
       leaseMs = 3600000L)
     s40Catalog = cat
     val corpusShingles = shingles.filter(col("id") % 7 =!= 5)
-    val watched = graft.Scratch.dir("graft_s40_watched")
     val outDir = graft.Scratch.dir("graft_s40_out")
-    val ckpt = graft.Scratch.dir("graft_s40_ckpt")
     val gcRows = scala.collection.mutable
       .ArrayBuffer[(String, Long, Long, Long, Long, String, Option[Long])]()
-    val s40NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s40_wave$b")
-      docs.filter(col("doc_id") % 14 === lit(5L + 7L * b))
-        .select(col("doc_id"), col("text").as("t"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            // non-empty-batch counter, not the raw id (s31's rationale)
-            require(s40NonEmpty.getAndIncrement() == b.toLong,
-              s"s40 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the probe's bands and shingles derive from the BATCH
-            val (bBuckets, bShingles) = Dedup.lshBucketsAndShingles(
-              batch.toDF(), "doc_id", "t",
-              shingleWords = 3, bands = 4, rowsPerBand = 2)
-            val bB = bBuckets.localCheckpoint(true)
-            val allSh = corpusShingles.unionByName(bShingles.localCheckpoint(true))
-            def consumerRows(consumer: String, table: String): DataFrame = {
-              val cand = Dedup.probeBandIndex(s, table, bB)
-              val candN = cand.groupBy(col("id_a").as("new_id"))
-                .agg(count(lit(1)).as("n_cand"))
-              val verN = Dedup.jaccardVerifiedPairs(cand, allSh, tau = 0.5)
-                .groupBy(col("id_a").as("new_id"))
-                .agg(count(lit(1)).as("n_ver"), min(col("id_b")).as("best_match"))
-              batch.toDF().select(col("doc_id").as("new_doc_id"))
-                .join(candN, col("new_doc_id") === candN("new_id"), "left")
-                .join(verN, col("new_doc_id") === verN("new_id"), "left")
-                .select(lit(consumer).as("consumer"), lit(b.toLong).as("wave"),
-                  col("new_doc_id"),
-                  coalesce(col("n_cand"), lit(0L)).as("n_candidates"),
-                  coalesce(col("n_ver"), lit(0L)).as("n_verified"),
-                  when(verN("new_id").isNotNull, "duplicate")
-                    .otherwise("unique").as("verdict"),
-                  col("best_match"))
-            }
-            // the production consumer RENEWS its lease every batch (a
-            // holder overwrites its own lease file), then resolves —
-            // and re-checks — the pin; the current consumer re-resolves
-            // the moving pointer
-            Incremental.acquireCatalogPin(cat, version = 1,
-              holder = "s40-export", leaseMs = 3600000L)
-            val pinnedTable =
-              Incremental.resolvePinnedCatalog(cat, "s40-export", expect = 1).head
-            val currentTable = Incremental.resolveCatalog(cat, expect = 1).head
-            consumerRows("pinned", pinnedTable)
-              .unionByName(consumerRows("current", currentTable))
-              .write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s40", "doc_id LONG, t STRING",
+      b => docs.filter(col("doc_id") % 14 === lit(5L + 7L * b))
+        .select(col("doc_id"), col("text").as("t")),
+      between = {
         // maintenance window: takedown compaction publishes generation 2
         // through the CAS commit, then retention GC runs UNDER the live
         // pin — the lease must refuse generation 1's reclamation
@@ -3302,7 +3038,43 @@ object StreamingQueries {
         gcRows += (("gc", 1L, -1L, reclaimed.size.toLong,
           Incremental.catalogVersions(cat).size.toLong,
           if (reclaimed.isEmpty) "pin_refused" else "reclaimed", None))
+      }) { (batch, b, _) =>
+      // the probe's bands and shingles derive from the BATCH
+      val (bBuckets, bShingles) = Dedup.lshBucketsAndShingles(
+        batch, "doc_id", "t",
+        shingleWords = 3, bands = 4, rowsPerBand = 2)
+      val bB = bBuckets.localCheckpoint(true)
+      val allSh = corpusShingles.unionByName(bShingles.localCheckpoint(true))
+      def consumerRows(consumer: String, table: String): DataFrame = {
+        val cand = Dedup.probeBandIndex(s, table, bB)
+        val candN = cand.groupBy(col("id_a").as("new_id"))
+          .agg(count(lit(1)).as("n_cand"))
+        val verN = Dedup.jaccardVerifiedPairs(cand, allSh, tau = 0.5)
+          .groupBy(col("id_a").as("new_id"))
+          .agg(count(lit(1)).as("n_ver"), min(col("id_b")).as("best_match"))
+        batch.select(col("doc_id").as("new_doc_id"))
+          .join(candN, col("new_doc_id") === candN("new_id"), "left")
+          .join(verN, col("new_doc_id") === verN("new_id"), "left")
+          .select(lit(consumer).as("consumer"), lit(b.toLong).as("wave"),
+            col("new_doc_id"),
+            coalesce(col("n_cand"), lit(0L)).as("n_candidates"),
+            coalesce(col("n_ver"), lit(0L)).as("n_verified"),
+            when(verN("new_id").isNotNull, "duplicate")
+              .otherwise("unique").as("verdict"),
+            col("best_match"))
       }
+      // the production consumer RENEWS its lease every batch (a
+      // holder overwrites its own lease file), then resolves —
+      // and re-checks — the pin; the current consumer re-resolves
+      // the moving pointer
+      Incremental.acquireCatalogPin(cat, version = 1,
+        holder = "s40-export", leaseMs = 3600000L)
+      val pinnedTable =
+        Incremental.resolvePinnedCatalog(cat, "s40-export", expect = 1).head
+      val currentTable = Incremental.resolveCatalog(cat, expect = 1).head
+      consumerRows("pinned", pinnedTable)
+        .unionByName(consumerRows("current", currentTable))
+        .write.mode("append").parquet(outDir)
     }
     // the consumer is done: release the lease; the SAME retention GC now
     // reclaims generation 1 (the pin, not the policy, was the guard)
@@ -3364,13 +3136,9 @@ object StreamingQueries {
     val logDir = graft.Scratch.dir("graft_s41_log")
     baseCen.select(col("word"), col("freq").as("cnt")).limit(0)
       .write.mode("overwrite").parquet(logDir)
-    val watched = graft.Scratch.dir("graft_s41_watched")
     val outDir = graft.Scratch.dir("graft_s41_out")
-    val ckpt = graft.Scratch.dir("graft_s41_ckpt")
-    val s41NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s41_wave$b")
-      val waveDf =
+    waveStream(s, "s41", "doc_id LONG, t STRING",
+      b =>
         if (b == 0)
           // the planted distribution shift: every word reversed —
           // deterministic, oracle-expressible, starves left-to-right
@@ -3379,54 +3147,8 @@ object StreamingQueries {
             .select(col("doc_id"),
               array_join(transform(split(col("text"), " "), w => reverse(w)), " ").as("t"))
         else docs.filter(col("doc_id") % 5 === 3)
-          .select(col("doc_id"), col("text").as("t"))
-      waveDf.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s41NonEmpty.getAndIncrement() == b.toLong,
-              s"s41 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // the CURRENT tokenizer generation, re-resolved each batch
-            val gen = Incremental.currentCatalogVersion(cat)
-            val mergesDir = Incremental.resolveCatalog(cat, expect = 1).head
-            val merges = s.read.parquet(mergesDir)
-              .orderBy("rank")
-              .as[(Int, String, String, Long)].collect().toSeq
-            val dwB = batch.toDF()
-              .select(col("doc_id"), wordsOf(col("t")).as("word"))
-              .filter(length(col("word")) > 0)
-              .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
-              .localCheckpoint(true)
-            val segB = BpeTokenizer.segmentTypes(
-              dwB.select("word").distinct(), merges)
-            dwB.join(segB, "word")
-              .groupBy("doc_id")
-              .agg(sum(col("cnt")).as("n_words"),
-                sum(col("cnt") * col("n_tok")).as("n_bpe_tokens"))
-              .select(lit(b.toLong).as("wave"), lit(gen.toLong).as("generation"),
-                col("doc_id"), col("n_words"), col("n_bpe_tokens"))
-              .write.mode("append").parquet(outDir)
-            // the ingest log: the batch's TYPE census — what the drift
-            // census and a re-train read (never the fixture)
-            dwB.groupBy("word").agg(sum(col("cnt")).as("cnt"))
-              .write.mode("append").parquet(logDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+          .select(col("doc_id"), col("text").as("t")),
+      between = {
         // maintenance window: t54's drift census over the ARRIVED
         // census (from the log) vs the base census, both under the
         // CURRENT merges; a firing gate re-trains on base ∪ arrived
@@ -3460,7 +3182,30 @@ object StreamingQueries {
             .write.mode("overwrite").parquet(mergesDir2)
           Incremental.commitCatalogCas(cat) { (_, _) => Seq(mergesDir2) }
         }
-      }
+      }) { (batch, b, _) =>
+      // the CURRENT tokenizer generation, re-resolved each batch
+      val gen = Incremental.currentCatalogVersion(cat)
+      val mergesDir = Incremental.resolveCatalog(cat, expect = 1).head
+      val merges = s.read.parquet(mergesDir)
+        .orderBy("rank")
+        .as[(Int, String, String, Long)].collect().toSeq
+      val dwB = batch.select(col("doc_id"), wordsOf(col("t")).as("word"))
+        .filter(length(col("word")) > 0)
+        .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
+        .localCheckpoint(true)
+      val segB = BpeTokenizer.segmentTypes(
+        dwB.select("word").distinct(), merges)
+      dwB.join(segB, "word")
+        .groupBy("doc_id")
+        .agg(sum(col("cnt")).as("n_words"),
+          sum(col("cnt") * col("n_tok")).as("n_bpe_tokens"))
+        .select(lit(b.toLong).as("wave"), lit(gen.toLong).as("generation"),
+          col("doc_id"), col("n_words"), col("n_bpe_tokens"))
+        .write.mode("append").parquet(outDir)
+      // the ingest log: the batch's TYPE census — what the drift
+      // census and a re-train read (never the fixture)
+      dwB.groupBy("word").agg(sum(col("cnt")).as("cnt"))
+        .write.mode("append").parquet(logDir)
     }
     s.read.parquet(outDir).orderBy("wave", "doc_id")
   } { (s, d) =>
@@ -3603,63 +3348,11 @@ object StreamingQueries {
     Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "8"))
     s42Catalog = cat
     val allShingles = shingles
-    val watched = graft.Scratch.dir("graft_s42_watched")
     val outDir = graft.Scratch.dir("graft_s42_out")
-    val ckpt = graft.Scratch.dir("graft_s42_ckpt")
-    val s42NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s42_wave$b")
-      docs.filter(col("doc_id") % 14 === lit(5L + 7L * b))
-        .select(col("doc_id"), col("text").as("t"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("t", StringType))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s42NonEmpty.getAndIncrement() == b.toLong,
-              s"s42 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // resolve (handle, bucket spec) atomically; probe-then-append
-            // to the resolved handle at its stored spec
-            val lines = Incremental.resolveCatalog(cat, expect = 2)
-            val gen = Incremental.currentCatalogVersion(cat)
-            val (bBuckets, _) = Dedup.lshBucketsAndShingles(
-              batch.toDF(), "doc_id", "t",
-              shingleWords = 3, bands = 4, rowsPerBand = 2)
-            val bB = bBuckets.localCheckpoint(true)
-            val cand = Dedup.probeBandIndex(s, lines.head, bB)
-            val candN = cand.groupBy(col("id_a").as("new_id"))
-              .agg(count(lit(1)).as("n_cand"))
-            val verN = Dedup.jaccardVerifiedPairs(cand, allShingles, tau = 0.5)
-              .groupBy(col("id_a").as("new_id"))
-              .agg(count(lit(1)).as("n_ver"), min(col("id_b")).as("best_match"))
-            batch.toDF().select(col("doc_id").as("new_doc_id"))
-              .join(candN, col("new_doc_id") === candN("new_id"), "left")
-              .join(verN, col("new_doc_id") === verN("new_id"), "left")
-              .select(lit(b.toLong).as("wave"), lit(gen.toLong).as("generation"),
-                col("new_doc_id"),
-                coalesce(col("n_cand"), lit(0L)).as("n_candidates"),
-                coalesce(col("n_ver"), lit(0L)).as("n_verified"),
-                when(verN("new_id").isNotNull, "duplicate")
-                  .otherwise("unique").as("verdict"),
-                col("best_match"))
-              .write.mode("append").parquet(outDir)
-            Dedup.appendBandIndex(s, bB, lines.head)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s42", "doc_id LONG, t STRING",
+      b => docs.filter(col("doc_id") % 14 === lit(5L + 7L * b))
+        .select(col("doc_id"), col("text").as("t")),
+      between = {
         // the maintenance window: migration and compaction racing from
         // the same snapshot on REAL threads, both through the CAS loop —
         // exactly one wins v2, the loser re-applies on top and wins v3
@@ -3686,7 +3379,33 @@ object StreamingQueries {
           "both publishers must survive: one wins v2, the retry wins v3")
         require(Incremental.resolveCatalog(cat, expect = 2)(1) == "32",
           "the migrated spec must survive whichever publisher won the race")
-      }
+      }) { (batch, b, _) =>
+      // resolve (handle, bucket spec) atomically; probe-then-append
+      // to the resolved handle at its stored spec
+      val lines = Incremental.resolveCatalog(cat, expect = 2)
+      val gen = Incremental.currentCatalogVersion(cat)
+      val (bBuckets, _) = Dedup.lshBucketsAndShingles(
+        batch, "doc_id", "t",
+        shingleWords = 3, bands = 4, rowsPerBand = 2)
+      val bB = bBuckets.localCheckpoint(true)
+      val cand = Dedup.probeBandIndex(s, lines.head, bB)
+      val candN = cand.groupBy(col("id_a").as("new_id"))
+        .agg(count(lit(1)).as("n_cand"))
+      val verN = Dedup.jaccardVerifiedPairs(cand, allShingles, tau = 0.5)
+        .groupBy(col("id_a").as("new_id"))
+        .agg(count(lit(1)).as("n_ver"), min(col("id_b")).as("best_match"))
+      batch.select(col("doc_id").as("new_doc_id"))
+        .join(candN, col("new_doc_id") === candN("new_id"), "left")
+        .join(verN, col("new_doc_id") === verN("new_id"), "left")
+        .select(lit(b.toLong).as("wave"), lit(gen.toLong).as("generation"),
+          col("new_doc_id"),
+          coalesce(col("n_cand"), lit(0L)).as("n_candidates"),
+          coalesce(col("n_ver"), lit(0L)).as("n_verified"),
+          when(verN("new_id").isNotNull, "duplicate")
+            .otherwise("unique").as("verdict"),
+          col("best_match"))
+        .write.mode("append").parquet(outDir)
+      Dedup.appendBandIndex(s, bB, lines.head)
     }
     // the closing census: final content, version count, resolved spec
     val fin = Incremental.resolveCatalog(cat, expect = 2)
@@ -3840,59 +3559,12 @@ object StreamingQueries {
     val cat = graft.Scratch.dir("graft_s43_cat") + "/index.catalog"
     Incremental.commitCatalogCas(cat)((_, _) => Seq(t1, "8"))
     s43Catalog = cat
-    val watched = graft.Scratch.dir("graft_s43_watched")
     val outDir = graft.Scratch.dir("graft_s43_out")
-    val ckpt = graft.Scratch.dir("graft_s43_ckpt")
-    val s43NonEmpty = new java.util.concurrent.atomic.AtomicLong(0L)
     var gateRow: (Long, Long, Long, Boolean, Long, Long) = null
-    (0 to 1).foreach { b =>
-      val tmp = graft.Scratch.dir(s"graft_s43_wave$b")
-      Tables.embeddings(s, d).filter(col("vec_id") % 40 === lit(19L + 20L * b))
-        .select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath)
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            require(s43NonEmpty.getAndIncrement() == b.toLong,
-              s"s43 wave $b saw a second non-empty micro-batch ($batchId): " +
-                "one-file-one-batch broken")
-            // resolve the CURRENT layout: handle AND cell count — after
-            // a fired gate this batch must see the migrated generation
-            val h = Incremental.resolveCatalog(cat, expect = 2)
-            val cells = h(1).toInt
-            val cents = s.table(h.head).filter(col("cid") < cells)
-              .select(col("cid").as("cent_id"), col("cv2").as("cv"))
-            val bAssign = Similarity.ivfAssignAgainst(
-              batch.toDF()
-                .select(col("vec_id"), quantize(col("embedding")).as("v"))
-                .withColumn("n2", norm2Q(col("v"))),
-              cents).localCheckpoint(true)
-            // probe-then-append through the resolved generation
-            Similarity.probeIvfTopK(s, h.head,
-                bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
-                  col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
-              .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
-                col("cid"), col("rank"), col("cosine"))
-              .write.mode("append").parquet(outDir)
-            // append to the resolved generation: a post-migration
-            // append follows the migrated physical layout
-            Similarity.appendIvfIndex(s, bAssign, h.head)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+    waveStream(s, "s43", "vec_id LONG, embedding ARRAY<FLOAT>",
+      b => Tables.embeddings(s, d).filter(col("vec_id") % 40 === lit(19L + 20L * b))
+        .select(col("vec_id"), col("embedding")),
+      between = {
         // maintenance window: the d73 gate over the live store (which
         // has absorbed the wave-0 ingest) — census, pinned budget,
         // bounded ladder, CAS-published migration when it fires
@@ -3914,7 +3586,27 @@ object StreamingQueries {
           }: Unit
         }
         gateRow = (nRows, nCells, maxCell, acted, cellsPre.toLong, cellsPost.toLong)
-      }
+      }) { (batch, b, _) =>
+      // resolve the CURRENT layout: handle AND cell count — after
+      // a fired gate this batch must see the migrated generation
+      val h = Incremental.resolveCatalog(cat, expect = 2)
+      val cells = h(1).toInt
+      val cents = s.table(h.head).filter(col("cid") < cells)
+        .select(col("cid").as("cent_id"), col("cv2").as("cv"))
+      val bAssign = Similarity.ivfAssignAgainst(
+        batch.select(col("vec_id"), quantize(col("embedding")).as("v"))
+          .withColumn("n2", norm2Q(col("v"))),
+        cents).localCheckpoint(true)
+      // probe-then-append through the resolved generation
+      Similarity.probeIvfTopK(s, h.head,
+          bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
+            col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
+        .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
+          col("cid"), col("rank"), col("cosine"))
+        .write.mode("append").parquet(outDir)
+      // append to the resolved generation: a post-migration
+      // append follows the migrated physical layout
+      Similarity.appendIvfIndex(s, bAssign, h.head)
     }
     import s.implicits._
     val gate = Seq(gateRow)

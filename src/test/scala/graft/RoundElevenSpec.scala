@@ -372,15 +372,15 @@ class RoundElevenSpec extends SparkTestBase {
     assert(allPairs == 3 + 6 + 45, s"unbudgeted baseline wrong: $allPairs")
     try {
       // budget 10: sizes 3 (cum 3) and 4 (cum 9) fit; size 10 (45) drops
-      spark.conf.set(Dedup.DefaultEdgeBudgetConf, "10")
+      spark.conf.set(Dedup.EdgeBudgetConf, "10")
       assert(Dedup.candidatePairs(buckets, materialize = false).count() == 9L)
       // budget 2: nothing fits — every multi-bucket drops, zero pairs
-      spark.conf.set(Dedup.DefaultEdgeBudgetConf, "2")
+      spark.conf.set(Dedup.EdgeBudgetConf, "2")
       assert(Dedup.candidatePairs(buckets, materialize = false).count() == 0L)
       // budget large: no-op
-      spark.conf.set(Dedup.DefaultEdgeBudgetConf, "1000000")
+      spark.conf.set(Dedup.EdgeBudgetConf, "1000000")
       assert(Dedup.candidatePairs(buckets, materialize = false).count() == allPairs)
-    } finally spark.conf.unset(Dedup.DefaultEdgeBudgetConf)
+    } finally spark.conf.unset(Dedup.EdgeBudgetConf)
   }
 
   test("t51 v3 CJK route: char-bigram scoring detects the separator-free " +

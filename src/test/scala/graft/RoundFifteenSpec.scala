@@ -325,8 +325,6 @@ class RoundFifteenSpec extends SparkTestBase {
     "the mid-stream maintenance (takedown compaction + CAS publish) runs " +
     "in a separate process, and the next micro-batch registers the " +
     "foreign generation on the fly and serves it") {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import org.apache.spark.sql.types._
     graft.functions.LongDot.register(spark)
     graft.plans.TopKPerGroup.install(spark)
     val e = Tables.embeddings(spark, sf0001)
@@ -349,49 +347,13 @@ class RoundFifteenSpec extends SparkTestBase {
       "graft.StoreMaintainMain", cat, work, ready, go)
     val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
 
-    val watched = Scratch.dir("graft_xstream_watched")
     val outDir = Scratch.dir("graft_xstream_out")
-    val ckpt = Scratch.dir("graft_xstream_ckpt")
-    (0 to 1).foreach { b =>
-      val tmp = Scratch.dir(s"graft_xstream_w$b")
-      Tables.embeddings(spark, sf0001)
+    streaming.StreamingQueries.waveStream(spark, "xstream",
+      "vec_id LONG, embedding ARRAY<FLOAT>",
+      b => Tables.embeddings(spark, sf0001)
         .filter(col("vec_id") % 40 === lit(19L + 20L * b))
-        .select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(watched, s"arrival$b.parquet").toPath): Unit
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .parquet(watched)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (!batch.isEmpty) {
-            // the portable resolve: a foreign generation registers on
-            // the fly, a local one is the IF NOT EXISTS no-op
-            val h = Incremental.resolvePortableCatalog(spark, cat, expect = 2)
-            val bAssign = Similarity.ivfAssignAgainst(
-              batch.toDF()
-                .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
-                .withColumn("n2", Similarity.norm2Q(col("v"))),
-              spark.table(h.head).filter(col("cid") < h(1).toInt)
-                .select(col("cid").as("cent_id"), col("cv2").as("cv")))
-            Similarity.probeIvfTopK(spark, h.head,
-                bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
-                  col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
-              .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
-                col("cid"), col("rank"), col("cosine"))
-              .write.mode("append").parquet(outDir)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (b == 0) {
+        .select(col("vec_id"), col("embedding")),
+      between = {
         // the maintenance window belongs to the OTHER process: let it
         // publish, wait for its generation to land
         val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
@@ -404,7 +366,21 @@ class RoundFifteenSpec extends SparkTestBase {
           assert(System.nanoTime() < deadline, "child never published")
           Thread.sleep(20)
         }
-      }
+      }) { (batch, b, _) =>
+      // the portable resolve: a foreign generation registers on
+      // the fly, a local one is the IF NOT EXISTS no-op
+      val h = Incremental.resolvePortableCatalog(spark, cat, expect = 2)
+      val bAssign = Similarity.ivfAssignAgainst(
+        batch.select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
+          .withColumn("n2", Similarity.norm2Q(col("v"))),
+        spark.table(h.head).filter(col("cid") < h(1).toInt)
+          .select(col("cid").as("cent_id"), col("cv2").as("cv")))
+      Similarity.probeIvfTopK(spark, h.head,
+          bAssign.select(col("vec_id").as("qid"), col("v").as("qv"),
+            col("n2").as("qn2"), col("cell").as("qcell")), k = 3)
+        .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
+          col("cid"), col("rank"), col("cosine"))
+        .write.mode("append").parquet(outDir)
     }
     val out = new String(child.getInputStream.readAllBytes())
     assert(child.waitFor() === 0 && out.contains("STOREMAINT_OK"),

@@ -109,6 +109,22 @@ class RoundSixteenSpec extends SparkTestBase {
     assert(spark.table(t).orderBy($"k").collect().toSeq === before)
   }
 
+  test("resolvePortableCatalog passes through only lines that do not " +
+    "decode: a decodable handle that fails to REGISTER propagates its " +
+    "error instead of resolving to the raw encoded line") {
+    val t = "graft_r16_badddl_" + Scratch.nameTag().take(16)
+    val h = Incremental.PortableHandle(t, Scratch.dir("graft_r16_badddl"),
+      "k NOTATYPE", 4, Seq("k"), Seq.empty)
+    assert(Incremental.PortableHandle.decode(h.encoded) === h,
+      "premise: the line decodes as a handle")
+    val cat = newCat("r16_badddl")
+    Incremental.commitCatalogCas(cat)((_, _) => Seq(h.encoded, "4"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Incremental.resolvePortableCatalog(spark, cat, expect = 2)
+    }
+    assert(!spark.catalog.tableExists(t))
+  }
+
   test("commitCatalogCas does NOT retry a deterministic caller bug: an " +
     "IllegalArgumentException thrown by `update` propagates after exactly " +
     "one invocation instead of surfacing as a 10-attempt 'livelock'") {

@@ -154,14 +154,9 @@ object S38LossProbe {
       q.awaitTermination()
     }
 
-    def arrivalFile(watched: String): Unit = {
-      val tmp = Scratch.dir("graft_s38loss_wave")
-      waveOf(universe).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new File(watched, "arrival0.parquet").toPath): Unit
-    }
+    def arrivalFile(watched: String): Unit =
+      streaming.StreamingQueries.landArrival(waveOf(universe),
+        Scratch.dir("graft_s38loss_wave"), watched, 0)
 
     def digests(table: String, dfDir: String, statsDir: String)
         : (Set[String], Set[String], Set[String], Long) = {
