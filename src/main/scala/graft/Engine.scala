@@ -40,17 +40,15 @@ object Engine {
     * compiled class. */
   val CodegenCacheEntries = 1000
 
-  /** Install engine extensions on an existing session (idempotent):
-    * SQL-callable custom expressions and the top-k rewrite. */
+  /** Install engine extensions on an existing session (idempotent and
+    * silent on repeat): every SQL function of the one manifest
+    * [[functions.GraftExtensions.Functions]] — the same entries the
+    * `spark.sql.extensions` path injects — and the top-k rewrite. */
   def install(spark: SparkSession): SparkSession = {
-    functions.CosineSimilarity.register(spark)
-    functions.LongDot.register(spark)
-    functions.SimHash64.register(spark)
-    functions.HllSketch.register(spark)
-    functions.MinHashSketch.register(spark)
-    functions.CharShinglesGen.register(spark)
-    functions.NfcNormalize.register(spark)
-    functions.StripAccents.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    functions.GraftExtensions.Functions.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
     plans.TopKPerGroup.install(spark)
     spark
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst `Generator` (the UDTF-class extension surface, B10):
@@ -65,10 +65,6 @@ case class CharShinglesGen(child: Expression, kChild: Expression)
 }
 
 object CharShinglesGen {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_shingles", exprs => CharShinglesGen(exprs.head, exprs(1)), "scala_udf")
-
   def char_shingles(text: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("char_shingles",
       text, org.apache.spark.sql.functions.lit(k))

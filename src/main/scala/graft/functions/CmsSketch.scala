@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** B10 × B9: a Count-Min sketch (Cormode & Muthukrishnan 2005) as a
   * `TypedImperativeAggregate` — the frequency sibling of the MinHash
@@ -111,19 +111,6 @@ case class CmsSketchAgg(
 }
 
 object CmsSketch {
-  private def literalInt(e: Expression, what: String): Int = e match {
-    case x if x.foldable => x.eval().asInstanceOf[Number].intValue()
-    case _ => throw new IllegalArgumentException(s"cms_sketch $what must be a literal")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch",
-      exprs => CmsSketchAgg(exprs.head,
-        literalInt(exprs(1), "depth"), literalInt(exprs(2), "width"))
-        .toAggregateExpression(),
-      "scala_udf")
-
   def cms_sketch(hashPairs: Column, depth: Int, width: Int): Column =
     org.apache.spark.sql.functions.call_function("cms_sketch", hashPairs,
       org.apache.spark.sql.functions.lit(depth),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** B10 exemplar: a native Catalyst `Expression` with whole-stage codegen
   * for cosine similarity over two `array<float>` columns — the documented
@@ -89,13 +89,7 @@ object CosineSimilarity {
 
   /** Column-API form. Spark 4's Column is expression-agnostic, so the
     * public route to a custom Expression is registry + call_function —
-    * `register(spark)` must have run in the session first. */
+    * `Engine.install` must have run on the session first. */
   def cosine_sim(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
-
-  /** Register `cosine_sim` for SQL use in an existing session
-    * (`spark.sessionState.functionRegistry` surface). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)), "scala_udf")
 }

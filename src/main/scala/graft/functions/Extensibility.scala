@@ -2,14 +2,16 @@ package graft.functions
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders, SparkSessionExtensions}
 
 /** B10 extensibility surface: the custom-Expression exemplar wired into
   * queries, a typed `Aggregator` UDAF, approximate aggregates, and the
-  * `SparkSessionExtensions` injector that registers `cosine_sim` for SQL.
+  * `SparkSessionExtensions` injector that registers the engine's SQL
+  * functions from one manifest.
   */
 object Extensibility {
 
@@ -51,7 +53,6 @@ object Extensibility {
        SELECT qid, cid, rank, cosine FROM ranked WHERE rank <= 5
        ORDER BY qid, rank""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    CosineSimilarity.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -129,8 +130,10 @@ object Extensibility {
       .orderBy("l_returnflag")
   }
 
-  /** SQL registration of the custom Expression through the session
-    * extension injector (`SparkSessionExtensions.injectFunction`). */
+  /** The custom Expression called from SQL: `cosine_sim` resolves through
+    * the session's function registry, filled from the one manifest
+    * [[GraftExtensions.Functions]] (by `Engine.install`, or by the
+    * `spark.sql.extensions` injector). */
   private val x04 = Q(
     "x04_custom_expr_sql",
     """SELECT a.vec_id AS ida, b.vec_id AS idb,
@@ -141,7 +144,6 @@ object Extensibility {
        FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
        WHERE a.vec_id < 50
        ORDER BY ida""") { (s, d) =>
-    CosineSimilarity.register(s)
     Tables.embeddings(s, d).createOrReplaceTempView("graft_emb_v")
     s.sql(
       """SELECT a.vec_id AS ida, b.vec_id AS idb,
@@ -161,7 +163,6 @@ object Extensibility {
               count(DISTINCT l_orderkey) AS exact_orders,
               true AS hll_parts_ok, true AS hll_orders_ok
        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, d) =>
-    HllSketch.register(s)
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(
@@ -190,7 +191,6 @@ object Extensibility {
          FROM orders) t
        WHERE rn <= 5
        ORDER BY o_orderpriority, rn""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -292,7 +292,6 @@ object Extensibility {
                           unnest(generate_series(1, greatest(len(text) - 4, 1))) AS i
                    FROM documents WHERE doc_id < 20))
        GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
-    CharShinglesGen.register(s)
     Tables.documents(s, d)
       .filter(col("doc_id") < 20)
       .select(col("doc_id"), CharShinglesGen.char_shingles(col("text"), 5).as("s"))
@@ -326,7 +325,6 @@ object Extensibility {
        SELECT source, seed, min(h1 + seed * h2) AS mh
        FROM hs, seeds GROUP BY source, seed
        ORDER BY source, seed""") { (s, d) =>
-    MinHashSketch.register(s)
     val docs = graft.ops.Dedup.spreadToCores(Tables.documents(s, d))
     val perDoc = docs
       .select(col("source"), split(col("text"), " ").as("ws"))
@@ -402,7 +400,6 @@ object Extensibility {
        SELECT term, exact_n, cms_estimate,
               cms_estimate - exact_n AS overcount
        FROM est ORDER BY exact_n DESC, term""") { (s, d) =>
-    CmsSketch.register(s)
     val docs = graft.ops.Dedup.spreadToCores(Tables.documents(s, d))
     // whole-corpus sketch: one aggregate row, 4×256 counters
     val sk = docs
@@ -518,48 +515,54 @@ object Extensibility {
 /** Session-extension injector (`spark.sql.extensions=graft.functions.
   * GraftExtensions`): the config-only deployment path — a spark-submit /
   * Thrift-server / SQL-only user gets the ENTIRE engine extension
-  * surface (all custom expressions, the HLL aggregate, the shingle
-  * generator, and the heap top-k optimizer rule + strategy) at session
-  * build time without calling `Engine.install`. Programmatic sessions
-  * use `Engine.install`, which registers the same set; both entries are
-  * idempotent in effect — the rewrite no longer matches once applied,
-  * and a duplicated strategy just offers the planner an identical
-  * candidate.
+  * surface (every function in [[GraftExtensions.Functions]] and the heap
+  * top-k optimizer rule + strategy) at session build time without calling
+  * `Engine.install`. Programmatic sessions use `Engine.install`, which
+  * registers the same manifest entries (the same info and builder
+  * instances), so the two paths cannot drift apart; both are idempotent —
+  * re-registering an identical entry is a silent no-op, the rewrite no
+  * longer matches once applied, and a duplicated strategy just offers the
+  * planner an identical candidate.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-
-  private def fn(name: String, clazz: Class[_], builder: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(fn("cosine_sim", classOf[CosineSimilarity],
-      exprs => CosineSimilarity(exprs.head, exprs(1))))
-    e.injectFunction(fn("long_dot", classOf[LongDot],
-      exprs => LongDot(exprs.head, exprs(1))))
-    e.injectFunction(fn("long_l2", classOf[LongL2],
-      exprs => LongL2(exprs.head, exprs(1))))
-    e.injectFunction(fn("simhash64", classOf[SimHash64],
-      exprs => SimHash64(exprs.head)))
-    e.injectFunction(fn("hll_distinct", classOf[HllSketch],
-      exprs => HllSketch(exprs.head).toAggregateExpression()))
-    e.injectFunction(fn("minhash_sketch", classOf[MinHashSketchAgg],
-      exprs => MinHashSketchAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction(fn("cms_sketch", classOf[CmsSketchAgg],
-      exprs => CmsSketchAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction(fn("minhash_sig", classOf[MinHashSig],
-      exprs => MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction(fn("char_shingles", classOf[CharShinglesGen],
-      exprs => CharShinglesGen(exprs.head, exprs(1))))
-    e.injectFunction(fn("nfc_normalize", classOf[NfcNormalize],
-      exprs => NfcNormalize(exprs.head)))
-    e.injectFunction(fn("strip_accents", classOf[StripAccents],
-      exprs => StripAccents(exprs.head)))
+    GraftExtensions.Functions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
+}
+
+/** The engine's SQL functions, each declared once. Both install paths
+  * read this list: [[GraftExtensions]] injects it, `Engine.install` hands
+  * the same entries to the session's function registry. The entries are
+  * built once per JVM, so registering one again finds an equal
+  * (info, builder) pair and Spark keeps it without logging a replacement.
+  */
+object GraftExtensions {
+
+  /** A shape argument (a sketch `k`, depth or width) read once at plan
+    * time; a column there would give every row its own sketch shape. */
+  private def literalInt(e: Expression, what: String): Int =
+    if (e.foldable) e.eval().asInstanceOf[Number].intValue()
+    else throw new IllegalArgumentException(s"$what must be a literal")
+
+  private def fn(name: String, clazz: Class[_])(builder: FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
+
+  val Functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("cosine_sim", classOf[CosineSimilarity])(e => CosineSimilarity(e(0), e(1))),
+    fn("long_dot", classOf[LongDot])(e => LongDot(e(0), e(1))),
+    fn("long_l2", classOf[LongL2])(e => LongL2(e(0), e(1))),
+    fn("simhash64", classOf[SimHash64])(e => SimHash64(e(0))),
+    fn("hll_distinct", classOf[HllSketch])(e => HllSketch(e(0)).toAggregateExpression()),
+    fn("minhash_sketch", classOf[MinHashSketchAgg])(e => MinHashSketchAgg(e(0),
+      literalInt(e(1), "minhash_sketch k")).toAggregateExpression()),
+    fn("cms_sketch", classOf[CmsSketchAgg])(e => CmsSketchAgg(e(0),
+      literalInt(e(1), "cms_sketch depth"),
+      literalInt(e(2), "cms_sketch width")).toAggregateExpression()),
+    fn("minhash_sig", classOf[MinHashSig])(e =>
+      MinHashSig(e(0), literalInt(e(1), "minhash_sig k"))),
+    fn("char_shingles", classOf[CharShinglesGen])(e => CharShinglesGen(e(0), e(1))),
+    fn("nfc_normalize", classOf[NfcNormalize])(e => NfcNormalize(e(0))),
+    fn("strip_accents", classOf[StripAccents])(e => StripAccents(e(0))))
 }

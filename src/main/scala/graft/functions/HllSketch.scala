@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** B10: a `TypedImperativeAggregate` with a mutable binary buffer — the
   * HyperLogLog cardinality sketch (Flajolet et al., public algorithm) over
@@ -97,12 +97,6 @@ case class HllSketch(
 }
 
 object HllSketch {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_distinct",
-      exprs => HllSketch(exprs.head).toAggregateExpression(),
-      "scala_udf")
-
   def hll_distinct(c: Column): Column =
     org.apache.spark.sql.functions.call_function("hll_distinct", c)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused integer dot product over two `array<bigint>` columns — the hot
   * loop of the quantized similarity operators. Versus the
@@ -70,10 +70,6 @@ case class LongDot(left: Expression, right: Expression) extends BinaryExpression
 }
 
 object LongDot {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongDot(exprs.head, exprs(1)), "scala_udf")
-
   def long_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("long_dot", a, b)
 }

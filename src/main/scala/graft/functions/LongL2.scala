@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused squared-L2 distance over two `array<bigint>` columns — LongDot's
   * sibling for the distance-based operators (k-means assignment, PQ
@@ -78,10 +78,6 @@ case class LongL2(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object LongL2 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_l2", exprs => LongL2(exprs.head, exprs(1)), "scala_udf")
-
   def long_l2(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("long_l2", a, b)
 }

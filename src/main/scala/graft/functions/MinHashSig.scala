@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused MinHash signature: all `numHashes` Kirsch-Mitzenmacher minima
   * (min over shingles of h1 + i·h2) in ONE pass over the hash-pair
@@ -95,17 +95,6 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
 }
 
 object MinHashSig {
-  private def literalK(e: Expression): Int = e match {
-    case x if x.foldable => x.eval().asInstanceOf[Number].intValue()
-    case _ => throw new IllegalArgumentException("minhash_sig k must be a literal")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSig(exprs.head, literalK(exprs(1))),
-      "scala_udf")
-
   def minhash_sig(hashPairs: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("minhash_sig", hashPairs,
       org.apache.spark.sql.functions.lit(k))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** B10 × B9: the MinHash sketch as a first-class `TypedImperativeAggregate`
   * — the production shape of the sketch algebra d17 verifies. Input is the
@@ -98,19 +98,6 @@ case class MinHashSketchAgg(
 }
 
 object MinHashSketch {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sketch",
-      exprs => {
-        val k = exprs(1) match {
-          case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException(
-            "minhash_sketch k must be a literal")
-        }
-        MinHashSketchAgg(exprs.head, k).toAggregateExpression()
-      },
-      "scala_udf")
-
   def minhash_sketch(hashPairs: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "minhash_sketch", hashPairs, org.apache.spark.sql.functions.lit(k))

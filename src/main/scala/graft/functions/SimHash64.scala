@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over an `array<string>` of md5 hex digests, as a
@@ -80,10 +80,6 @@ object SimHash64 {
     }
     UTF8String.fromBytes(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
 
   def simhash64(md5s: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", md5s)

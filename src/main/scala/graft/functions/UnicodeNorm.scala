@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization as native Catalyst expressions — the curation
@@ -55,10 +55,6 @@ object NfcNormalize {
     if (Normalizer.isNormalized(s, Normalizer.Form.NFC)) s
     else Normalizer.normalize(s, Normalizer.Form.NFC)
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-
   def nfc_normalize(c: Column): Column =
     org.apache.spark.sql.functions.call_function("nfc_normalize", c)
 }
@@ -90,10 +86,6 @@ object StripAccents {
     val d = Normalizer.normalize(s, Normalizer.Form.NFD)
     marks.matcher(d).replaceAll("")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "scala_udf")
 
   def strip_accents(c: Column): Column =
     org.apache.spark.sql.functions.call_function("strip_accents", c)

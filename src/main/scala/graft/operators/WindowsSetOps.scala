@@ -103,7 +103,6 @@ object WindowsSetOps {
          FROM lineitem GROUP BY l_suppkey, l_partkey) t
        WHERE rn <= 3
        ORDER BY l_suppkey, revenue DESC, l_partkey""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s) // heap top-k instead of sort+window
     // per-row fixed-point (1e-4) before summing: integer sums are exact and
     // order-independent, so the revenue value and the top-k ordering agree
     // bit-for-bit across engines and across partial-agg orders

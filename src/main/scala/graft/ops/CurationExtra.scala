@@ -57,8 +57,6 @@ object CurationExtra {
          FROM p)
        SELECT vec_id, bid AS bench_id, round(cos, 6) AS max_cos, cos >= 0.95 AS contaminated
        FROM r WHERE rk = 1 ORDER BY vec_id""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
@@ -799,8 +797,6 @@ object CurationExtra {
               CAST(sum(length(nfc_normalize(raw))) AS BIGINT) AS chars_nfc,
               CAST(sum(CASE WHEN strip_accents(nfc_normalize(raw)) = text THEN 1 ELSE 0 END) AS BIGINT) AS n_restored
        FROM v GROUP BY source ORDER BY source""") { (s, d) =>
-    graft.functions.NfcNormalize.register(s)
-    graft.functions.StripAccents.register(s)
     import graft.functions.NfcNormalize.nfc_normalize
     import graft.functions.StripAccents.strip_accents
     // escape-explicit variants: %4=0 and %4=2 are DECOMPOSED two-codepoint

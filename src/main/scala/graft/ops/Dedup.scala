@@ -99,7 +99,7 @@ object Dedup {
     * integer-derived — see [[minhashSignature]]). */
   def lshBuckets(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int, bands: Int, rowsPerBand: Int): DataFrame = {
-    graft.functions.MinHashSig.register(df.sparkSession)
+    graft.Engine.install(df.sparkSession)
     val numHashes = bands * rowsPerBand
     val k = shingleWords
     val toks = spreadToCores(df).select(col(idCol).as("id"), split(col(textCol), " ").as("ws"))
@@ -484,7 +484,7 @@ object Dedup {
     * fingerprints (m07) all band and verify through the same digest. */
   def lshBucketsAndShinglesFromArray(df: DataFrame, idCol: String, arrCol: String,
       bands: Int, rowsPerBand: Int): (DataFrame, DataFrame) = {
-    graft.functions.MinHashSig.register(df.sparkSession)
+    graft.Engine.install(df.sparkSession)
     val numHashes = bands * rowsPerBand
     val hv = reuse(df.select(col(idCol).as("id"), shingleHashPairs(col(arrCol)).as("hv")))
     val sig = hv.select(col("id"), minhashSignature(col("hv"), numHashes).as("mhs"))
@@ -716,7 +716,6 @@ object Dedup {
          JOIN sz sb ON sb.doc_id = id_b
        WHERE ni * 1.0 / (sa.n + sb.n - ni) >= 0.1
        ORDER BY id_a, id_b""") { (s, d) =>
-    graft.functions.CharShinglesGen.register(s)
     val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
     // the custom Generator (x10) streams k-grams through Generate — no
     // per-row shingle array materialization (charShingles is the
@@ -786,7 +785,6 @@ object Dedup {
     // = sign of the vote on the high bit of md5 hex digit i), so this
     // rides the native one-pass expression instead of simhashExpr's
     // 32-aggregate HOF (which re-splits and re-hashes per bit)
-    graft.functions.SimHash64.register(s)
     Tables.documents(s, d)
       .withColumn("md5s", expr("transform(split(text, ' '), t -> md5(t))"))
       .select(col("doc_id"),
@@ -1076,7 +1074,6 @@ object Dedup {
     // native one-pass signature (64 vote counters per token digest)
     // instead of the 64-aggregate HOF composition — same bitstring,
     // spec-asserted against simhash64FromMd5s
-    graft.functions.SimHash64.register(s)
     val sigs = reuse(
       docs.withColumn("md5s", expr("transform(split(text, ' '), t -> md5(t))"))
         .select(col("doc_id"), graft.functions.SimHash64.simhash64(col("md5s")).as("sig"))
@@ -2317,7 +2314,6 @@ object Dedup {
         "i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2)))")
         .as("sh"))
     val hv = reuse(sh.select(col("id"), shingleHashPairs(col("sh")).as("hv")))
-    graft.functions.MinHashSig.register(s)
     // the register self-join is a banded self-join in disguise: one
     // degenerate (seed, mh) bucket would emit quadratic agreement rows,
     // so the d03 cap guards it (fixture max bucket: 20 docs — the cap
@@ -2908,7 +2904,6 @@ object Dedup {
               round(CASE WHEN tot.all_true = 0 THEN 0
                     ELSE n_true * 1.0 / tot.all_true END, 4) AS recall_
        FROM curve CROSS JOIN tot ORDER BY threshold""") { (s, d) =>
-    graft.functions.SimHash64.register(s)
     val docs = spreadToCores(Tables.documents(s, d))
     val sigs = reuse(
       docs.withColumn("md5s", expr("transform(split(text, ' '), t -> md5(t))"))

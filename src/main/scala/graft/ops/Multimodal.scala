@@ -228,7 +228,6 @@ object Multimodal {
               min(id_a) AS min_id_a, max(id_b) AS max_id_b
        FROM h WHERE hamming <= 3
        GROUP BY hamming ORDER BY hamming""") { (s, d) =>
-    graft.functions.SimHash64.register(s)
     val media = Dedup.spreadToCores(asMediaTable(Tables.documents(s, d)).toDF())
     val sigs = Dedup.reuse(media
       .select(col("media_id").as("doc_id"), hex(col("payload")).as("h"))
@@ -303,7 +302,6 @@ object Multimodal {
               round(dot / (sqrt(t2) * sqrt(e2)), 6) AS align_cos,
               (dot >= 0) AS kept
        FROM sc WHERE t2 > 0 ORDER BY media_id""") { (s, d) =>
-    graft.functions.LongDot.register(s)
     val dot64 = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       graft.functions.LongDot.long_dot(a, b)
     // STUB text encoder: token t → dim h1(t) mod 64, sign from h2(t)

@@ -30,7 +30,8 @@ object Similarity {
   /** Exact integer dot product of two quantized vectors — the fused
     * codegen Expression (graft.functions.LongDot); same integers as the
     * zip_with+aggregate composition, no per-row array allocation.
-    * Requires LongDot.register on the session (done by the operators). */
+    * Resolves through the session's function registry, so the session
+    * must carry `Engine.install` (every query entry does). */
   def dotQ(a: Column, b: Column): Column =
     graft.functions.LongDot.long_dot(a, b)
 
@@ -51,8 +52,7 @@ object Similarity {
     * query survive the map side — the partial-aggregation shape). The
     * schema-parity cast to long happens AFTER the filter. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.LongDot.register(corpus.sparkSession)
-    graft.plans.TopKPerGroup.install(corpus.sparkSession)
+    graft.Engine.install(corpus.sparkSession)
     val c = corpus.select(col("vec_id").as("cid"), quantize(col("embedding")).as("cv"))
       .withColumn("cn", norm2Q(col("cv")))
     val q = queries.select(col("vec_id").as("qid"), quantize(col("embedding")).as("qv"))
@@ -142,7 +142,6 @@ object Similarity {
          FROM e)
        SELECT bucket, count(*) AS n_vecs, min(vec_id) AS first_vec
        FROM sig GROUP BY bucket ORDER BY bucket""") { (s, d) =>
-    graft.functions.LongDot.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .select(col("vec_id"), lshBucket(col("qv"), planes = 8, dim = 64).as("bucket"))
@@ -184,8 +183,6 @@ object Similarity {
          FROM probes)
        SELECT qid, cell, cid, rank, round(cos, 6) AS cosine
        FROM ranked WHERE rank <= 3 ORDER BY qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -259,8 +256,6 @@ object Similarity {
          GROUP BY e.qid)
        SELECT qid, n_overlap, round(n_overlap / 10.0, 4) AS recall_at_10
        FROM overlap ORDER BY qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val emb = Tables.embeddings(s, d)
     val isQuery = col("vec_id") >= 10 && col("vec_id") < 25
     val exactTop = bruteForceTopK(emb, emb.filter(isQuery), 10)
@@ -340,8 +335,6 @@ object Similarity {
        LEFT JOIN pair_n p ON c.cell = p.cell
        LEFT JOIN rem_n r ON c.cell = r.cell
        ORDER BY c.cell""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -432,8 +425,6 @@ object Similarity {
               round(o.n_overlap / 10.0, 4) AS recall_at_10
        FROM overlap o LEFT JOIN cand_n c ON o.qid = c.qid
        ORDER BY o.qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val emb = Tables.embeddings(s, d)
     val isQuery = col("vec_id") >= 10 && col("vec_id") < 25
     val exactTop = bruteForceTopK(emb, emb.filter(isQuery), 10)
@@ -512,7 +503,6 @@ object Similarity {
               round(max_abs_err, 6) AS max_abs_err,
               round(dot / (sqrt(n2o) * sqrt(n2d)), 6) AS cos_orig_dequant
        FROM err ORDER BY vec_id""") { (s, d) =>
-    graft.functions.LongDot.register(s)
     val e = Tables.embeddings(s, d).filter(col("vec_id") < 100)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -581,7 +571,6 @@ object Similarity {
 
   private def kmeansAssign(s: org.apache.spark.sql.SparkSession, d: String,
       rounds: Int): DataFrame = {
-    graft.functions.LongDot.register(s)
     val e = Dedup.reuse(Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v"))))
@@ -833,11 +822,8 @@ object Similarity {
        SELECT qid, n_overlap_adc, round(n_overlap_adc / 10.0, 4) AS recall_adc,
               n_overlap, round(n_overlap / 10.0, 4) AS recall_at_10
        FROM overlap ORDER BY qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Dedup.reuse(Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v")))
-    graft.functions.LongL2.register(s)
     // codebook / map-side encode / query LUTs: the shared PQ helpers
     // (pqCodebook et al. above), also driving the stored IVF-PQ index (d63)
     val codebook = pqCodebook(e)
@@ -971,8 +957,6 @@ object Similarity {
        SELECT qid, CAST(pick AS BIGINT) AS pick, cid,
               round(rel, 6) AS rel, round(mmr, 6) AS mmr
        FROM out ORDER BY qid, pick""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val n = Dedup.reuse(Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v"))))
@@ -1070,8 +1054,6 @@ object Similarity {
               round(sqrt(CAST(n.t2 AS DOUBLE) / n.n2), 4) AS norm_share
        FROM overlap o JOIN n ON n.vec_id = o.qid
        ORDER BY o.qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val n = Dedup.reuse(Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -1134,8 +1116,7 @@ object Similarity {
     * cells at 10× corpus go quadratic, 10× cells restore the ratio).
     * Parametric so probes can exercise the knob; d32 pins (8, 3). */
   private[graft] def knnEdges(e0: DataFrame, numCents: Int, k: Int): DataFrame = {
-    graft.functions.LongDot.register(e0.sparkSession)
-    graft.plans.TopKPerGroup.install(e0.sparkSession)
+    graft.Engine.install(e0.sparkSession)
     val assign = Dedup.reuse(ivfAssign(e0, numCents))
     val wr = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr"))
     assign.select(col("vec_id").as("src"), col("v").as("qv"),
@@ -1191,8 +1172,6 @@ object Similarity {
               (b.src IS NOT NULL) AS mutual
        FROM top3 a LEFT JOIN top3 b ON b.src = a.nbr AND b.nbr = a.src
        ORDER BY vec_id, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Dedup.reuse(Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v"))))
@@ -1244,8 +1223,6 @@ object Similarity {
          FROM probes)
        SELECT qid, cell, cid, rank, round(cos, 6) AS cosine
        FROM ranked WHERE rank <= 3 ORDER BY qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -1324,8 +1301,6 @@ object Similarity {
        SELECT nprobe, qid, n_overlap,
               round(n_overlap / 10.0, 4) AS recall_at_10
        FROM overlap ORDER BY nprobe, qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val emb = Tables.embeddings(s, d)
     val isQuery = col("vec_id") >= 10 && col("vec_id") < 25
     val e = Dedup.reuse(emb
@@ -1410,8 +1385,6 @@ object Similarity {
        FROM ranked r JOIN exc e ON r.qid = e.qid
        WHERE r.rank <= 5
        ORDER BY r.qid, r.rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val emb = Tables.embeddings(s, d)
     val c = emb.select(col("vec_id").as("cid"), quantize(col("embedding")).as("cv"))
       .withColumn("cn", norm2Q(col("cv")))
@@ -1750,8 +1723,6 @@ object Similarity {
          FROM probes)
        SELECT qid, cell, cid, rank, round(cos, 6) AS cosine
        FROM ranked WHERE rank <= 3 ORDER BY qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -1847,9 +1818,6 @@ object Similarity {
                     row_number() OVER (PARTITION BY qid ORDER BY d2 ASC, cid) AS rank
              FROM refined) t
        WHERE rank <= 3 ORDER BY qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -1943,7 +1911,6 @@ object Similarity {
               CAST(CASE WHEN n_app = 0 OR n_base = 0 THEN 0
                    ELSE round(s_base * 1.0 / n_base) - round(s_app * 1.0 / n_app) END AS BIGINT) AS drift_micro
        FROM census ORDER BY cell""") { (s, d) =>
-    graft.functions.LongDot.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2053,7 +2020,6 @@ object Similarity {
              UNION ALL
              SELECT * FROM pre WHERE NOT (SELECT acted FROM gate))
        ORDER BY cell""") { (s, d) =>
-    graft.functions.LongDot.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2158,8 +2124,6 @@ object Similarity {
          UNION ALL
          SELECT 'post_compact', qid, cell, cid, rank, cos FROM postp WHERE rank <= 3)
        ORDER BY phase, qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2313,9 +2277,6 @@ object Similarity {
          FROM ranked_pq WHERE rank <= 3)
        ORDER BY phase, qid, rank""") { (s, d) =>
     import graft.ops.Incremental
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2477,8 +2438,6 @@ object Similarity {
          FROM pr WHERE rank <= 3)
        ORDER BY phase, qid, rank""") { (s, d) =>
     import graft.ops.Incremental
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2666,9 +2625,6 @@ object Similarity {
          FROM ranked WHERE rank <= 3)
        ORDER BY phase, qid, rank""") { (s, d) =>
     import graft.ops.Incremental
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2866,9 +2822,6 @@ object Similarity {
                     row_number() OVER (PARTITION BY qid ORDER BY d2 ASC, cid) AS rank
              FROM refined) t
        WHERE rank <= 3 ORDER BY qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -3022,9 +2975,6 @@ object Similarity {
        SELECT nprobe, qid, n_overlap,
               round(n_overlap / 10.0, 4) AS recall_at_10
        FROM overlap ORDER BY nprobe, qid""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -3249,9 +3199,6 @@ object Similarity {
                 qid, cell, cid, rank, ad, d2
          FROM served) u
        ORDER BY phase, nprobe, qid, rank""") { (s, d) =>
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     import s.implicits._
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))

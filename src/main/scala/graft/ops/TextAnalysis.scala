@@ -242,8 +242,6 @@ object TextAnalysis {
        SELECT doc_id, array_to_string(list_sort(list(h)), ',') AS fingerprint
        FROM ranked WHERE rn <= 4
        GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
-    graft.functions.CharShinglesGen.register(s)
     val g = Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.CharShinglesGen.char_shingles(col("text"), 8).as("s"))
@@ -279,7 +277,6 @@ object TextAnalysis {
          FROM scored)
        SELECT doc_id, term, tfidf, rn FROM ranked WHERE rn <= 3
        ORDER BY doc_id, rn""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     val tok = Tables.documents(s, d)
       .select(col("doc_id"), explode(toks("text")).as("term"))
     val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -505,7 +502,6 @@ object TextAnalysis {
        SELECT t.source, t.n_docs, k.n_kept, k.kept_chars, k.first_kept
        FROM totals t JOIN kept k ON t.source = k.source
        ORDER BY t.source""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     val docs = Tables.documents(s, d)
     val w = Window.partitionBy(col("source"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
@@ -857,7 +853,6 @@ object TextAnalysis {
        SELECT query_id, doc_id, CAST(rank AS BIGINT) AS rank,
               round(s / 1000000.0, 4) AS bm25
        FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     val queryTerms = Seq(
       "q01" -> "merge", "q01" -> "sort",
       "q02" -> "stream", "q02" -> "window",
@@ -1743,7 +1738,6 @@ object TextAnalysis {
                     / (CAST(n * sxx - sx * sx AS DOUBLE)
                        * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS r2
        FROM sums ORDER BY source""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     val tf = Tables.documents(s, d)
       .select(col("source"), explode(toks("text")).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("freq"))
@@ -2590,7 +2584,6 @@ object TextAnalysis {
          UNION ALL
          SELECT 'post_compact', query_id, doc_id, s, rank FROM ranked_live WHERE rank <= 5)
        ORDER BY phase, query_id, rank""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     import s.implicits._
     val queryTerms = Seq(
       "q01" -> "merge", "q01" -> "sort",
@@ -2768,7 +2761,6 @@ object TextAnalysis {
          UNION ALL
          SELECT 'post_append_v2', query_id, doc_id, s, rank FROM ranked_app WHERE rank <= 5)
        ORDER BY phase, query_id, rank""") { (s, d) =>
-    graft.plans.TopKPerGroup.install(s)
     import s.implicits._
     import graft.ops.Incremental
     val queryTerms = Seq(

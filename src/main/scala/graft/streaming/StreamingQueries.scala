@@ -486,7 +486,6 @@ object StreamingQueries {
        SELECT event_type, seed, min(h1 + seed * h2) AS mh
        FROM c, seeds GROUP BY event_type, seed
        ORDER BY event_type, seed""") { (s, d) =>
-    graft.functions.MinHashSketch.register(s)
     val contentMd5 = md5(concat(col("user_id").cast("string"), lit("|"), col("props")))
     val hv = array(struct(
       conv(substring(contentMd5, 1, 8), 16, 10).cast(LongType).as("h1"),
@@ -552,7 +551,6 @@ object StreamingQueries {
        FROM top ORDER BY qid, rank""") { (s, d) =>
     import graft.ops.Similarity.{dotQ, lshBucket, norm2Q, quantize}
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-    graft.functions.LongDot.register(s)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     // static corpus index: signature computed once per vector (at 100 TB
@@ -1031,7 +1029,6 @@ object StreamingQueries {
        FROM grid g LEFT JOIN counts c
          ON c.event_type = g.event_type AND c.i = g.i AND c.b = g.b
        ORDER BY 1, 2""") { (s, d) =>
-    graft.functions.CmsSketch.register(s)
     val contentMd5 = md5(concat(col("user_id").cast("string"), lit("|"), col("props")))
     val hv = array(struct(
       conv(substring(contentMd5, 1, 8), 16, 10).cast(LongType).as("h1"),
@@ -1936,8 +1933,6 @@ object StreamingQueries {
        FROM ranked WHERE rank <= 3 ORDER BY wave, qid, rank""") { (s, d) =>
     import graft.ops.{Dedup, Incremental, Similarity}
     import graft.ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2435,8 +2430,6 @@ object StreamingQueries {
        FROM ranked WHERE rank <= 3 ORDER BY wave, qid, rank""") { (s, d) =>
     import graft.ops.{Incremental, Similarity}
     import graft.ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -2628,7 +2621,6 @@ object StreamingQueries {
          FROM ranked1 WHERE rank <= 5)
        ORDER BY wave, query_id, rank""") { (s, d) =>
     import graft.ops.{Dedup, Incremental, TextAnalysis}
-    graft.plans.TopKPerGroup.install(s)
     import s.implicits._
     val queryTerms = Seq(
       "q01" -> "merge", "q01" -> "sort",
@@ -2806,9 +2798,6 @@ object StreamingQueries {
        WHERE rank <= 3 ORDER BY wave, qid, rank""") { (s, d) =>
     import graft.ops.{Dedup, Incremental, Similarity}
     import graft.ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(s)
-    graft.functions.LongL2.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -3546,8 +3535,6 @@ object StreamingQueries {
        ORDER BY phase, wave, qid, rank""") { (s, d) =>
     import graft.ops.{Dedup, Incremental, Similarity}
     import graft.ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))

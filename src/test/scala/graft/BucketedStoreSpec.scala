@@ -21,7 +21,6 @@ class BucketedStoreSpec extends SparkTestBase {
     "16-bucket layout and probes like a rebuild") {
     import ops.{Dedup, Similarity}
     import ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(spark)
     val e = Dedup.reuse(Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v"))))
@@ -82,24 +81,11 @@ class BucketedStoreSpec extends SparkTestBase {
 
   test("the bucketed write lives in BucketedStore only: no .bucketBy( in " +
     "library code outside it") {
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val files = scalaFiles(new java.io.File("src/main"))
-    assert(files.size > 20, s"src/main not found from ${sys.props("user.dir")}")
-    // code only: scaladoc/comment lines and trailing // comments are prose
-    def codeHits(f: java.io.File): Seq[String] = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex.collect {
-        case (l, i) if !l.trim.startsWith("*") && !l.trim.startsWith("/*") &&
-            l.split("//", 2)(0).contains(".bucketBy(") => s"${f.getPath}:${i + 1}"
-      }.toSeq
-      finally src.close()
-    }
-    val (home, rest) = files.partition(_.getName == "BucketedStore.scala")
-    assert(home.size == 1 && codeHits(home.head).nonEmpty,
+    val (home, rest) = SourceScan.scalaFiles("src/main")
+      .partition(_.getName == "BucketedStore.scala")
+    assert(home.size == 1 && SourceScan.codeHits(home, ".bucketBy(").nonEmpty,
       "BucketedStore.scala must hold the bucketed write")
-    val strays = rest.flatMap(codeHits)
+    val strays = SourceScan.codeHits(rest, ".bucketBy(")
     assert(strays.isEmpty,
       s"bucketed writes outside BucketedStore: ${strays.mkString(", ")}")
   }

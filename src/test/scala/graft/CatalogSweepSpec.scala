@@ -223,7 +223,6 @@ class CatalogSweepSpec extends SparkTestBase {
   test("catalog sweep: no cartesian product, and every broadcast " +
       "nested-loop join's build side is constant-bounded (provably or by " +
       "documented design, the design list exact in both directions)") {
-    Engine.install(spark)
     val (offences, design) = PlanSweep.sweep(spark, sf0001)
     assert(offences.isEmpty, offences.map(o =>
       s"\n[${o.query}] ${o.node}\n${o.detail}").mkString("\n"))

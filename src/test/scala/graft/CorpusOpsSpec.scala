@@ -131,7 +131,6 @@ class CorpusOpsSpec extends SparkTestBase {
 
   test("x13 cms_sketch aggregate: partition-independent, merge is " +
     "elementwise add, and estimates never undercount") {
-    graft.functions.CmsSketch.register(spark)
     val docs = Tables.documents(spark, sf0001)
       .select(col("source"), graft.ops.Dedup.shingleHashPairs(split(col("text"), " ")).as("hv"))
     def corpusSketch(df: org.apache.spark.sql.DataFrame): Seq[Long] =
@@ -280,7 +279,6 @@ class CorpusOpsSpec extends SparkTestBase {
 
   test("fused minhash_sig Expression agrees with the HOF formulation " +
     "element-for-element on real corpus digests, including k variation") {
-    graft.functions.MinHashSig.register(spark)
     val docs = Tables.documents(spark, sf001)
     val hv = docs.select(col("doc_id"),
       graft.ops.Dedup.shingleHashPairs(split(col("text"), " ")).as("hv"))

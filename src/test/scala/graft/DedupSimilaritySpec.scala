@@ -165,7 +165,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("lsh bucket signature is deterministic and groups identical vectors") {
-    graft.functions.LongDot.register(spark)
     val vecs = Seq(
       (0L, Array.fill(64)(0.25f)),
       (1L, Array.fill(64)(0.25f)),

@@ -69,7 +69,6 @@ class ExtensionOpsSpec extends SparkTestBase {
 
   test("d24 lloyd assignment is a pure map-side expression: no exchange, " +
     "no join, and it agrees with the brute-force argmin") {
-    graft.functions.LongDot.register(spark)
     val e = spark.range(50)
       .select($"id".as("vec_id"),
         transform(sequence(lit(0), lit(7)),
@@ -97,7 +96,6 @@ class ExtensionOpsSpec extends SparkTestBase {
 
   test("d24 centroid update: the corpus-sized exchange carries only " +
     "(cell, pos, partial sums) — map-side combined, no vector arrays") {
-    graft.functions.LongDot.register(spark)
     val e = spark.range(200)
       .select($"id".as("vec_id"),
         transform(sequence(lit(0), lit(7)),
@@ -144,7 +142,6 @@ class ExtensionOpsSpec extends SparkTestBase {
 
   test("long_l2 fused distance: same integers as the HOF composition, " +
     "NULL on length mismatch") {
-    graft.functions.LongL2.register(spark)
     val df = spark.range(200).select(
       transform(sequence(lit(0), lit(15)),
         i => (pmod($"id" * 7 + i * 13, lit(2000)) - 1000).cast("long")).as("a"),
@@ -243,7 +240,6 @@ class ExtensionOpsSpec extends SparkTestBase {
     "micro-batches equals the one-pass batch result (state restore + " +
     "merge-order independence, not just single-batch equivalence)") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    graft.functions.MinHashSketch.register(spark)
     val dir = graft.Scratch.dir("graft_replay")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf001/events.parquet")

@@ -3,12 +3,13 @@ package graft
 import graft.functions.HllSketch
 import org.apache.spark.sql.functions._
 
-/** Accuracy and merge-path tests for the HLL TypedImperativeAggregate. */
+/** Accuracy and merge-path tests for the HLL TypedImperativeAggregate
+  * (`hll_distinct` registered by `Engine.install` on the shared test
+  * session). */
 class HllSpec extends SparkTestBase {
   import spark.implicits._
 
   test("estimate within 5% at p=11 across cardinalities, merge-safe") {
-    HllSketch.register(spark)
     for (n <- Seq(100L, 5000L, 50000L)) {
       // many partitions → partial buffers must merge correctly
       val est = spark.range(n).repartition(8)
@@ -20,7 +21,6 @@ class HllSpec extends SparkTestBase {
   }
 
   test("estimate is deterministic across repartitionings") {
-    HllSketch.register(spark)
     val a = spark.range(10000).repartition(3)
       .agg(HllSketch.hll_distinct(col("id"))).as[Long].head()
     val b = spark.range(10000).repartition(17)
@@ -29,14 +29,12 @@ class HllSpec extends SparkTestBase {
   }
 
   test("duplicates do not inflate the estimate") {
-    HllSketch.register(spark)
     val dup = spark.range(1000).select((col("id") % 100).as("k"))
     val est = dup.agg(HllSketch.hll_distinct(col("k"))).as[Long].head()
     assert(math.abs(est - 100) <= 10, s"est=$est")
   }
 
   test("works in SQL after registration and groups correctly") {
-    HllSketch.register(spark)
     Tables.lineitem(spark, sf0001).createOrReplaceTempView("hll_li")
     val rows = spark.sql(
       """SELECT l_returnflag, hll_distinct(l_partkey) e, count(DISTINCT l_partkey) x

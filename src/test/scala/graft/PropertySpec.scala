@@ -75,7 +75,6 @@ class PropertySpec extends SparkTestBase with Matchers {
   }
 
   test("native heap top-k equals window top-k on random data") {
-    graft.plans.TopKPerGroup.install(spark)
     forSamples(Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 5), Gen.choose(0, 1000)))) { data =>
       val df = data.zipWithIndex
         .map { case ((g, v), i) => (g.toLong, v.toLong, i.toLong) }
@@ -190,7 +189,6 @@ class PropertySpec extends SparkTestBase with Matchers {
 
   test("cms_sketch point estimates always dominate exact counts on " +
     "random token multisets") {
-    graft.functions.CmsSketch.register(spark)
     val tokGen = Gen.listOfN(200, Gen.oneOf(
       (1 to 12).map(i => s"tok$i") ++ Seq("hot", "hot", "hot")))
     forSamples(tokGen, n = 3) { toks =>

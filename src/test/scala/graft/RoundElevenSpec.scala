@@ -24,7 +24,6 @@ class RoundElevenSpec extends SparkTestBase {
     "shuffled probe join bucket-aware with no index-side exchange") {
     import ops.{Dedup, Similarity}
     import ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -90,7 +89,6 @@ class RoundElevenSpec extends SparkTestBase {
     "physically collapses the duplicate rows") {
     import ops.{Dedup, Similarity}
     import ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))

@@ -14,9 +14,6 @@ class RoundFifteenSpec extends SparkTestBase {
   test("d75: the cell-local refine is row-identical to the corpus-fetch " +
     "refine, and its raw-tier scan is bucket-pruned to the probed cells") {
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-    graft.functions.LongDot.register(spark)
-    graft.functions.LongL2.register(spark)
-    graft.plans.TopKPerGroup.install(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
@@ -111,8 +108,6 @@ class RoundFifteenSpec extends SparkTestBase {
     "separate process — proves the bare table name does not resolve, " +
     "registers the generation from (path, schema, bucket spec), and " +
     "serves the identical probe") {
-    graft.functions.LongDot.register(spark)
-    graft.plans.TopKPerGroup.install(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
@@ -155,7 +150,6 @@ class RoundFifteenSpec extends SparkTestBase {
     "JVM's takedown compaction races this JVM's cell migration through " +
     "one CAS catalog via portable handles — contiguous versions, both " +
     "updates in the deterministic final generation") {
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
@@ -226,7 +220,6 @@ class RoundFifteenSpec extends SparkTestBase {
   test("file-level orphan GC: a dead cross-process maintainer's lost-race " +
     "generation directory is reclaimed; referenced, young, and " +
     "catalog-history directories are kept; a torn version aborts the sweep") {
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))
@@ -291,7 +284,6 @@ class RoundFifteenSpec extends SparkTestBase {
     "kept) and re-register from the handle with content and bucket spec " +
     "intact") {
     import ops.TextAnalysis
-    graft.functions.LongDot.register(spark)
     val docs = Tables.documents(spark, sf0001).limit(200)
     // band index (bk-bucketed): build from the standard minhash pipeline
     val bandTable = "graft_r15_bands_" + Scratch.nameTag().take(16)
@@ -325,8 +317,6 @@ class RoundFifteenSpec extends SparkTestBase {
     "the mid-stream maintenance (takedown compaction + CAS publish) runs " +
     "in a separate process, and the next micro-batch registers the " +
     "foreign generation on the fly and serves it") {
-    graft.functions.LongDot.register(spark)
-    graft.plans.TopKPerGroup.install(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))

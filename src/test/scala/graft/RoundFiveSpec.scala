@@ -53,7 +53,6 @@ class RoundFiveSpec extends SparkTestBase {
     "relational register formulation, rejects bad input") {
     import graft.functions.MinHashSketch
     import graft.ops.Dedup
-    MinHashSketch.register(spark)
     val docs = Seq(
       (1L, "s1", "alpha beta gamma delta epsilon zeta"),
       (2L, "s1", "eta theta iota kappa lambda mu"),

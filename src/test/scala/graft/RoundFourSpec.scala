@@ -54,7 +54,6 @@ class RoundFourSpec extends SparkTestBase {
   }
 
   test("char_shingles rejects k < 1 at analysis time, not eval time") {
-    Engine.install(spark)
     val df = spark.range(1).select(expr("id AS doc"))
     df.createOrReplaceTempView("graft_r4_docs")
     val e = intercept[AnalysisException] {
@@ -78,7 +77,6 @@ class RoundFourSpec extends SparkTestBase {
   }
 
   test("simhash64 native expression agrees with the HOF composition on real docs") {
-    graft.functions.SimHash64.register(spark)
     val md5s = Tables.documents(spark, sf0001)
       .withColumn("md5s", expr("transform(split(text, ' '), t -> md5(t))"))
     val both = md5s.select(

@@ -402,7 +402,6 @@ class RoundSevenSpec extends SparkTestBase {
       "not events processed: numRowsTotal == #keys and flat across batches") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import spark.implicits._
-    graft.functions.CmsSketch.register(spark)
     val dir = Scratch.dir("graft_statebound")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf001/events.parquet")
@@ -867,8 +866,6 @@ class RoundSevenSpec extends SparkTestBase {
       "strip_accents is encoding-invariant, nulls propagate, and the SQL " +
       "registry path evaluates inside a plan") {
     import spark.implicits._
-    graft.functions.NfcNormalize.register(spark)
-    graft.functions.StripAccents.register(spark)
     val decomposed = "cafe\u0301"   // e + combining acute (5 cps)
     val precomposed = "caf\u00e9"   // precomposed e-acute (4 cps)
     val rows = Seq(decomposed, precomposed, "plain", "ligature ﬁ stays", "")

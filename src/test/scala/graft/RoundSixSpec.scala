@@ -247,7 +247,6 @@ class RoundSixSpec extends SparkTestBase {
   test("fixture invariant (d14): embedding pairs stay in the random-tail " +
     "regime (max cos < 0.7) at every SF — the calibration behind tau=0.45") {
     import graft.ops.Similarity.{dotQ, norm2Q, quantize}
-    graft.functions.LongDot.register(spark)
     // measured on the current fixtures: 0.479 / 0.513 / 0.601 — the
     // extreme of ~125k-2M random-Gaussian pairs grows with corpus size
     // but stays far from the ~0.95+ regime of genuine near-duplicates

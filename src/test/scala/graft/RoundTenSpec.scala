@@ -111,7 +111,6 @@ class RoundTenSpec extends SparkTestBase {
     import ops.{Dedup, Similarity}
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
     // build a compacted-index stand-in the same way d59 does
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
       .withColumn("n2", Similarity.norm2Q(col("v")))

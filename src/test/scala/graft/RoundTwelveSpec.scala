@@ -22,8 +22,6 @@ class RoundTwelveSpec extends SparkTestBase {
   private def pqFixture() = {
     import ops.{Dedup, Similarity}
     import ops.Similarity.{norm2Q, quantize}
-    graft.functions.LongDot.register(spark)
-    graft.functions.LongL2.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))
@@ -179,7 +177,6 @@ class RoundTwelveSpec extends SparkTestBase {
     // the geometry actually moved: at least one stored vector's cell
     // under the retrained anchors differs from a fresh assignment
     // against the FROZEN anchors
-    graft.functions.LongDot.register(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("n2", norm2Q(col("v")))

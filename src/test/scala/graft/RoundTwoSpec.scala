@@ -133,7 +133,6 @@ class RoundTwoSpec extends SparkTestBase {
   }
 
   test("x10: char_shingles generator handles short strings and nulls") {
-    graft.functions.CharShinglesGen.register(spark)
     val df = Seq(("abcdef"), ("abc"), (null: String)).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }
     import spark.implicits._
@@ -155,6 +154,18 @@ class RoundTwoSpec extends SparkTestBase {
     // registered functions resolve
     assert(spark.sql("SELECT long_dot(array(2L), array(3L))").head().getLong(0) == 6L)
     assert(spark.sql("SELECT cosine_sim(array(1.0F), array(1.0F))").head().getDouble(0) == 1.0)
+    // a re-install keeps every registered entry (same ExpressionInfo
+    // instance), so Spark logs no "replaced a previously registered
+    // function" warning for it
+    val fresh = spark.newSession()
+    val ids = graft.functions.GraftExtensions.Functions.map(_._1)
+    def infos = ids.map(fresh.sessionState.functionRegistry.lookupFunction(_).orNull)
+    Engine.install(fresh)
+    val first = infos
+    Engine.install(fresh)
+    ids.zip(first.zip(infos)).foreach { case (id, (a, b)) =>
+      assert(a != null && (a eq b), s"${id.funcName}: a second install replaced its entry")
+    }
   }
 
   test("src05: ORC round-trip scan prunes columns and pushes filters") {

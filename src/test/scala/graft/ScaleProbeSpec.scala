@@ -39,11 +39,7 @@ class ScaleProbeSpec extends SparkTestBase {
   }
 
   test("ScaleProbe is the only scale-probe main under src/test") {
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val files = scalaFiles(new java.io.File("src/test"))
-    assert(files.size > 20, s"src/test not found from ${sys.props("user.dir")}")
+    val files = SourceScan.scalaFiles("src/test")
     val probeObject = """^\s*object\s+(\w*ScaleProbe\w*)""".r
     val objects = files.flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionOptionsSpec extends AnyFunSuite {
 
   test("library code reads exactly the four deployment session options") {
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val files = scalaFiles(new java.io.File("src/main"))
-    assert(files.size > 20, s"src/main not found from ${sys.props("user.dir")}")
+    val files = SourceScan.scalaFiles("src/main")
     val literal = "\"graft\\.([a-zA-Z]+\\.[a-zA-Z]+)\"".r
     val names = files.flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession per suite (guide: one session, lazy). */
+/** One shared local SparkSession per suite (guide: one session, lazy),
+  * installed once with `Engine.install` like every engine session. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
+  lazy val spark: SparkSession = Engine.install {
     // keep derby + warehouse artifacts out of the repo working dir
     val scratch = java.nio.file.Files.createTempDirectory("graft-test-wh")
     System.setProperty("derby.system.home", scratch.toString)

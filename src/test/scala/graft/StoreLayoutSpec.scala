@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * (the full Verify run covers those), so the file-count contract is
   * spec-asserted here. */
 class StoreLayoutSpec extends SparkTestBase {
-  Engine.install(spark)
   import spark.implicits._
 
   private def dataFiles(dir: String): Seq[java.io.File] = {

@@ -31,7 +31,7 @@ object StoreMaintainMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.LongDot.register(spark)
+    Engine.install(spark)
 
     import ops.{Incremental, Similarity}
     // sanity: the current generation is readable HERE before racing

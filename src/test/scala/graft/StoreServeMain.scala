@@ -42,8 +42,7 @@ object StoreServeMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.LongDot.register(spark)
-    graft.plans.TopKPerGroup.install(spark)
+    Engine.install(spark)
 
     val h = ops.Incremental.PortableHandle.decode(
       java.nio.file.Files.readString(java.nio.file.Paths.get(handleFile)).trim)

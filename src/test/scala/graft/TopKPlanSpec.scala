@@ -1,13 +1,13 @@
 package graft
 
-import graft.plans.TopKPerGroup
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The custom whole-operator stack: rewrite rule fires on the idiom,
   * physical plan carries partial+final top-k, results equal the window
-  * formulation, and non-matching shapes are left alone. */
+  * formulation, and non-matching shapes are left alone. The rule and
+  * strategy come from `Engine.install` on the shared test session. */
 class TopKPlanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -21,7 +21,6 @@ class TopKPlanSpec extends SparkTestBase {
   }
 
   test("rewrite replaces Window with the native operator, partial below the shuffle") {
-    TopKPerGroup.install(spark)
     val df = topkDf(3)
     val p = castToImpl(df).queryExecution.executedPlan.toString
     assert(p.contains("TopKPerGroup"), s"rule did not fire:\n$p")
@@ -34,7 +33,6 @@ class TopKPlanSpec extends SparkTestBase {
   }
 
   test("native operator result equals the window formulation") {
-    TopKPerGroup.install(spark)
     val native = topkDf(3).orderBy("o_orderpriority", "rn")
       .as[(String, Long, Double, Int)].collect().toSeq
     // same computation with the rewrite not applicable (rn + 0 breaks the
@@ -52,7 +50,6 @@ class TopKPlanSpec extends SparkTestBase {
   }
 
   test("rank() and other window functions are not rewritten") {
-    TopKPerGroup.install(spark)
     val w = Window.partitionBy($"o_orderpriority").orderBy($"o_totalprice".desc)
     val df = Tables.orders(spark, sf0001)
       .withColumn("rk", rank().over(w))

@@ -24,21 +24,8 @@ class WaveStreamSpec extends SparkTestBase {
 
   test("the file handoff and the one-file-one-batch guard live in the wave " +
     "driver only, and StreamingQueries starts 10 AvailableNow runs") {
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val files = scalaFiles(new java.io.File("src/main"))
-    assert(files.size > 20, s"src/main not found from ${sys.props("user.dir")}")
-    // code only: scaladoc/comment lines and trailing // comments are prose
-    // (blanked, so indices stay line numbers - 1)
-    def codeLines(f: java.io.File): Seq[String] = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().map { l =>
-        if (l.trim.startsWith("*") || l.trim.startsWith("/*")) ""
-        else l.split("//", 2)(0)
-      }.toSeq
-      finally src.close()
-    }
+    import SourceScan.codeLines
+    val files = SourceScan.scalaFiles("src/main")
     val home = files.filter(_.getName == "StreamingQueries.scala")
     assert(home.size == 1, "StreamingQueries.scala must exist once")
     val lines = codeLines(home.head)
