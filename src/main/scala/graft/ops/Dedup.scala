@@ -131,12 +131,16 @@ object Dedup {
     * lost blocks instead of failing the job, and nothing is written to
     * the checkpoint FS. The right tool when reuse, not iterative lineage
     * truncation, is the goal; MEMORY_AND_DISK so an oversized stage
-    * spills instead of OOMing. */
-  private[graft] def reuse(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
+    * spills instead of OOMing. A plan that is already cached is
+    * returned as it is: persisting it again only logs a warning, and its
+    * count would be a job that fills nothing. */
+  private[graft] def reuse(df: DataFrame): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      p
+    }
 
   /** Benchmark-side join strategy for the decontamination family (d10,
     * d13, d42, d48, p01 stage 7): BROADCAST-BY-PREMISE — a real
@@ -170,6 +174,12 @@ object Dedup {
     * Oracle-paired queries (m10, p01, d08, …) interpolate the same
     * constant into their DuckDB QUALIFY mirrors. */
   val DefaultBucketCap = 1000L
+
+  /** Edges up to which a graph step collects its edge list and runs on
+    * the driver ([[connectedComponents]], [[pageRank]], and the stage-2
+    * candidates of `Incremental.admitBatch`'s driver route); past it the
+    * step stays distributed. */
+  val DriverEdgeBound = 100000L
 
   /** Drop (and log) buckets whose cardinality exceeds `cap` before a
     * banded self-join. Recall on a dropped key is traded for bounded
@@ -212,23 +222,34 @@ object Dedup {
     * to miss). */
   val EdgeBudgetConf = "graft.dedup.maxCandidateEdges"
 
-  private def edgeBudgetCap(buckets: DataFrame, budget: Long): Long = {
-    val hist = buckets.groupBy("band", "band_key").agg(count(lit(1)).as("n"))
+  /** The budget `graft.dedup.maxCandidateEdges` sets in `s`, 0 when off. */
+  private[graft] def edgeBudget(s: org.apache.spark.sql.SparkSession): Long =
+    s.conf.getOption(EdgeBudgetConf).map(_.toLong).getOrElse(0L)
+
+  private def edgeBudgetCap(buckets: DataFrame, budget: Long): Long =
+    capForBudget(buckets.groupBy("band", "band_key").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
       .groupBy("n").agg(count(lit(1)).as("n_buckets"),
         sum(expr("n * (n - 1) div 2")).as("pairs"))
-      .orderBy("n").collect()
+      .collect().map(r => (r.getAs[Long]("n"), r.getAs[Long]("n_buckets"),
+        r.getAs[Long]("pairs"))).toSeq, budget)
+
+  /** The cap rule of [[edgeBudgetCap]] over a bucket-size histogram of
+    * (size n > 1, buckets of that size, their n·(n−1)/2 pairs): the
+    * largest size whose cumulative pairs, smallest sizes first, fit the
+    * budget. Pure, so the distributed and the driver admission route bind
+    * the budget identically. */
+  private[graft] def capForBudget(hist: Seq[(Long, Long, Long)], budget: Long): Long = {
     var cum = 0L
     var t = 1L // size-1 buckets emit nothing; the floor if nothing fits
     var fits = true
     var dropped = 0L
     var droppedPairs = 0L
-    hist.foreach { r =>
-      val p = r.getAs[Long]("pairs")
-      if (fits && cum + p <= budget) { cum += p; t = r.getAs[Long]("n") }
+    hist.sortBy(_._1).foreach { case (n, nBuckets, p) =>
+      if (fits && cum + p <= budget) { cum += p; t = n }
       else {
         fits = false
-        dropped += r.getAs[Long]("n_buckets")
+        dropped += nBuckets
         droppedPairs += p
       }
     }
@@ -252,8 +273,7 @@ object Dedup {
   def candidatePairs(buckets0: DataFrame, cap: Long = DefaultBucketCap,
       materialize: Boolean = true): DataFrame = {
     val all = if (materialize) reuse(buckets0) else buckets0
-    val budget = all.sparkSession.conf.getOption(EdgeBudgetConf)
-      .map(_.toLong).getOrElse(0L)
+    val budget = edgeBudget(all.sparkSession)
     val effCap =
       if (budget > 0) math.min(cap, edgeBudgetCap(all, budget)) else cap
     val buckets = dropOversizedBuckets(all, Seq("band", "band_key"), effCap)
@@ -308,7 +328,7 @@ object Dedup {
     * small a driver-side union-find beats paying several Spark jobs per
     * round; above `driverThreshold` it stays fully distributed. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      driverThreshold: Long = 100000L): DataFrame = {
+      driverThreshold: Long = DriverEdgeBound): DataFrame = {
     // persist the (expensive) candidate-pair pipeline LAZILY — whichever
     // path runs (driver fast path probe, or contraction round 1) fills
     // the cache on its first scan, and later reads hit blocks, never the
@@ -327,24 +347,8 @@ object Dedup {
     // or proves the graph is big and the distributed path takes over
     import edges0.sparkSession.implicits._
     val probe = edges0.limit(driverThreshold.toInt + 1).as[(Long, Long)].collect()
-    if (probe.length <= driverThreshold) {
-      val es = probe
-      val parent = mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val labels = parent.keys.map(k => (k, find(k))).toSeq
-      return edges0.sparkSession.createDataset(labels).toDF("id", "component")
-    }
+    if (probe.length <= driverThreshold)
+      return edges0.sparkSession.createDataset(unionFind(probe).toSeq).toDF("id", "component")
 
     var edges = edges0
     var iter = 0
@@ -368,6 +372,26 @@ object Dedup {
       .distinct()
   }
 
+  /** Driver-side union-find over an edge list: every node of an edge,
+    * labelled with the smallest id of its component (the label the star
+    * contraction of [[connectedComponents]] converges to). */
+  private[graft] def unionFind(edges: Iterable[(Long, Long)]): collection.Map[Long, Long] = {
+    val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   /** Fixed-point PageRank over an undirected pair graph: `iters`
     * synchronous rounds at damping 0.85 in micro-units — ranks are
     * longs, contributions are integer floor-divides (`r div deg`), the
@@ -386,7 +410,7 @@ object Dedup {
     * limit(T+1) probe either returns the complete edge set or proves
     * the graph is big — no separate count job either way. */
   def pageRank(vpairs: DataFrame, iters: Int = 3,
-      driverThreshold: Long = 100000L): DataFrame = {
+      driverThreshold: Long = DriverEdgeBound): DataFrame = {
     val spark = vpairs.sparkSession
     // materialize the VERIFIED PAIR LIST once — it is the tiny end of
     // the dedup pipeline (|pairs| ≪ corpus). The former shape persisted
@@ -650,6 +674,18 @@ object Dedup {
       .withColumn("jaccard", col("ni") * lit(1.0) / (col("na") + col("nb") - col("ni")))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** [[jaccardVerifiedPairs]] on the driver, over shingle SETS by id: a
+    * pair passes when it shares at least one shingle (the overlap join
+    * emits nothing otherwise) and its Jaccard, computed as the same double
+    * division, reaches `tau`. */
+  private[graft] def jaccardVerifiedLocal(pairs: Iterable[(Long, Long)],
+      sets: collection.Map[Long, Set[Long]], tau: Double): Iterable[(Long, Long)] =
+    pairs.filter { case (a, b) =>
+      val (sa, sb) = (sets.getOrElse(a, Set.empty[Long]), sets.getOrElse(b, Set.empty[Long]))
+      val ni = sa.count(sb)
+      ni > 0 && ni * 1.0 / (sa.size + sb.size - ni) >= tau
+    }
 
   /** 32-bit SimHash as a '0'/'1' bitstring: bit i is the sign of the sum
     * over tokens of ±1 derived from hex digit i of md5(token). */
@@ -1603,17 +1639,37 @@ object Dedup {
     * cluster idles. Submitting them from sibling threads lets each
     * job's tasks back-fill the others' tails — at toy scale it
     * collapses the per-job floors, at 100 TB it fills the write tails.
-    * Failures propagate: the first throwable is rethrown after all
-    * actions settle (no write is silently abandoned mid-flight), with
-    * every later one attached as suppressed so no leg's error is lost. */
+    * Each leg tags its jobs with a tag of its own; once a leg fails, the
+    * other legs' jobs are cancelled, and so is every job they start
+    * after that, so a failed generation stops writing instead of running
+    * its siblings to the end. Cancelling does not interrupt task threads
+    * (Spark's default: HDFS can take an interrupted write for a dead
+    * datanode, HDFS-1208); a running task ends when it next checks its
+    * kill flag (Spark's input iterators do so between records) or when
+    * it finishes.
+    * Failures propagate: the first throwable is rethrown after all legs
+    * settle, with every later one (a cancelled sibling's included)
+    * attached as suppressed so no leg's error is lost. */
   private[graft] def inParallel(actions: (() => Unit)*): Unit = {
     if (actions.size <= 1) { actions.foreach(_()); return }
+    val sc = scala.util.Try(org.apache.spark.sql.SparkSession.active.sparkContext).toOption
+    val run = java.util.UUID.randomUUID()
+    val tags = actions.indices.map(i => s"graft-leg-$run-$i")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = actions.map { a =>
-      val t = new Thread(() => try a() catch { case e: Throwable => errs.add(e): Unit })
+    val ts = actions.zip(tags).map { case (a, tag) =>
+      val t = new Thread(() => {
+        try { sc.foreach(_.addJobTag(tag)); a() }
+        catch { case e: Throwable => errs.add(e): Unit }
+        finally sc.foreach(_.removeJobTag(tag))
+      })
       t.setDaemon(true); t.start(); t
     }
-    ts.foreach(_.join())
+    ts.foreach { t =>
+      while (t.isAlive) {
+        t.join(50)
+        if (!errs.isEmpty) sc.foreach(c => tags.foreach(c.cancelJobsWithTag))
+      }
+    }
     if (!errs.isEmpty) {
       val first = errs.poll()
       errs.forEach(e => if (e ne first) first.addSuppressed(e))

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{Q, Tables}
 
@@ -41,9 +41,10 @@ import graft.{Q, Tables}
   *      representative per cluster.
   *   4. admission — survivors append their hash / band keys / shingle
   *      sets to the three stores. Everything the appends derive from is
-  *      eagerly localCheckpoint'd FIRST: an append invalidates every
-  *      cached plan that reads the store path (the s30 lesson), so no
-  *      downstream read may reference store lineage across an append.
+  *      eagerly localCheckpoint'd (or, on the driver route, collected)
+  *      FIRST: an append invalidates every cached plan that reads the
+  *      store path (the s30 lesson), so no downstream read may reference
+  *      store lineage across an append.
   *
   * Scale shape: per-delta cost ∝ delta size — the corpus is signed once
   * at store init and NEVER re-scanned by a delta (probes are
@@ -178,7 +179,7 @@ object Incremental {
   /** Admit ONE arriving batch (doc_id, t) against the maintained stores
     * and append its admissions — the shared body of p02's deltas and
     * s31/s32's micro-batches. Returns (census row keyed `keyCol` =
-    * `key`, admitted docs).
+    * `key`, admitted docs as (doc_id, h, t)).
     *
     * `owned = true` switches the exact store to the attributable
     * (doc_id, h) layout ([[initOwnedStores]]) — the precondition for
@@ -186,12 +187,48 @@ object Incremental {
     * — it broadcasts) filters BOTH gates the way d56's batch takedown
     * does, so a takedown landing between micro-batches is honored by
     * the very next admission without touching the stores (s32; the dead
-    * rows are d57 compaction's job). */
+    * rows are d57 compaction's job).
+    *
+    * Two routes, one result. A `limit(DriverAdmitRows + 1)` collect of
+    * the batch picks the route; on a local frame it costs no job, on a
+    * file or stream source one.
+    *  - Driver route, at most [[DriverAdmitRows]] rows: the within-batch
+    *    steps (min-id keeper per hash, capped candidate pairs, Jaccard,
+    *    union-find, keep-min per cluster, census) are plain Scala over
+    *    the collected rows. Spark runs only what touches the stores: the
+    *    batch's signatures ([[Dedup.lshBucketsAndShingles]], collected),
+    *    one exact-store lookup of its hashes, one [[Dedup.probeBandIndex]],
+    *    one read of the candidates' stored shingles and the three appends,
+    *    about a dozen jobs in all where the distributed route takes sixty
+    *    to eighty. The row bound holds because the batch, its signatures and
+    *    its shingle sets are all held on the driver; it is the bound the
+    *    route is tested at, not a measured crossover (ROADMAP item 3).
+    *    The probe's candidates come back behind a second limit at
+    *    [[Dedup.DriverEdgeBound]], the bound under which
+    *    [[Dedup.connectedComponents]] collects a graph too; a batch whose
+    *    probe passes it is admitted by the distributed route instead,
+    *    before anything has been appended.
+    *  - Distributed route, larger batches: the relational plan below,
+    *    and the reference the differential spec holds the driver route to.
+    * Both routes bind `graft.dedup.maxCandidateEdges` through
+    * [[Dedup.capForBudget]] and keep the stage-4 append order. */
   def admitBatch(s: SparkSession, batch: DataFrame,
       keyCol: String, key: Long,
       idxTable: String, exDir: String, shDir: String,
       owned: Boolean = false,
-      tomb: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+      tomb: Option[DataFrame] = None): (DataFrame, DataFrame) =
+    admitBatchRouted(s, batch, keyCol, key, idxTable, exDir, shDir, owned, tomb,
+      driverRoute = true)
+
+  /** Batches of at most this many rows admit on the driver. */
+  private[graft] val DriverAdmitRows = 1000
+
+  /** [[admitBatch]] with the driver route switchable off, so a spec can
+    * run both routes on the same inputs. */
+  private[graft] def admitBatchRouted(s: SparkSession, batch: DataFrame,
+      keyCol: String, key: Long, idxTable: String, exDir: String, shDir: String,
+      owned: Boolean, tomb: Option[DataFrame],
+      driverRoute: Boolean): (DataFrame, DataFrame) = {
     require(tomb.isEmpty || owned,
       "tombstones need the owned (doc_id, h) exact-store layout")
     // Layout validation at entry: both init functions and admitBatch are
@@ -207,10 +244,22 @@ object Incremental {
         s"${if (storeHasOwner) "(doc_id, h)" else "(h)"} layout — " +
         "initStores writes (h), initOwnedStores writes (doc_id, h); " +
         "mixing layouts corrupts the store")
+    val arriving = batch.select(col("doc_id"), col("t"), md5(col("t")).as("h"))
+    val small = Option.when(driverRoute)(arriving.limit(DriverAdmitRows + 1).collect())
+      .filter(_.length <= DriverAdmitRows)
+    small match {
+      case Some(rows) => admitOnDriver(s, rows, arriving, keyCol, key,
+        idxTable, exDir, shDir, owned, tomb)
+      case None => admitDistributed(s, arriving, keyCol, key,
+        idxTable, exDir, shDir, owned, tomb)
+    }
+  }
+
+  private def admitDistributed(s: SparkSession, arriving: DataFrame,
+      keyCol: String, key: Long, idxTable: String, exDir: String, shDir: String,
+      owned: Boolean, tomb: Option[DataFrame]): (DataFrame, DataFrame) = {
     // the arriving batch (tiny vs the corpus) — eager: reused many times
-    val delta = batch
-      .select(col("doc_id"), col("t"), md5(col("t")).as("h"))
-      .localCheckpoint(true)
+    val delta = arriving.localCheckpoint(true)
 
     // ---- stage 1: exact dedup (within delta, then vs the store) ----
     // lazy: derives only from the delta checkpoint (two tiny shuffles per
@@ -338,6 +387,99 @@ object Incremental {
         (col("n_e2") - col("n_admitted")).as("n_near_within"),
         col("n_admitted"), col("sum_admitted_ids"))
     (row, e3)
+  }
+
+  /** The driver route of [[admitBatch]] over the whole batch `rows` of
+    * `arriving` (doc_id, t, h): the distributed route's stages as Scala
+    * over the collected rows, Spark only where the stores are read or
+    * written. */
+  private def admitOnDriver(s: SparkSession, rows: Array[Row], arriving: DataFrame,
+      keyCol: String, key: Long, idxTable: String, exDir: String, shDir: String,
+      owned: Boolean, tomb: Option[DataFrame]): (DataFrame, DataFrame) = {
+    import s.implicits._
+    lazy val dead: Set[Long] = tomb.fold(Set.empty[Long])(
+      _.select("doc_id").collect().filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
+    def setsOf(ps: Iterable[(Long, Long)]) = ps.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+
+    // ---- stage 1: min doc_id per hash, then the store's live claims ----
+    // (a null id or text never joins back, as in the distributed kp)
+    val known = rows.filterNot(r => r.isNullAt(0) || r.isNullAt(2))
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val keeper = known.groupMapReduce(_._3)(_._1)(math.min)
+    val kp = known.filter(r => keeper(r._3) == r._1)
+    val claimed: Set[String] = if (kp.isEmpty) Set.empty else
+      (if (owned) s.read.schema("doc_id LONG, h STRING").parquet(exDir)
+       else s.read.schema("h STRING").parquet(exDir))
+        .filter(col("h").isin(keeper.keys.toSeq: _*)).collect()
+        .filterNot(r => tomb.isDefined && !r.isNullAt(0) && dead(r.getLong(0)))
+        .map(r => r.getString(r.length - 1)).toSet
+    val e1 = kp.filterNot(r => claimed(r._3))
+
+    // ---- stage 2: near-dedup vs the maintained index ----
+    val (dB, dS) = Dedup.lshBucketsAndShingles(e1.toSeq.map(r => (r._1, r._2)).toDF("doc_id", "t"),
+      "doc_id", "t", shingleWords = 3, bands = 4, rowsPerBand = 2)
+    // buckets and shingles come back in one job (h is null on bucket rows)
+    val (bucketRows, shingleRows) = (if (e1.isEmpty) Array.empty[Row] else
+      dB.select(col("id"), col("band"), col("band_key"), lit(null).cast(LongType).as("h"))
+        .unionByName(dS.select(col("id"), lit(null).cast("int").as("band"),
+          lit(null).cast("string").as("band_key"), col("h"))).collect())
+      .partition(_.isNullAt(3))
+    val bands = bucketRows.map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    val shingles = shingleRows.map(r => (r.getLong(0), r.getLong(3)))
+    val batchIds = rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    val probed = if (e1.isEmpty) Array.empty[Row] else
+      Dedup.probeBandIndex(s, idxTable, dB).limit(Dedup.DriverEdgeBound.toInt + 1).collect()
+    // nothing is appended yet: past the bound the reference route takes over
+    if (probed.length > Dedup.DriverEdgeBound)
+      return admitDistributed(s, arriving, keyCol, key, idxTable, exDir, shDir, owned, tomb)
+    val cand = probed.map(r => (r.getLong(0), r.getLong(1)))
+      .filterNot { case (_, b) => batchIds(b) || (tomb.isDefined && dead(b)) }
+    val ids = cand.flatMap { case (a, b) => Seq(a, b) }.distinct.toSeq
+    val stored = if (ids.isEmpty) Array.empty[(Long, Long)]
+      else s.read.schema("id LONG, h LONG").parquet(shDir).filter(col("id").isin(ids: _*))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val dupStore = Dedup.jaccardVerifiedLocal(cand, setsOf(shingles ++ stored), tau = 0.5)
+      .map(_._1).toSet
+    val e2 = e1.filterNot(r => dupStore(r._1))
+
+    // ---- stage 3: near-dedup within the delta ----
+    // dB ⋈ e2 on id keeps the join's multiplicity, which the cap counts
+    val e2n = e2.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val buckets = bands.flatMap(b => Iterator.fill(e2n.getOrElse(b._1, 0))(b))
+      .groupMap(b => (b._2, b._3))(_._1).values
+    val budget = Dedup.edgeBudget(s)
+    val cap = if (budget <= 0) Dedup.DefaultBucketCap else math.min(Dedup.DefaultBucketCap,
+      Dedup.capForBudget(buckets.map(_.length.toLong).filter(_ > 1).groupBy(identity)
+        .map { case (n, ns) => (n, ns.size.toLong, ns.size * (n * (n - 1) / 2)) }.toSeq, budget))
+    val wCand = buckets.filter(_.length <= cap)
+      .flatMap(ids => for (a <- ids.iterator; b <- ids if a < b) yield (a, b)).toSet
+    val comp = Dedup.unionFind(Dedup.jaccardVerifiedLocal(wCand, setsOf(shingles), tau = 0.5))
+    val e3 = e2.filter(r => comp.getOrElse(r._1, r._1) == r._1)
+
+    // ---- stage 4: the appends, in the distributed route's crash order ----
+    val admitted = e3.map(_._1).toSet
+    if (admitted.nonEmpty) {
+      Dedup.inParallel(
+        () => Dedup.appendBandIndex(s,
+          bands.filter(b => admitted(b._1)).toSeq.toDF("id", "band", "band_key"), idxTable),
+        () => shingles.filter(p => admitted(p._1)).distinct.toSeq.toDF("id", "h")
+          .coalesce(1).write.mode("append").parquet(shDir))
+      (if (owned) e3.toSeq.map(r => (r._1, r._3)).toDF("doc_id", "h")
+       else e3.toSeq.map(_._3).toDF("h"))
+        .coalesce(1).write.mode("append").parquet(exDir)
+    }
+
+    val n = Seq(rows.length, kp.length, e1.length, e2.length, e3.length).map(_.toLong)
+    val census = Row(key, n(0), n(0) - n(1), n(1) - n(2), n(2) - n(3), n(3) - n(4), n(4),
+      e3.map(_._1).sum)
+    val censusSchema = StructType((keyCol +: Seq("n_arrived", "n_exact_within",
+      "n_exact_store", "n_near_store", "n_near_within", "n_admitted", "sum_admitted_ids"))
+      .map(StructField(_, LongType, nullable = false)))
+    val admittedSchema = StructType(Seq(StructField("doc_id", LongType),
+      arriving.schema("h"), arriving.schema("t")))
+    (s.createDataFrame(java.util.List.of(census), censusSchema),
+      s.createDataFrame(java.util.Arrays.asList(e3.map { case (id, t, h) => Row(id, h, t) }: _*),
+        admittedSchema))
   }
 
   // ---------------- oracle ----------------
